@@ -26,8 +26,8 @@ Scale shape (100 TB): the forward pass is a narrow Arrow-batched pandas
 UDF — no join, no shuffle; the model is a per-worker singleton (loaded
 once per Python worker, reused across batches and tasks); per-doc cost
 is one Counter pass over the text plus two small matmul-shaped folds.
-Distinct-trigram -> bucket hashes are memoized per worker (trigram vocab
-is alphabet-bounded, so the cache saturates quickly).
+Distinct-trigram -> bucket hashes are memoized per worker, up to
+``TRI_CACHE_MAX`` entries (unicode web text has no small trigram vocab).
 """
 
 from __future__ import annotations
@@ -44,6 +44,8 @@ DIM_IN = 32
 DIM_HIDDEN = 16
 DIM_OUT = 8
 SEED = 131
+# Per-worker trigram memo bound: past it, misses are hashed, not stored.
+TRI_CACHE_MAX = 1 << 16
 
 
 def mlp_weights(seed: int = SEED, dim_in: int = DIM_IN,
@@ -114,7 +116,8 @@ class MLPFeaturizer:
                 j = cache.get(tri)
                 if j is None:
                     j = _bucket(tri, self.dim_in)
-                    cache[tri] = j
+                    if len(cache) < TRI_CACHE_MAX:
+                        cache[tri] = j
                 counts[j] += 1
             X[r] = counts / float(n_tri)
         return X

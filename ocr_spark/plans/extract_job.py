@@ -18,6 +18,13 @@ buckets are processed in groups; each group's results land via dynamic
 partition overwrite (idempotent), then the bucket is marked done in the
 manifest. A restarted job anti-joins pending = all buckets \\ done and
 reproduces byte-identical output (tests/test_resume.py).
+
+By default all pending buckets run as ONE group (one scan, one results
+write, one lineage and one metrics append): on a flat table every group
+would re-read the whole table, since the computed bucket cannot prune.
+A pages path that cannot be listed (an object-store URI) keeps
+``UNLISTED_GROUPS`` groups, because its layout is unknown; an explicit
+``group_size`` splits as asked.
 """
 
 from __future__ import annotations
@@ -213,12 +220,19 @@ def latest_metrics(metrics: DataFrame) -> DataFrame:
             .drop("_max_a"))
 
 
+# Default group count for a pages path that cannot be listed (an
+# object-store URI): its size and layout are unknown, so the run keeps
+# bounded groups. A listable table runs as one group.
+UNLISTED_GROUPS = 4
+
+
 def _physical_buckets(pages_path: str) -> tuple[set[int], int | None] | None:
     """(bucket values, declared modulus) of a physically bucket-
     partitioned pages table (sources/io.py write_pages_bucketed), or None
     for a flat layout. Local-filesystem paths only: for object-store
-    paths listdir fails and we fall back to the flat (non-pruning) scan —
-    on a real cluster the Iceberg catalog carries this metadata instead."""
+    paths listdir fails and we fall back to the flat (non-pruning) scan,
+    in ``UNLISTED_GROUPS`` default groups (run_extract_job) — on a real
+    cluster the Iceberg catalog carries this metadata instead."""
     try:
         names = os.listdir(pages_path)
     except (NotADirectoryError, FileNotFoundError, OSError):
@@ -241,7 +255,7 @@ def run_extract_job(
     out_dir: str,
     n_buckets: int = 32,
     salt_n: int = DEFAULT_SALT_N,
-    group_size: int = 8,
+    group_size: int | None = None,
     fail_after_groups: int | None = None,
     fail_point: str = "group_start",
     versioned: bool = False,
@@ -259,9 +273,11 @@ def run_extract_job(
     the flag set, buckets whose marker carries an older fingerprint (or
     none) are treated as pending and re-extracted — the backfill is
     resumable mid-way exactly like a first run, because each redone
-    bucket re-marks with the new fingerprint as it lands. With the
+    bucket re-marks with the new fingerprint as it lands (progress is per
+    group: the default runs one group, so pass an explicit ``group_size``
+    for a backfill that lands and resumes group by group). With the
     versioned sink this is the corpus-upgrade story: the latest view
-    flips to the new extraction bucket by bucket while every snapshot
+    flips to the new extraction group by group while every snapshot
     pinned before the backfill still reads the OLD bytes. Default False:
     a plain resume never re-does work just because the code changed.
 
@@ -282,7 +298,7 @@ def run_extract_job(
     bucketed layout (bounds prune nothing when every file spans the
     full url range).
 
-    Each group is one Spark job over a bucket-pruned scan; results are
+    Each group is one extraction plan over its buckets' rows; results are
     written with dynamic partition overwrite (idempotent), lineage/metrics
     appended, then the manifest marks the group's buckets done.
     ``fail_after_groups`` simulates a crash for the resume test;
@@ -294,10 +310,28 @@ def run_extract_job(
     Scan cost per group: when the input is physically bucket-partitioned
     (sources/io.py write_pages_bucketed — the Iceberg bucket(url_host)
     analog), the per-group filter hits the PARTITION column and prunes at
-    the file level, so the whole run reads the corpus exactly once. A
-    flat layout falls back to filtering on the computed xxhash64
-    expression, which parquet cannot prune — a G-groups x full-scan cost
-    multiplier that is fine at sandbox scale and flagged for 100 TB.
+    the file level, so any number of groups reads the corpus once. A
+    flat layout can only filter on the computed xxhash64 expression,
+    which parquet cannot prune, so every group re-reads the whole table.
+
+    ``group_size=None`` (the default) runs all pending buckets as ONE
+    group whenever ``pages_path`` can be listed, on either layout: the
+    fixed cost of a group (plan, results write or commit, lineage and
+    metrics appends) does not depend on the layout. Its trade-offs:
+
+    * a crash redoes the whole run's extraction instead of one group's
+      (on a flat table the scan lost is one full-table read either way);
+    * the results cache (MEMORY_AND_DISK, so it spills) holds the whole
+      run instead of one group;
+    * no bucket is marked done before the run ends, so a
+      ``reextract_stale`` backfill lands as one snapshot.
+
+    For inputs too large for that, pass an explicit ``group_size``, which
+    splits pending buckets into groups of that size on either layout;
+    over a bucketed table those groups still read the corpus once. A
+    ``pages_path`` that cannot be listed (an object-store URI: neither
+    the layout nor pruning is detected there) defaults to the buckets
+    split into ``UNLISTED_GROUPS`` equal groups, each a full scan.
     """
     # the IO seam (SURVEY §7): default parquet TableIO; pass an
     # IcebergTableIO (sources/io.py make_table_io) to land results/
@@ -378,6 +412,9 @@ def run_extract_job(
     done = manifest.done_buckets(core_version=fp if reextract_stale
                                  else None)
     pending = [b for b in range(n_buckets) if b not in done]
+    if group_size is None:
+        group_size = (max(len(pending), 1) if os.path.exists(pages_path)
+                      else -(-n_buckets // UNLISTED_GROUPS))
     groups = [pending[i:i + group_size]
               for i in range(0, len(pending), group_size)]
 

@@ -306,26 +306,29 @@ def make_pdf_modern(lines: list[str], encoder: str = "ascii85",
         out += f"{num} 0 obj\n".encode() + top[num] + b"\nendobj\n"
     max_obj = max(list(top) + list(in_stm))
     if xref_stream:
-        # binary xref stream, W [1 2 2]: type 0 free / 1 offset /
-        # 2 (objstm, index); it doubles as the trailer dict
+        # binary xref stream, W [1 w 2]: type 0 free / 1 offset /
+        # 2 (objstm, index); it doubles as the trailer dict. The offset
+        # field is as wide as the largest offset (the xref's own) needs,
+        # and at least 2 bytes.
         xr_num = max_obj + 1
         xref_at = len(out)
-        rows = bytearray(b"\x00\x00\x00\xff\xff")  # obj 0: free
+        w = max(2, (xref_at.bit_length() + 7) // 8)
+        rows = bytearray(b"\x00" + bytes(w) + b"\xff\xff")  # obj 0: free
         for n in range(1, xr_num + 1):
             if n in in_stm:
-                rows += b"\x02" + (7).to_bytes(2, "big") \
+                rows += b"\x02" + (7).to_bytes(w, "big") \
                     + in_stm[n].to_bytes(2, "big")
             elif n in offsets:
-                rows += b"\x01" + offsets[n].to_bytes(2, "big") \
+                rows += b"\x01" + offsets[n].to_bytes(w, "big") \
                     + b"\x00\x00"
             elif n == xr_num:
-                rows += b"\x01" + xref_at.to_bytes(2, "big") + b"\x00\x00"
+                rows += b"\x01" + xref_at.to_bytes(w, "big") + b"\x00\x00"
             else:
-                rows += b"\x00\x00\x00\x00\x00"
+                rows += bytes(w + 3)
         xbody = zlib.compress(bytes(rows))
         out += (f"{xr_num} 0 obj\n".encode()
                 + b"<< /Type /XRef /Size " + str(xr_num + 1).encode()
-                + b" /W [1 2 2] /Root 1 0 R /Length "
+                + f" /W [1 {w} 2] /Root 1 0 R /Length ".encode()
                 + str(len(xbody)).encode()
                 + b" /Filter /FlateDecode >>\nstream\n" + xbody
                 + b"\nendstream\nendobj\n")

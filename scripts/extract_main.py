@@ -9,7 +9,11 @@ mode is applied here.
 Usage:
   spark-submit --py-files ocr_spark.zip scripts/extract_main.py \
       --pages <pages.parquet> --out <warehouse_dir> \
-      [--buckets 64] [--salt 8] [--group-size 16]
+      [--buckets 64] [--salt 8] [--group-size N]
+
+--group-size defaults to run_extract_job's group_size=None: one group
+over a pages path that can be listed; a path that cannot (an object-store
+URI) keeps the buckets in 4 groups, 16 buckets each at the default 64.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--group-size", type=int, default=16)
+    ap.add_argument("--group-size", type=int, default=None)
     args = ap.parse_args()
 
     spark = (SparkSession.builder.appName("ocr_spark_extract")

@@ -68,6 +68,25 @@ TEXTS = [
 ]
 
 
+def test_trigram_cache_bounded(monkeypatch):
+    """Unicode text has no small trigram vocab: the per-worker memo
+    stops growing at TRI_CACHE_MAX, and the uncached misses hash to the
+    same buckets, so the features are bit-identical to an unbounded
+    memo's."""
+    rng = random.Random(3)
+    texts = ["".join(chr(rng.randrange(0x4E00, 0xA000))
+                     for _ in range(30_000)) for _ in range(3)]
+    capped = E.MLPFeaturizer()
+    got = capped.features(texts)
+    assert len(capped._tri_cache) <= 1 << 16
+
+    monkeypatch.setattr(E, "TRI_CACHE_MAX", 1 << 62)
+    unbounded = E.MLPFeaturizer()
+    want = unbounded.features(texts)
+    assert len(unbounded._tri_cache) > 1 << 16
+    assert got.tobytes() == want.tobytes()
+
+
 def test_numpy_matches_naive_mirror_bitwise():
     m = E.MLPFeaturizer()
     w = E.mlp_weights()

@@ -122,6 +122,19 @@ def test_xref_stream_is_inert():
     assert b"/XRef" in base and b"/XRef" not in no_xs
 
 
+def test_xref_stream_over_64k():
+    """Offsets past 65,535 bytes widen the xref stream's offset field
+    instead of overflowing a fixed 2-byte one."""
+    rng = random.Random(7)
+    lines = [" ".join("".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                              for _ in range(9)) for _ in range(6))
+             for _ in range(1200)]
+    pdf = make_pdf_modern(lines, encoder="asciihex")
+    assert len(pdf) > 65536
+    assert b"/W [1 3 2]" in pdf
+    assert extract_pdf_text(pdf) == "\n".join(lines)
+
+
 def test_ascii_decoders_units():
     import base64
     for raw in (b"", b"x", b"hello world", bytes(range(256)) * 3):

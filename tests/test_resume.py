@@ -105,6 +105,52 @@ def test_bucketed_input_prunes_scan(spark, corpus, tmp_path):
                         n_buckets=N_BUCKETS // 2, group_size=2)
 
 
+def test_default_runs_one_group(spark, corpus, tmp_path, monkeypatch):
+    """By default all pending buckets run as one group (one extract_pages
+    plan) over a listable pages table, flat or bucket-partitioned; a path
+    that cannot be listed (a file:// URI here, standing in for an object
+    store) keeps UNLISTED_GROUPS groups; an explicit group_size splits as
+    asked. All four write the same text per url and the same per-bucket
+    metrics."""
+    import ocr_spark.plans.extract_job as job
+    from ocr_spark.sources.io import write_pages_bucketed
+
+    n_buckets = 32
+    bucketed = str(tmp_path / "pages_bucketed32")
+    write_pages_bucketed(spark.read.parquet(corpus), bucketed, n_buckets)
+
+    calls = []
+    real = job.extract_pages
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(job, "extract_pages", counting)
+    runs = {"flat": (corpus, {}, 1),
+            "bucketed": (bucketed, {}, 1),
+            "unlisted": ("file://" + corpus, {}, job.UNLISTED_GROUPS),
+            "explicit": (corpus, {"group_size": 2}, 16)}
+    texts, counts = {}, {}
+    for name, (pages, kw, want_calls) in runs.items():
+        calls.clear()
+        out = str(tmp_path / name)
+        st = run_extract_job(spark, pages, out, n_buckets=n_buckets, **kw)
+        assert st["completed"]
+        assert len(calls) == want_calls, (name, len(calls))
+        texts[name] = {r["url"]: r["extracted_text"].encode("utf-8")
+                       for r in _read_results(spark, out)}
+        counts[name] = {r["bucket"]: (r["docs"], r["empty_docs"],
+                                      r["pdf_docs"])
+                        for r in spark.read.parquet(f"{out}/metrics")
+                        .collect()}
+    assert len(texts["flat"]) == N_PAGES
+    assert sum(d for d, _, _ in counts["flat"].values()) == N_PAGES
+    for name in ("bucketed", "unlisted", "explicit"):
+        assert texts[name] == texts["flat"], name
+        assert counts[name] == counts["flat"], name
+
+
 def test_metrics_resume_idempotent(spark, corpus, tmp_path):
     """Crash BETWEEN the metrics append and mark_done (the worst-case
     window): resume re-appends the group under a higher attempt, and
