@@ -14,12 +14,49 @@ All thresholds are fixed constants; classification is pure and total.
 from __future__ import annotations
 
 import html as _htmlmod
-import re
 from dataclasses import dataclass
 
-from ocr_spark.core.dom import _IMPLICIT_CLOSE, _SCOPE_TAGS, VOID_TAGS, Node
 from ocr_spark.core.tokenizer import (
     _MASTER_RE, _RAWTEXT_CLOSE_RE, _TAG_NAME_RE)
+
+# Malformed-markup recovery rules. They are the SPEC (oracle and UDF
+# share this code), chosen to be sensible and — critically — total and
+# deterministic:
+#   * void elements never push onto the open stack;
+#   * a small fixed implicit-close table (e.g. <p> closes an open <p>);
+#   * an end tag pops to the nearest matching open element, emitting
+#     implicit closes on the way; with no match it is ignored;
+#   * EOF closes everything still open.
+# No dict/set iteration order is observable in the output (SURVEY.md §7
+# "Hard parts: determinism").
+VOID_TAGS = frozenset({
+    "area", "base", "br", "col", "embed", "hr", "img", "input",
+    "link", "meta", "param", "source", "track", "wbr",
+})
+
+# tag -> set of open tags it implicitly closes (nearest first)
+_IMPLICIT_CLOSE = {
+    "p": frozenset({"p"}),
+    "li": frozenset({"li"}),
+    "dt": frozenset({"dt", "dd"}),
+    "dd": frozenset({"dt", "dd"}),
+    "tr": frozenset({"tr", "td", "th"}),
+    "td": frozenset({"td", "th"}),
+    "th": frozenset({"td", "th"}),
+    "option": frozenset({"option"}),
+    "optgroup": frozenset({"option", "optgroup"}),
+    "thead": frozenset({"thead", "tbody", "tfoot"}),
+    "tbody": frozenset({"thead", "tbody", "tfoot"}),
+    "tfoot": frozenset({"thead", "tbody", "tfoot"}),
+}
+
+# Block-level elements also act as a boundary that an implicit close will
+# not cross (e.g. <p> inside <div> does not close a <p> outside the div).
+_SCOPE_TAGS = frozenset({
+    "html", "body", "div", "section", "article", "aside", "nav", "header",
+    "footer", "main", "table", "td", "th", "blockquote", "figure", "ul",
+    "ol", "li", "form",
+})
 
 # Elements whose subtree contributes no visible text.
 SKIP_TAGS = frozenset({
@@ -42,10 +79,6 @@ BOILER_CONTAINERS = frozenset({"nav", "header", "footer", "aside", "form"})
 
 HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
-# Canonical whitespace normalization: explicit ASCII class so the exact
-# semantics are reproducible in Spark/DuckDB regexes (SURVEY.md §7).
-_WS_RE = re.compile(r"[ \t\n\r\f\v]+")
-
 # Classifier constants (NumWordsRulesClassifier).
 MAX_LINK_DENSITY = 1.0 / 3.0
 PREV_LINK_DENSITY_HIGH = 0.555556
@@ -64,7 +97,9 @@ def normalize_ws(text: str) -> str:
 
     Hot path (every flushed block runs through here): translate + a
     split/join collapse is ~3x faster than the regex it replaces and
-    BYTE-IDENTICAL to `_WS_RE.sub(" ", text).strip()` — verified over
+    BYTE-IDENTICAL to the regex spelling (each run of the explicit ASCII
+    class `[ \\t\\n\\r\\f\\v]` -> one space, then `.strip()`; the
+    class Spark/DuckDB regexes reproduce, SURVEY.md §7) — verified over
     adversarial fuzz including the Unicode-whitespace edge (the final
     unguarded `.strip()` removes unicode ws at the ENDS in both
     spellings, while interior `\\xa0`/`\\x1c` stay untouched in both);
@@ -102,126 +137,48 @@ def _words(text: str) -> int:
     return len(text.split()) if text else 0
 
 
-def segment_blocks(root: Node) -> list[Block]:
-    """Walk the DOM emitting text blocks in document order.
+def segment_html(html: str) -> tuple[list[Block], int]:
+    """Fused tokenize + segment: one pass from the decoded document
+    straight to blocks, materializing neither a token list nor a tree.
 
-    A block accumulates inline text between block-level boundaries. Text
-    under <a> is tallied separately for link density. Subtrees under
-    SKIP_TAGS are excluded entirely (analog: morphological noise removal,
-    /root/reference/hebrew-letter-segmentation.py:30-31).
-    """
-    blocks: list[Block] = []
-    frags: list[str] = []          # raw fragments of the current block
-    anchor_frags: list[str] = []   # subset that sits under an <a>
-    # block-context stack: (tag, depth, boiler); base covers stray text
-    ctx: list[tuple[str, int, bool]] = [("body", 0, False)]
+    Each master-regex match feeds the segmentation state machine
+    directly: the tokenizer's dispatch (branch order, recovery
+    counting, rawtext mode, EOF truncation — :func:`tokenize`
+    semantics) is interleaved with a simulation of the tree builder's
+    open stack (the recovery rules above: implicit-close table bounded
+    by scope tags, nearest-match end-tag popping, void / self-closing
+    never pushed, EOF closes all). Every flush therefore fires at the
+    same point with the same (tag, depth, boiler) context as a DFS over
+    the built tree. Depth falls out of the stack: an element created
+    when the open stack holds k elements has DOM depth k+1. SKIP_TAGS
+    subtrees contribute nothing, but their elements still occupy the
+    open stack, so end tags that pop THROUGH a skipped subtree close
+    the same outer elements.
 
-    def flush() -> None:
-        nonlocal frags, anchor_frags
-        if frags:
-            raw = "".join(frags)
-            text = normalize_ws(raw)
-            if text:
-                tag, depth, boiler = ctx[-1]
-                n_words = _words(text)
-                # most blocks carry no anchors — skip the second split
-                # entirely for them. For the rest, len(raw.split()) ==
-                # _words(normalize_ws(raw)): translate/collapse/strip maps
-                # ws to ws and never merges or splits a maximal non-ws
-                # run, and .split() already splits on every Unicode ws.
-                a_words = (min(len("".join(anchor_frags).split()), n_words)
-                           if anchor_frags else 0)
-                blocks.append(Block(
-                    block_id=len(blocks),
-                    tag=tag,
-                    depth=depth,
-                    text=text,
-                    n_chars=len(text),
-                    n_words=n_words,
-                    anchor_words=a_words,
-                    link_density=(a_words / n_words) if n_words else 0.0,
-                    in_boiler_container=boiler,
-                ))
-        frags = []
-        anchor_frags = []
+    Returns ``(blocks, recoveries)``; blocks are unclassified (callers
+    run :func:`classify_blocks`).
 
-    # Iterative DFS with explicit enter/exit events; recursion would blow
-    # the Python stack on nested-div-soup fixtures (FIXTURES.md template 3).
-    events: list[tuple[str, Node, int, bool]] = [("enter", root, 0, False)]
-    # hot loop: ~60 boundary events per document are flushes of an EMPTY
-    # fragment list — guard at the call sites to skip the call entirely
-    # (safe: anchor_frags only ever grows in lockstep with frags, so
-    # empty frags implies empty anchor_frags)
-    while events:
-        ev, node, anchor_depth, boiler = events.pop()
-        if ev == "exit":
-            if frags:
-                flush()
-            ctx.pop()
-            continue
-        tag = node.tag
-        if tag == "#text":
-            data = _htmlmod.unescape(node.text or "")
-            if data:
-                frags.append(data)
-                if anchor_depth > 0:
-                    anchor_frags.append(data)
-            continue
-        if tag in SKIP_TAGS:
-            continue
-        child_boiler = boiler or (tag in BOILER_CONTAINERS)
-        child_anchor = anchor_depth + (1 if tag == "a" else 0)
-        if tag in ("br", "hr"):
-            if frags:
-                flush()  # pure separators (void, no subtree)
-            continue
-        if tag in BLOCK_TAGS:
-            if frags:
-                flush()
-            ctx.append((tag, node.depth, child_boiler))
-            events.append(("exit", node, 0, False))
-        for child in reversed(node.children):
-            events.append(("enter", child, child_anchor, child_boiler))
-
-    if frags:
-        flush()
-    return blocks
-
-
-def segment_blocks_stream(tokens: list[tuple]) -> list[Block]:
-    """Single-pass block segmentation straight off the token stream —
-    byte-identical to ``segment_blocks(build_dom(tokens))`` by
-    construction, without materializing the tree.
-
-    The hot path built ~75 Node objects per kB of HTML (measured 215k
-    allocations over a 3k-doc bench mix) only to DFS them back into the
-    order the token stream already has. This spelling simulates
-    ``build_dom``'s exact open-stack rules (dom.py: implicit-close table
-    bounded by scope tags, nearest-match end-tag popping, void /
-    self-closing never pushed, EOF closes all) while segmenting, so
-    every flush fires at the same point with the same (tag, depth,
-    boiler) context as the tree walk. Depth falls out of the stack:
-    an element created when the open stack holds k ancestors (root
-    excluded) has DOM depth k+1.
-
-    SKIP_TAGS subtrees contribute nothing, but their elements still
-    occupy the open stack (exactly as in build_dom) so end tags that pop
-    THROUGH a skipped subtree close the same outer elements.
-
-    ``segment_blocks`` stays as the independently-readable reference
-    spelling; `test_segment_blocks_stream_matches_dom_reference` pins
-    equality over the synthetic corpus, the adversarial templates, and
-    hypothesis soup.
+    The equality oracle is the tree spelling in ``tests/oracles``
+    (build the DOM from ``tokenize(html).tokens``, then DFS it);
+    tests/test_fuzz_properties.py pins field-identity + recovery-count
+    identity over hypothesis soup, targeted edge lists and two
+    synthetic corpus sweeps.
     """
     blocks: list[Block] = []
     frags: list[str] = []
     anchor_frags: list[str] = []
+    # block-context stack: (tag, depth, boiler); base covers stray text
     ctx: list[tuple[str, int, bool]] = [("body", 0, False)]
     # open-element stack, root excluded: (tag, pushed_ctx, anchor_inc,
     # boiler inside this element)
     stack: list[tuple[str, bool, int, bool]] = []
     skip_from: int | None = None   # stack index of the skip-subtree root
     anchor = 0                     # enclosing-<a> count (active path)
+    recoveries = 0
+    n = len(html)
+    i = 0
+    find = html.find
+    search = _MASTER_RE.search
     unescape = _htmlmod.unescape
 
     def flush() -> None:
@@ -231,8 +188,9 @@ def segment_blocks_stream(tokens: list[tuple]) -> list[Block]:
         if text:
             tag, depth, boiler = ctx[-1]
             n_words = _words(text)
-            # len(raw.split()) == _words(normalize_ws(raw)) — see the
-            # reference spelling's flush for the invariance argument.
+            # len(raw.split()) == _words(normalize_ws(raw)): translate/
+            # collapse/strip maps ws to ws and never merges or splits a
+            # maximal non-ws run, and .split() splits on every Unicode ws
             a_words = (min(len("".join(anchor_frags).split()), n_words)
                        if anchor_frags else 0)
             blocks.append(Block(
@@ -254,166 +212,6 @@ def segment_blocks_stream(tokens: list[tuple]) -> list[Block]:
         flushes under ITS context then pops it, exactly the tree walk's
         exit-event order."""
         nonlocal skip_from, anchor
-        if idx == len(stack) - 1:           # the overwhelmingly common
-            _t, pushed, a_inc, _b = stack.pop()  # case: one entry pops
-            anchor -= a_inc
-            if pushed:
-                if frags:
-                    flush()
-                ctx.pop()
-        else:
-            for _t, pushed, a_inc, _b in reversed(stack[idx:]):
-                anchor -= a_inc
-                if pushed:
-                    if frags:
-                        flush()
-                    ctx.pop()
-            del stack[idx:]
-        if skip_from is not None and len(stack) <= skip_from:
-            skip_from = None
-
-    for tok in tokens:
-        kind = tok[0]
-        if kind == "text":
-            if skip_from is not None:
-                continue
-            data = unescape(tok[1])
-            if data:
-                frags.append(data)
-                if anchor > 0:
-                    anchor_frags.append(data)
-        elif kind == "start":
-            tag = tok[1]
-            self_closing = tok[3]
-            closes = _IMPLICIT_CLOSE.get(tag)
-            if closes is not None:
-                idx = None
-                for k in range(len(stack) - 1, -1, -1):
-                    t = stack[k][0]
-                    if t in closes:
-                        idx = k
-                        break
-                    if t in _SCOPE_TAGS:
-                        break
-                if idx is not None:
-                    pop_to(idx)
-            real = tag not in VOID_TAGS and not self_closing
-            if skip_from is not None:
-                if real:
-                    stack.append((tag, False, 0, False))
-                continue
-            boiler = stack[-1][3] if stack else False
-            if tag in SKIP_TAGS:
-                if real:
-                    stack.append((tag, False, 0, boiler))
-                    skip_from = len(stack) - 1
-                continue
-            if tag == "br" or tag == "hr":
-                if frags:
-                    flush()
-                continue
-            child_boiler = boiler or (tag in BOILER_CONTAINERS)
-            pushed = False
-            if tag in BLOCK_TAGS:
-                if frags:
-                    flush()
-                ctx.append((tag, len(stack) + 1, child_boiler))
-                pushed = True
-            if real:
-                a_inc = 1 if tag == "a" else 0
-                anchor += a_inc
-                stack.append((tag, pushed, a_inc, child_boiler))
-            elif pushed:
-                # self-closing block element: enter+exit back to back
-                if frags:
-                    flush()
-                ctx.pop()
-        elif kind == "end":
-            tag = tok[1]
-            if tag in VOID_TAGS:
-                continue
-            if stack and stack[-1][0] == tag:   # well-nested close: the
-                pop_to(len(stack) - 1)          # overwhelmingly common case
-                continue
-            idx = None
-            for k in range(len(stack) - 2, -1, -1):
-                if stack[k][0] == tag:
-                    idx = k
-                    break
-            if idx is not None:
-                pop_to(idx)
-        # comments/doctypes contribute nothing
-
-    pop_to(0)
-    if frags:
-        flush()
-    return blocks
-
-
-def segment_html(html: str) -> tuple[list[Block], int]:
-    """Fused tokenize + segment: one pass from the decoded document
-    straight to blocks, byte-identical to
-    ``segment_blocks_stream(tokenize(html).tokens)`` (and therefore to
-    the DOM reference spelling) by construction — without materializing
-    the token list.
-
-    Hot-path pass #5: the master-regex tokenizer built ~75 token tuples
-    per kB only for :func:`segment_blocks_stream` to unpack them again
-    (``tok[0]``/``tok[1]`` per token, one list append + one tuple
-    allocation each). This spelling feeds each master-regex match
-    directly into the segmentation state machine: the tokenizer's
-    dispatch (branch order, recovery counting, rawtext mode, EOF
-    truncation — tokenizer.py master-loop semantics) is interleaved with
-    the segmenter's open-stack simulation (implicit closes, skip
-    subtrees, anchor depth — :func:`segment_blocks_stream` semantics),
-    both copied construct-for-construct from their pinned spellings.
-    Returns ``(blocks, recoveries)``; blocks are unclassified (callers
-    run :func:`classify_blocks`).
-
-    ``tokenize`` + ``segment_blocks_stream`` stay as the equality
-    oracle; `test_segment_html_matches_stream_reference` pins
-    field-identity + recovery-count identity over hypothesis soup, the
-    targeted edge lists of BOTH ancestors, and the synthetic corpus.
-    """
-    blocks: list[Block] = []
-    frags: list[str] = []
-    anchor_frags: list[str] = []
-    ctx: list[tuple[str, int, bool]] = [("body", 0, False)]
-    stack: list[tuple[str, bool, int, bool]] = []
-    skip_from: int | None = None
-    anchor = 0
-    recoveries = 0
-    n = len(html)
-    i = 0
-    find = html.find
-    search = _MASTER_RE.search
-    unescape = _htmlmod.unescape
-
-    def flush() -> None:
-        nonlocal frags, anchor_frags
-        raw = "".join(frags)
-        text = normalize_ws(raw)
-        if text:
-            tag, depth, boiler = ctx[-1]
-            n_words = _words(text)
-            a_words = (min(len("".join(anchor_frags).split()), n_words)
-                       if anchor_frags else 0)
-            blocks.append(Block(
-                block_id=len(blocks),
-                tag=tag,
-                depth=depth,
-                text=text,
-                n_chars=len(text),
-                n_words=n_words,
-                anchor_words=a_words,
-                link_density=(a_words / n_words) if n_words else 0.0,
-                in_boiler_container=boiler,
-            ))
-        frags = []
-        anchor_frags = []
-
-    def pop_to(idx: int) -> None:
-        nonlocal skip_from, anchor
         if idx == len(stack) - 1:
             _t, pushed, a_inc, _b = stack.pop()
             anchor -= a_inc
@@ -433,10 +231,11 @@ def segment_html(html: str) -> tuple[list[Block], int]:
             skip_from = None
 
     def on_end(tag: str) -> None:
-        """The stream segmenter's "end" branch (void filter at call
-        sites where statically known); the well-nested close — the
-        overwhelmingly common case — pops inline instead of delegating
-        to pop_to (same body as pop_to's single-entry fast path)."""
+        """An end tag pops to the nearest matching open element (void
+        filter at call sites where statically known); the well-nested
+        close — the overwhelmingly common case — pops inline instead of
+        delegating to pop_to (same body as pop_to's single-entry fast
+        path)."""
         nonlocal skip_from, anchor
         if stack and stack[-1][0] == tag:
             _t, pushed, a_inc, _b = stack.pop()
@@ -478,7 +277,7 @@ def segment_html(html: str) -> tuple[list[Block], int]:
             self_closing = slash == "/"
             i = m.end()
 
-            # --- segmentation "start" transitions (stream spelling) ---
+            # --- segmentation "start" transitions ---
             closes = _IMPLICIT_CLOSE.get(tag)
             if closes is not None:
                 idx = None
@@ -517,6 +316,7 @@ def segment_html(html: str) -> tuple[list[Block], int]:
                     anchor += a_inc
                     stack.append((tag, pushed, a_inc, child_boiler))
                 elif pushed:
+                    # self-closing block element: enter+exit back to back
                     if frags:
                         flush()
                     ctx.pop()

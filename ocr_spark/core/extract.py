@@ -79,9 +79,8 @@ def extract(data: bytes | None, lang: str | None = None,
     if not decoded.strip():
         return ExtractResult(encoding=enc)
 
-    # fused tokenize+segment in ONE pass — byte-identical to
-    # segment_blocks_stream(tokenize(decoded).tokens), itself pinned to
-    # segment_blocks(build_dom(tokens)) (blocks.py segment_html docstring)
+    # fused tokenize+segment in ONE pass — pinned to the DOM-tree
+    # reference spelling in tests/oracles (blocks.py segment_html docstring)
     raw_blocks, recoveries = segment_html(decoded)
     blocks = classify_blocks(raw_blocks)
     text = assemble(blocks)

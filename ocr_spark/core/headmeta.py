@@ -24,7 +24,7 @@ _HEAD_END_RE = re.compile(r"</head|<body", re.IGNORECASE | re.ASCII)
 
 
 def _attrs_first(attr_src: str) -> dict[str, str]:
-    """First occurrence wins, matching Node.attr's duplicate rule."""
+    """First occurrence wins (the _parse_attrs duplicate rule)."""
     d: dict[str, str] = {}
     for k, v in _parse_attrs(attr_src):
         d.setdefault(k, v)

@@ -8,7 +8,7 @@ DOM for text extraction still yields its edges in O(bytes).
 
 Total like the rest of core: malformed HTML never raises, anchors
 without an href are skipped, the first href attribute wins (duplicate
-attributes follow Node.attr's first-occurrence rule).
+attributes follow _parse_attrs' first-occurrence rule).
 """
 
 from __future__ import annotations

@@ -177,50 +177,6 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes | None:
     return bytes(out)  # EOD missing: accept what decoded (total)
 
 
-def lzw_encode(data: bytes, early: int = 1) -> bytes:
-    """LZW encoder (generator/tests side of :func:`_lzw_decode` —
-    same width-growth rule, clear emitted at table capacity)."""
-    out_codes: list[tuple[int, int]] = []  # (code, width at emit)
-    dict_ = {bytes([i]): i for i in range(256)}
-    next_code, width = 258, 9
-    out_codes.append((256, width))
-    w = b""
-    for b in data:
-        wc = w + bytes([b])
-        if wc in dict_:
-            w = wc
-            continue
-        out_codes.append((dict_[w], width))
-        dict_[wc] = next_code
-        next_code += 1
-        # the decoder's dictionary trails this one by ONE entry (it
-        # can only add after consuming the next code), so the width
-        # bump — judged by the DECODER's table size, the pdfminer/
-        # real-world convention — fires one entry later here
-        if next_code - 1 + early >= (1 << width):
-            if width < 12:
-                width += 1
-            else:
-                out_codes.append((256, width))
-                dict_ = {bytes([i]): i for i in range(256)}
-                next_code, width = 258, 9
-        w = bytes([b])
-    if w:
-        out_codes.append((dict_[w], width))
-    out_codes.append((257, width))
-    buf = nbits = 0
-    out = bytearray()
-    for code, cw in out_codes:
-        buf = (buf << cw) | code
-        nbits += cw
-        while nbits >= 8:
-            out.append((buf >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-    if nbits:
-        out.append((buf << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
 _EARLY_RE = re.compile(rb"/EarlyChange\s+(\d+)")
 
 
@@ -432,31 +388,11 @@ def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes | None:
     RFC 2898 padding (1-16 bytes). None on any malformed shape."""
     if len(data) < 32 or len(data) % 16:
         return None
-    rk = _aes_expand_key(key)
-    iv, out = data[:16], bytearray()
-    for i in range(16, len(data), 16):
-        blk = data[i:i + 16]
-        dec = _aes_block(blk, rk, decrypt=True)
-        out += bytes(a ^ b for a, b in zip(dec, iv))
-        iv = blk
+    out = _aes_cbc_nopad(key, data[16:], data[:16], decrypt=True)
     pad = out[-1]
     if not 1 <= pad <= 16 or len(out) < pad:
         return None
-    return bytes(out[:-pad])
-
-
-def _aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:
-    """Generator-side twin (real CBC + RFC 2898 padding)."""
-    rk = _aes_expand_key(key)
-    pad = 16 - len(data) % 16
-    data = data + bytes([pad]) * pad
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = bytes(a ^ b for a, b in zip(data[i:i + 16], prev))
-        prev = _aes_block(blk, rk, decrypt=False)
-        out += prev
-    return bytes(out)
+    return out[:-pad]
 
 
 def _aes_cbc_nopad(key: bytes, data: bytes, iv: bytes,
@@ -661,7 +597,10 @@ def _decrypt_document(data: bytes) -> bytes:
     pos = 0
     for om in _OBJHDR_RE.finditer(data):
         objnum, gen = int(om.group(1)), int(om.group(2))
-        if objnum == enc_num:
+        # a header-shaped match before pos lies inside a stream body
+        # already rebuilt (RC4 ciphertext can spell 'N M obj'): not an
+        # object, and re-emitting from it would duplicate bytes
+        if objnum == enc_num or om.start() < pos:
             continue
         end = data.find(b"endobj", om.end())
         body = data[om.end():end if end >= 0 else len(data)]

@@ -19,8 +19,8 @@ tag name and '>'), parsed on demand via _parse_attrs: nothing in the
 extraction hot path ever reads attributes (block segmentation and link
 density key off tag names alone), so eager per-tag attribute parsing was
 pure overhead — measured ~8% of tokenize+DOM time on the bench mix.
-Consumers that need attributes call Node.attr()/Node.attrs, which parse
-lazily and cache.
+Consumers that need attributes call _parse_attrs on a start token's
+attr_src, as headmeta and links do.
 
 Totality: malformed input NEVER raises. Unterminated constructs at EOF are
 consumed silently (dropped); a lone '<' that opens no construct is literal
@@ -46,19 +46,9 @@ _RAWTEXT_CLOSE_RE = {t: re.compile("</" + t, re.IGNORECASE | re.ASCII)
                      for t in RAWTEXT_TAGS}
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:_\-]*")
-_END_TAG_RE = re.compile(r"</\s*([a-zA-Z][a-zA-Z0-9:_\-]*)[^>]*>")
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][a-zA-Z0-9_:.\-]*)"""
     r"""(?:\s*=\s*("([^"]*)"|'([^']*)'|[^\s>]*))?"""
-)
-# A start tag: name then attribute soup where quoted values may contain '>'.
-# The soup group is LAZY so a '/' immediately before '>' is captured as the
-# self-closing marker (fixed rule: trailing '/' is a marker, not part of an
-# unquoted attribute value).
-_START_TAG_RE = re.compile(
-    r"""<([a-zA-Z][a-zA-Z0-9:_\-]*)"""
-    r"""((?:"[^"]*"|'[^']*'|[^>"'])*?)"""
-    r"""\s*(/?)>"""
 )
 
 
@@ -94,8 +84,8 @@ def _parse_attrs(attr_src: str) -> list[tuple[str, str]]:
 
 
 # One alternation, tried in order at each '<'. Branch payload groups:
-#   1       end-tag name                  (same pattern as _END_TAG_RE)
-#   2,3,4   start-tag name / soup / slash (same pattern as _START_TAG_RE)
+#   1       end-tag name
+#   2,3,4   start-tag name / soup / slash
 #   5       comment open  '!--'
 #   6       CDATA open    '![CDATA['
 #   7       doctype / bogus markup decl   '[!?]'
@@ -104,7 +94,12 @@ def _parse_attrs(attr_src: str) -> list[tuple[str, str]]:
 # Branch order encodes the reference dispatch: '!--' before '![CDATA['
 # before '[!?]' (longest first), '/' after the end-tag branch, the empty
 # branch last so every '<' matches SOMETHING and the scan never skips a
-# construct the reference loop would have handled.
+# construct the reference loop would have handled. Branches 1 and 2-4
+# are the reference loop's end-tag and start-tag patterns verbatim
+# (tests/oracles). The start-tag soup may hold '>' inside quoted values;
+# the soup group is LAZY so a '/' immediately before '>' is captured as
+# the self-closing marker (fixed rule: trailing '/' is a marker, not part
+# of an unquoted attribute value).
 _MASTER_RE = re.compile(
     "<(?:"
     r"/\s*([a-zA-Z][a-zA-Z0-9:_\-]*)[^>]*>"
@@ -123,10 +118,10 @@ def tokenize(html: str) -> TokenStream:
     """One forward pass over the document; returns TokenStream. Total.
 
     Master-regex spelling: a single compiled alternation does scan +
-    dispatch + tag parse in ONE C call per construct (the reference loop
-    below pays a find, a char dispatch, and a branch-specific regex per
-    tag at Python level). Token-for-token identical to
-    :func:`tokenize_reference` — each branch reuses the reference's exact
+    dispatch + tag parse in ONE C call per construct (the dispatch-loop
+    reference spelling in tests/oracles pays a find, a char dispatch,
+    and a branch-specific regex per tag at Python level). Token-for-token
+    identical to that reference — each branch reuses its exact
     sub-pattern, so a construct matches here iff the reference branch
     matched, with the same groups and resume index; pinned by
     `test_tokenize_master_matches_reference` over templates, corpus and
@@ -219,116 +214,5 @@ def tokenize(html: str) -> TokenStream:
             break
         append(("text", "<"))
         i = lt + 1
-
-    return TokenStream(tokens, recoveries)
-
-
-def tokenize_reference(html: str) -> TokenStream:
-    """The independently-readable reference spelling of :func:`tokenize`:
-    explicit find / char-dispatch / per-branch regex, one decision at a
-    time. Kept verbatim as the equality oracle for the master-regex hot
-    path (same discipline as ``segment_blocks`` vs
-    ``segment_blocks_stream``)."""
-    tokens: list[tuple] = []
-    recoveries = 0
-    n = len(html)
-    i = 0
-    # hot loop: bind the two per-iteration attribute lookups once
-    find = html.find
-    append = tokens.append
-
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            if i < n:
-                append(("text", html[i:]))
-            break
-        if lt > i:
-            append(("text", html[i:lt]))
-
-        # Dispatch on the character after '<' (single index op instead of
-        # a chain of startswith probes — this loop runs once per tag).
-        nxt_c = html[lt + 1] if lt + 1 < n else ""
-
-        if nxt_c == "!" or nxt_c == "?":
-            # Comment
-            if html.startswith("<!--", lt):
-                end = find("-->", lt + 4)
-                if end < 0:  # unterminated comment: swallow to EOF
-                    recoveries += 1
-                    break
-                append(("comment", html[lt + 4 : end]))
-                i = end + 3
-                continue
-
-            # CDATA (emitted as text per the XML-ish convention)
-            if html.startswith("<![CDATA[", lt):
-                end = find("]]>", lt + 9)
-                if end < 0:
-                    recoveries += 1
-                    break
-                append(("text", html[lt + 9 : end]))
-                i = end + 3
-                continue
-
-            # Doctype / bogus markup declaration
-            end = find(">", lt + 2)
-            if end < 0:
-                recoveries += 1
-                break
-            append(("doctype", html[lt + 2 : end]))
-            i = end + 1
-            continue
-
-        # End tag
-        if nxt_c == "/":
-            m = _END_TAG_RE.match(html, lt)
-            if m is None:
-                # "</" followed by non-letter: HTML5 calls this a bogus
-                # comment; consume to '>' (or EOF).
-                end = find(">", lt + 2)
-                recoveries += 1
-                if end < 0:
-                    break
-                i = end + 1
-                continue
-            append(("end", m.group(1).lower()))
-            i = m.end()
-            continue
-
-        # Start tag
-        m = _START_TAG_RE.match(html, lt)
-        if m is None:
-            nxt = html[lt + 1 : lt + 2]
-            if nxt and _TAG_NAME_RE.match(nxt):
-                # Looks like a tag but unterminated at EOF: drop remainder.
-                recoveries += 1
-                break
-            # Literal '<' in text.
-            append(("text", "<"))
-            i = lt + 1
-            continue
-
-        tag, attr_src, slash = m.group(1, 2, 3)  # one C call, not three
-        tag = tag.lower()
-        self_closing = slash == "/"
-        append(("start", tag, attr_src, self_closing))
-        i = m.end()
-
-        # RAWTEXT mode: consume verbatim until the matching close tag.
-        if tag in RAWTEXT_TAGS and not self_closing:
-            cm = _RAWTEXT_CLOSE_RE[tag].search(html, i)
-            close = cm.start() if cm else -1
-            if close < 0:
-                # Unterminated rawtext: content runs to EOF, no close token.
-                recoveries += 1
-                append(("text", html[i:]))
-                append(("end", tag))
-                break
-            append(("text", html[i:close]))
-            gt = find(">", close)
-            append(("end", tag))
-            i = (gt + 1) if gt >= 0 else n
-            continue
 
     return TokenStream(tokens, recoveries)

@@ -226,6 +226,50 @@ def make_pdf(lines: list[str], two_column: bool = False) -> bytes:
     return bytes(out)
 
 
+def lzw_encode(data: bytes, early: int = 1) -> bytes:
+    """LZW encoder (generator side of core/pdf.py ``_lzw_decode`` —
+    same width-growth rule, clear emitted at table capacity)."""
+    out_codes: list[tuple[int, int]] = []  # (code, width at emit)
+    dict_ = {bytes([i]): i for i in range(256)}
+    next_code, width = 258, 9
+    out_codes.append((256, width))
+    w = b""
+    for b in data:
+        wc = w + bytes([b])
+        if wc in dict_:
+            w = wc
+            continue
+        out_codes.append((dict_[w], width))
+        dict_[wc] = next_code
+        next_code += 1
+        # the decoder's dictionary trails this one by ONE entry (it
+        # can only add after consuming the next code), so the width
+        # bump — judged by the DECODER's table size, the pdfminer/
+        # real-world convention — fires one entry later here
+        if next_code - 1 + early >= (1 << width):
+            if width < 12:
+                width += 1
+            else:
+                out_codes.append((256, width))
+                dict_ = {bytes([i]): i for i in range(256)}
+                next_code, width = 258, 9
+        w = bytes([b])
+    if w:
+        out_codes.append((dict_[w], width))
+    out_codes.append((257, width))
+    buf = nbits = 0
+    out = bytearray()
+    for code, cw in out_codes:
+        buf = (buf << cw) | code
+        nbits += cw
+        while nbits >= 8:
+            out.append((buf >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+    if nbits:
+        out.append((buf << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
 def make_pdf_modern(lines: list[str], encoder: str = "ascii85",
                     use_objstm: bool = True, xref_stream: bool = True,
                     tounicode_shift: int = 3) -> bytes:
@@ -253,7 +297,6 @@ def make_pdf_modern(lines: list[str], encoder: str = "ascii85",
     if encoder == "flate":
         body, filt = zlib.compress(raw), b"/Filter /FlateDecode"
     elif encoder == "lzw":
-        from ocr_spark.core.pdf import lzw_encode
         body, filt = lzw_encode(raw), b"/Filter /LZWDecode"
     elif encoder == "ascii85":
         body = base64.a85encode(zlib.compress(raw)) + b"~>"
@@ -342,6 +385,16 @@ def make_pdf_modern(lines: list[str], encoder: str = "ascii85",
         out += (f"trailer\n<< /Size {max_obj + 1} /Root 1 0 R >>\n"
                 f"startxref\n{xref_at}\n%%EOF\n").encode()
     return bytes(out)
+
+
+def _aes_cbc_encrypt(key: bytes, data: bytes, iv: bytes) -> bytes:
+    """Generator side of core/pdf.py ``_aes_cbc_decrypt``: RFC 2898
+    padding, then IV prefix + real CBC ciphertext (AESV2 layout)."""
+    from ocr_spark.core.pdf import _aes_cbc_nopad
+
+    pad = 16 - len(data) % 16
+    return iv + _aes_cbc_nopad(key, data + bytes([pad]) * pad, iv,
+                               decrypt=False)
 
 
 def _std_handler_entries(r: int, owner_pwd: bytes, user_pwd: bytes,
@@ -442,8 +495,7 @@ def encrypt_pdf_bytes(data: bytes, r: int = 3,
     import hashlib
     import re as _re
 
-    from ocr_spark.core.pdf import (_OBJHDR_RE, _STREAM_RE,
-                                    _aes_cbc_encrypt, _object_key,
+    from ocr_spark.core.pdf import (_OBJHDR_RE, _STREAM_RE, _object_key,
                                     _rc4, _strip_stream_eol)
 
     id0 = hashlib.md5(b"encpdf|" + data[:64]).digest()
@@ -502,8 +554,7 @@ def make_pdf_encrypted(lines: list[str], r: int = 3,
     IV, RFC 2898 pad)."""
     import hashlib
 
-    from ocr_spark.core.pdf import (_aes_cbc_encrypt, _object_key,
-                                    _rc4)
+    from ocr_spark.core.pdf import _object_key, _rc4
 
     id0 = hashlib.md5(b"ocr-spark-fixture|"
                       + "|".join(lines).encode()).digest()

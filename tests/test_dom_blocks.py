@@ -1,12 +1,10 @@
 from __future__ import annotations
 
-from ocr_spark.core.blocks import classify_blocks, normalize_ws, segment_blocks
-from ocr_spark.core.dom import build_dom
-from ocr_spark.core.tokenizer import tokenize
+from ocr_spark.core.blocks import classify_blocks, normalize_ws, segment_html
 
 
 def blocks_of(html):
-    return segment_blocks(build_dom(tokenize(html).tokens))
+    return segment_html(html)[0]
 
 
 def test_normalize_ws():
@@ -98,20 +96,3 @@ def test_heading_promotion():
             " ".join(f"w{i}" for i in range(25)) + "</p>")
     bs = classify_blocks(blocks_of(html))
     assert bs[0].is_content and bs[1].is_content
-
-
-def test_node_attrs_lazy_and_correct():
-    """Attributes parse lazily from the raw token slice — the hot path
-    never pays for them — but .attr()/.attrs still give the parsed view,
-    first occurrence winning."""
-    from ocr_spark.core.dom import build_dom
-    from ocr_spark.core.tokenizer import tokenize
-
-    root = build_dom(tokenize(
-        '<div id="a" id="b"><a href="/x" rel=nofollow>t</a></div>').tokens)
-    div = root.children[0]
-    assert div._attrs is None          # not parsed yet
-    assert div.attr("id") == "a"       # first occurrence wins
-    assert div._attrs is not None      # parsed exactly once, cached
-    a = div.children[0]
-    assert dict(a.attrs) == {"href": "/x", "rel": "nofollow"}

@@ -12,6 +12,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import oracles
 from ocr_spark.core.extract import extract
 from ocr_spark.core.pdf import extract_pdf_text
 from ocr_spark.core.tokenizer import tokenize
@@ -123,80 +124,16 @@ def test_pdf_block_span_invariants(lines, two_col):
     max_size=60))
 @settings(max_examples=400)
 def test_normalize_ws_matches_regex_reference(s):
-    from ocr_spark.core.blocks import _WS_RE, normalize_ws
-    assert normalize_ws(s) == _WS_RE.sub(" ", s).strip()
+    from ocr_spark.core.blocks import normalize_ws
+    assert normalize_ws(s) == oracles._WS_RE.sub(" ", s).strip()
 
 
-# --- streaming segmenter vs DOM reference spelling ---
-
-def _blocks_equal(tokens):
-    from ocr_spark.core.blocks import segment_blocks, segment_blocks_stream
-    from ocr_spark.core.dom import build_dom
-    ref = segment_blocks(build_dom(tokens))
-    fast = segment_blocks_stream(tokens)
-    assert fast == ref  # Block is a dataclass: full field-wise equality
-
-
-@given(html_soup)
-@settings(max_examples=400, deadline=None)
-def test_segment_blocks_stream_matches_dom_reference(soup):
-    """The hot-path streaming segmenter (no tree materialized) must be
-    FIELD-IDENTICAL to segment_blocks(build_dom(tokens)) — the pinned
-    reference spelling — on adversarial soup."""
-    _blocks_equal(tokenize(soup).tokens)
-
-
-def test_segment_blocks_stream_matches_on_targeted_edges():
-    """Closed-form nasty cases for the stack simulation: implicit closes
-    (incl. popping THROUGH a skipped subtree), scope boundaries,
-    self-closing block tags, stray/void end tags, nested anchors,
-    rawtext skip subtrees, depth-sensitive contexts."""
-    cases = [
-        "<div><p>a<p>b</div>c",                      # implicit p close
-        "<ul><li>x<li>y</ul>",                       # implicit li close
-        "<table><tr><td>1<td>2<tr><td>3</table>",    # td/tr chain
-        "<div><p>out<div><p>in</div>more</div>",     # scope boundary
-        "<p>text<select><p>inner</select>tail",      # implicit close into skip
-        "<p>pre<select><div>s</div></p>post",        # end pops through skip
-        "<div/>x<p/>y",                              # self-closing blocks
-        "<p>a</br>b</p>",                            # void end ignored
-        "</p>stray<p>ok</q></p>",                    # stray ends
-        "<a href=x>l1<a>l2</a>l3</a>tail",           # nested anchors
-        "<nav><p>boiler</p></nav><p>body text</p>",  # boiler context
-        "<script>var a='<p>x</p>';</script><p>real</p>",  # rawtext skip
-        "<title>t</title><p>kept</p>",               # rawtext skip (title)
-        "<h1>head<article><p>deep</p></article>",    # depth-sensitive
-        "<p>&amp;\tx  y&#10;</p>",                   # entities + ws collapse
-        "<div>" * 60 + "deep" + "</div>" * 60,       # deep nesting
-        "text only, no tags at all",
-        "<body><header>h</header><p>" + "w " * 20 + "</p></body>",
-    ]
-    for html in cases:
-        _blocks_equal(tokenize(html).tokens)
-
-
-def test_segment_blocks_stream_matches_on_synth_corpus():
-    """Corpus-level pin: every synthetic page (all templates, incl. the
-    malformed/adversarial ones) segments identically both ways."""
-    from ocr_spark.core.encoding import decode_bytes
-    from ocr_spark.synth import make_pages
-    n = 0
-    for p in make_pages(400, seed=1234):
-        html = p["html"]
-        if html is None or html[:5] == b"%PDF-":
-            continue
-        decoded, _ = decode_bytes(bytes(html))
-        _blocks_equal(tokenize(decoded).tokens)
-        n += 1
-    assert n > 300
-
-
-# --- fused tokenize+segment vs the two-pass pinned spelling ---
+# --- fused tokenize+segment vs the DOM-tree reference spelling ---
 
 def _fused_equal(html: str):
-    from ocr_spark.core.blocks import segment_blocks_stream, segment_html
+    from ocr_spark.core.blocks import segment_html
     stream = tokenize(html)
-    ref = segment_blocks_stream(stream.tokens)
+    ref = oracles.segment_blocks(oracles.build_dom(stream.tokens))
     fast_blocks, fast_rec = segment_html(html)
     assert fast_blocks == ref  # dataclass: full field-wise equality
     assert fast_rec == stream.recoveries
@@ -205,17 +142,23 @@ def _fused_equal(html: str):
 @given(html_soup)
 @settings(max_examples=400, deadline=None)
 def test_segment_html_matches_stream_reference(soup):
-    """The fused one-pass segmenter (no token list materialized) must be
-    FIELD-IDENTICAL — including recovery counts — to
-    segment_blocks_stream(tokenize(html).tokens) on adversarial soup."""
+    """The fused one-pass segmenter (no token list, no tree
+    materialized) must be FIELD-IDENTICAL — including recovery counts —
+    to segment_blocks(build_dom(tokenize(html).tokens)), the pinned
+    reference spelling, on adversarial soup."""
     _fused_equal(soup)
 
 
 def test_segment_html_matches_on_targeted_edges():
-    """The fused loop interleaves BOTH state machines, so it must clear
-    BOTH ancestors' closed-form edge lists, plus fusion-specific edges
-    (rawtext inside a skip subtree, xmp — rawtext but NOT a skip tag —,
-    unterminated rawtext closing mid-stack, CDATA text inside anchors)."""
+    """The fused loop interleaves the tokenizer's dispatch with an
+    open-stack simulation of the tree builder, so it must clear the
+    closed-form edges of both: implicit closes (incl. popping THROUGH a
+    skipped subtree), scope boundaries, self-closing block tags,
+    stray/void end tags, nested anchors, rawtext skip subtrees,
+    depth-sensitive contexts; every tokenizer branch and EOF
+    truncation; plus fusion-specific edges (rawtext inside a skip
+    subtree, xmp — rawtext but NOT a skip tag —, unterminated rawtext
+    closing mid-stack, CDATA text inside anchors)."""
     cases = [
         # segmenter edges
         "<div><p>a<p>b</div>c", "<ul><li>x<li>y</ul>",
@@ -263,26 +206,27 @@ def test_segment_html_matches_on_targeted_edges():
 
 
 def test_segment_html_matches_on_synth_corpus():
-    """Corpus-level pin: every synthetic page (all templates) segments
-    identically fused and two-pass."""
+    """Corpus-level pin: every synthetic page (all templates, incl. the
+    malformed/adversarial ones) segments identically fused and via the
+    tree, over two independently seeded corpora."""
     from ocr_spark.core.encoding import decode_bytes
     from ocr_spark.synth import make_pages
-    n = 0
-    for p in make_pages(400, seed=777):
-        html = p["html"]
-        if html is None or html[:5] == b"%PDF-":
-            continue
-        decoded, _ = decode_bytes(bytes(html))
-        _fused_equal(decoded)
-        n += 1
-    assert n > 300
+    for seed in (1234, 777):
+        n = 0
+        for p in make_pages(400, seed=seed):
+            html = p["html"]
+            if html is None or html[:5] == b"%PDF-":
+                continue
+            decoded, _ = decode_bytes(bytes(html))
+            _fused_equal(decoded)
+            n += 1
+        assert n > 300, seed
 
 
 # --- master-regex tokenizer vs dispatch-loop reference spelling ---
 
 def _tokens_equal(html: str):
-    from ocr_spark.core.tokenizer import tokenize, tokenize_reference
-    ref = tokenize_reference(html)
+    ref = oracles.tokenize_reference(html)
     fast = tokenize(html)
     assert fast.tokens == ref.tokens
     assert fast.recoveries == ref.recoveries
@@ -342,7 +286,8 @@ def test_tokenize_master_matches_on_synth_corpus():
 def test_lzw_roundtrip_property(data: bytes):
     """decode(encode(x)) == x for arbitrary bytes (both EarlyChange
     conventions) — the LZW pair is an exact codec, not best-effort."""
-    from ocr_spark.core.pdf import _lzw_decode, lzw_encode
+    from ocr_spark.core.pdf import _lzw_decode
+    from ocr_spark.synth import lzw_encode
     assert _lzw_decode(lzw_encode(data)) == data
     assert _lzw_decode(lzw_encode(data, early=0), early=0) == data
 

@@ -153,7 +153,8 @@ def test_ascii_decoders_units():
 
 
 def test_lzw_codec_units():
-    from ocr_spark.core.pdf import _lzw_decode, lzw_encode
+    from ocr_spark.core.pdf import _lzw_decode
+    from ocr_spark.synth import lzw_encode
 
     # hand-packed 9-bit stream (independent of our encoder):
     # CLEAR, 'A', 'B', 258, 258, EOD -> "ABABAB"
@@ -181,7 +182,7 @@ def test_lzw_codec_units():
 
 
 def test_lzw_stream_with_earlychange_parm():
-    from ocr_spark.core.pdf import lzw_encode
+    from ocr_spark.synth import lzw_encode
     ops = b"BT /F1 12 Tf 72 720 Td (lzw text) Tj ET"
     body = lzw_encode(ops, early=0)
     pdf = _stream_pdf(
@@ -239,12 +240,50 @@ def test_encrypted_pdf_totality_fuzz():
         assert isinstance(extract_pdf_text(bytes(mut)), str)
 
 
+def test_decrypt_skips_header_spelled_by_ciphertext():
+    """RC4 ciphertext can spell an object header. One chosen so that
+    obj 4's ciphertext contains '9 0 obj<< >>stream' must not be
+    decrypted as an object: RC4 is length-preserving, so the decrypted
+    document keeps the input's length and obj 4 decrypts to its
+    plaintext."""
+    from ocr_spark.core.pdf import (_STREAM_RE, _decrypt_document,
+                                    _strip_stream_eol)
+    from ocr_spark.synth import encrypt_pdf_bytes
+
+    ops = b"BT /F1 12 Tf 72 720 Td (hello world) Tj ET\n"
+    fake = b"9 0 obj<< >>stream\n"
+
+    def encrypted(plain: bytes) -> bytes:
+        # make_pdf with an unfiltered obj-4 content stream
+        pdf = make_pdf(["hello world"])
+        sm = _STREAM_RE.search(pdf, pdf.index(b"4 0 obj"))
+        pdf = (pdf[:sm.start()] + b"<< /Length %d >>\nstream\n"
+               % len(plain) + plain + b"\nendstream" + pdf[sm.end():])
+        return encrypt_pdf_bytes(pdf, r=3)
+
+    def stream4(doc: bytes) -> bytes:
+        sm = _STREAM_RE.search(doc, doc.index(b"4 0 obj"))
+        return _strip_stream_eol(sm.group(2))
+
+    # the key depends only on the bytes before obj 4, so an all-zero
+    # tail of the same length reveals the keystream to aim through
+    ks = stream4(encrypted(ops + bytes(len(fake) + 1)))
+    plain = (ops + bytes(a ^ b for a, b in zip(fake, ks[len(ops):]))
+             + b"\n")
+    enc = encrypted(plain)
+    assert fake in enc
+    dec = _decrypt_document(enc)
+    assert len(dec) == len(enc)
+    assert stream4(dec) == plain
+
+
 def test_aes_fips197_vector():
     """FIPS-197 Appendix C.1: the AES-128 core is the real cipher —
     forward and inverse pinned against the published vector, and the
     S-box is DERIVED (GF(2^8) inverse + affine), not pasted."""
     from ocr_spark.core.pdf import (_aes_block, _aes_cbc_decrypt,
-                                    _aes_cbc_encrypt, _aes_expand_key)
+                                    _aes_expand_key)
+    from ocr_spark.synth import _aes_cbc_encrypt
     key = bytes(range(16))
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     rk = _aes_expand_key(key)

@@ -19,10 +19,12 @@ def test_simple_tag():
 def test_attrs_quoted_unquoted():
     ts = toks('<a href="/x" class=\'c\' data-k=v disabled>t</a>')
     assert ts[0][0] == "start" and ts[0][1] == "a"
-    # tokens carry the RAW attr soup; parsing is lazy (Node.attrs)
+    # tokens carry the RAW attr soup; consumers parse it on demand
     attrs = dict(_parse_attrs(ts[0][2]))
     assert attrs == {"href": "/x", "class": "c", "data-k": "v",
                      "disabled": ""}
+    # duplicates keep source order, so consumers' first-wins is stable
+    assert _parse_attrs('id="a" ID=b') == [("id", "a"), ("id", "b")]
 
 
 def test_gt_inside_quoted_attr():
