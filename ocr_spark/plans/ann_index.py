@@ -59,7 +59,7 @@ from ocr_spark.operators.similarity import (
     residual_vectors,
 )
 from ocr_spark.plans.derived import sync_keyed
-from ocr_spark.sources.io import VersionedTable
+from ocr_spark.sources.io import VersionedTable, atomic_write_json
 
 MODEL_FILE = "_ann_model.json"
 
@@ -85,10 +85,7 @@ def load_ann_model(index_root: str) -> dict | None:
 
 def _save_ann_model(index_root: str, model: dict) -> None:
     os.makedirs(index_root, exist_ok=True)
-    tmp = _model_path(index_root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(model, f)
-    os.replace(tmp, _model_path(index_root))  # atomic publish
+    atomic_write_json(_model_path(index_root), model)
 
 
 def train_ann_model(spark: SparkSession, results_root: str,

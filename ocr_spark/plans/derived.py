@@ -53,7 +53,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ocr_spark.sources.io import VersionedTable
+from ocr_spark.sources.io import VersionedTable, atomic_write_json
 
 _STATE_FILE = "_derived.json"
 CHANGE_COL = "_change_type"
@@ -73,10 +73,7 @@ def _load_state(dst_root: str) -> dict | None:
 
 def _save_state(dst_root: str, state: dict) -> None:
     os.makedirs(dst_root, exist_ok=True)
-    tmp = _state_path(dst_root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=0)
-    os.replace(tmp, _state_path(dst_root))
+    atomic_write_json(_state_path(dst_root), state, indent=0)
 
 
 def _published_latest(src: VersionedTable) -> int:

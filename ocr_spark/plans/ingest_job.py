@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.plans.extract_job import extract_pages, lineage_of, metrics_of
-from ocr_spark.sources.io import TableIO, VersionedTable
+from ocr_spark.sources.io import TableIO, VersionedTable, atomic_write_json
 
 
 class DropManifest:
@@ -87,10 +87,8 @@ class DropManifest:
                 if n.startswith("drop-") and n.endswith(".done")}
 
     def mark_done(self, drop: str, info: dict) -> None:
-        tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"drop": drop, "ts": time.time(), **info}, f)
-        os.replace(tmp, self._path(drop))
+        atomic_write_json(self._path(drop),
+                          {"drop": drop, "ts": time.time(), **info})
 
     def info_of(self, drop: str) -> dict | None:
         """The done marker's recorded info (None while not done)."""
@@ -199,10 +197,7 @@ def compact_history(spark: SparkSession, out_dir: str) -> dict:
     (spark.read.parquet(*srcs).select("_h").distinct()
      .repartition(int(n_parts))
      .write.mode("overwrite").parquet(dest))
-    tmp = marker_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"id": new_id, "covers": sorted(done)}, f)
-    os.replace(tmp, marker_path)
+    atomic_write_json(marker_path, {"id": new_id, "covers": sorted(done)})
     for d in srcs:
         shutil.rmtree(d, ignore_errors=True)
     for d in covered:  # leftovers from a previously-crashed delete phase
@@ -468,10 +463,8 @@ class UrlBucketIndex:
             return None
 
     def _save(self, m: dict) -> None:
-        tmp = self.path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": self.n_buckets, "map": m}, f)
-        os.replace(tmp, self.path)
+        atomic_write_json(self.path, {"n_buckets": self.n_buckets,
+                                      "map": m})
 
     def _bucket_expr(self):
         from ocr_spark.operators.hashing import md5long
@@ -555,10 +548,7 @@ def _freeze_neardup_params(out_dir: str, c: dict) -> dict:
     shape = {k: c[k] for k in _NEARDUP_SHAPE_KEYS}
     if frozen is None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(shape, f)
-        os.replace(tmp, path)
+        atomic_write_json(path, shape)
         return c
     if frozen != shape:
         raise ValueError(
