@@ -21,14 +21,7 @@ def md5long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5long_seeded(seed: int, col: Column) -> Column:
-    return md5long(F.concat(F.lit(f"{seed}|"), col))
-
-
 def sql_md5long(expr: str) -> str:
     """DuckDB rendering of md5long(expr)."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
-
-def sql_md5long_seeded(seed_expr: str, expr: str) -> str:
-    return sql_md5long(f"CAST({seed_expr} AS VARCHAR) || '|' || {expr}")

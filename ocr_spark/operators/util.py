@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,16 +44,47 @@ def broadcast_hint_fn(df: DataFrame, max_rows: int | None):
     return F.broadcast if n <= max_rows else (lambda d: d)
 
 
+_SIZED_LEAVES = ("FileSourceScanExec", "LocalTableScanExec", "RDDScanExec")
+
+
+def scan_splits(df: DataFrame) -> int | None:
+    """The largest split count among the leaf scans of ``df``'s planned
+    physical plan, read without running anything (for a file scan it is
+    split planning; ``df.rdd`` would RUN any exchange below under AQE).
+    None when a leaf's count would need execution: a cached relation, a
+    subquery such as a dynamic-pruning filter, an unlisted leaf kind."""
+    plan_expr = (df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+                 .TreePattern.PLAN_EXPRESSION())
+    splits = 0
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.getClass().getSimpleName() not in _SIZED_LEAVES
+                or leaf.containsPattern(plan_expr)):
+            return None
+        splits = max(splits, leaf.inputRDDs().head().getNumPartitions())
+    return splits
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Round-robin pre-spread for tiny inputs (the extract_pages escape
-    hatch, shared): when a scan yields fewer splits than the cluster
-    has slots, a per-row-expensive narrow stage (shingling, feature
+    """Round-robin pre-spread for tiny inputs: when the largest scan
+    under ``df`` yields fewer splits than the cluster has slots, a
+    per-row-expensive narrow stage (extraction, shingling, feature
     extraction) would run nearly serially — so pay one round-robin
     exchange. The shuffle moves the rows' text, but only in exactly the
     regime where the input is small enough for that to be cheap; at
     corpus scale the scan has >> slots splits and this is a no-op, so
-    hot paths stay narrow."""
+    hot paths stay narrow. Sizing runs no job (:func:`scan_splits`), so
+    the input's own stages run once, in the caller's action; an input
+    that cannot be sized without running counts as not small."""
     slots = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        return df.repartition(slots)
-    return df
+    splits = scan_splits(df)
+    if splits is None or splits >= slots:
+        return df
+    warnings.warn(
+        f"input scan has only {splits} split(s) for {slots} slots — "
+        f"pre-spreading with a round-robin exchange (this SHUFFLES the "
+        f"raw rows; expected only for tiny inputs. For benchmarks, lower "
+        f"spark.sql.files.maxPartitionBytes so the narrow plan is what "
+        f"gets measured).", stacklevel=2)
+    return df.repartition(slots)

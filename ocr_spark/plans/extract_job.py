@@ -47,6 +47,7 @@ from ocr_spark.core.extract import extract
 from ocr_spark.functions.bucketing import (
     DEFAULT_SALT_N, SKEW_FACTOR, host_of, hot_hosts, salted_partition_key,
 )
+from ocr_spark.operators.util import spread_small_scan
 from ocr_spark.sources.io import CheckpointManifest, TableIO
 
 # Per-block span record (north rule: "extracted text/SPANS per document";
@@ -108,20 +109,13 @@ def extract_pages(
 
     ``hot`` is the (host, cnt) skew table; computed from the input when not
     supplied (at production scale: from crawl stats, refreshed per run).
+
+    Building the plan runs no Spark job, so an input with stages of its
+    own (the ingest path's dedup anti-join and keep-latest window) runs
+    them once, inside the caller's action.
     """
     if hot is None:
         hot = hot_hosts(pages, SKEW_FACTOR)
-    flagged = (
-        pages
-        .withColumn("_host", host_of(F.col("url")))
-        .join(F.broadcast(hot.withColumn("_is_hot", F.lit(True))
-                          .withColumnRenamed("host", "_host")
-                          .drop("cnt")),
-              on="_host", how="left")
-        .withColumn("_is_hot", F.coalesce(F.col("_is_hot"), F.lit(False)))
-    )
-    bucket, salt = salted_partition_key(
-        F.col("url"), F.col("_is_hot"), n_buckets, salt_n)
     # UDF FIRST, over the byte-balanced parquet scan splits (a narrow
     # stage: the html blobs go straight from the columnar read into the
     # Arrow batches, never through a shuffle). Only AFTER extraction does
@@ -132,24 +126,23 @@ def extract_pages(
     # from byte-sized input splits, which beats any hash key for
     # heterogeneous document sizes.
     #
-    # Small-input escape hatch: when the scan yields fewer splits than
-    # the cluster has slots (tiny corpus, single small file), a narrow
-    # UDF would under-parallelize — so pre-spread with one round-robin
-    # exchange. That shuffle moves blobs, but only in exactly the regime
-    # where the input is small enough for it to be cheap; at corpus
-    # scale the scan always has >> slots splits and stays narrow.
-    sc = pages.sparkSession.sparkContext
-    slots = sc.defaultParallelism
-    scan_parts = pages.rdd.getNumPartitions()
-    if scan_parts < slots:
-        warnings.warn(
-            f"extract_pages: input scan has only {scan_parts} split(s) for "
-            f"{slots} slots — pre-spreading with a round-robin exchange "
-            f"(this SHUFFLES the raw blobs; expected only for tiny inputs. "
-            f"For benchmarks, lower spark.sql.files.maxPartitionBytes so "
-            f"the narrow plan is what gets measured).",
-            stacklevel=2)
-        flagged = flagged.repartition(slots)
+    # Small-input escape hatch: an input whose largest scan has fewer
+    # splits than the cluster has slots (tiny corpus, one WARC drop)
+    # would under-parallelize the narrow UDF, so spread_small_scan
+    # pre-spreads it with one round-robin exchange (sized without
+    # running it); at corpus scale it is a no-op and the plan stays
+    # narrow.
+    flagged = (
+        spread_small_scan(pages)
+        .withColumn("_host", host_of(F.col("url")))
+        .join(F.broadcast(hot.withColumn("_is_hot", F.lit(True))
+                          .withColumnRenamed("host", "_host")
+                          .drop("cnt")),
+              on="_host", how="left")
+        .withColumn("_is_hot", F.coalesce(F.col("_is_hot"), F.lit(False)))
+    )
+    bucket, salt = salted_partition_key(
+        F.col("url"), F.col("_is_hot"), n_buckets, salt_n)
     res = (flagged
            .withColumn("bucket", bucket)
            .withColumn("salt", salt)

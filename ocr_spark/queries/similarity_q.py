@@ -86,26 +86,6 @@ def lsh_histogram(spark, sf):
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def _ann_sql(qv: list[float]) -> str:
-    bucket_expr = " + ".join(
-        f"(CASE WHEN {_sql_dot('embedding', p)} >= 0 "
-        f"THEN {1 << j} ELSE 0 END)" for j, p in enumerate(PLANES))
-    qbucket = 0
-    for j, p in enumerate(PLANES):
-        if sum(x * y for x, y in zip(qv, p)) >= 0:
-            qbucket |= 1 << j
-    qsql = _sql_vec(qv)
-    return (
-        f"WITH b AS (SELECT vec_id, embedding, ({bucket_expr}) AS bucket "
-        f"FROM embeddings) "
-        f"SELECT vec_id, ROUND(list_dot_product(CAST(embedding AS "
-        f"DOUBLE[]), {qsql}) / (sqrt(list_dot_product(CAST(embedding AS "
-        f"DOUBLE[]), CAST(embedding AS DOUBLE[]))) * "
-        f"sqrt(list_dot_product({qsql}, {qsql}))), 4) AS cos "
-        f"FROM b WHERE bucket = {qbucket} "
-        f"ORDER BY cos DESC, vec_id LIMIT 5")
-
-
 def _ann_spark(spark, sf):
     qv = _query_vec(spark, sf)
     emb = load(spark, sf, "embeddings")

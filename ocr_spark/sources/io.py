@@ -3157,6 +3157,13 @@ class VersionedTable:
         a conservative/stale index is always safe). Partitions not
         currently live are ignored.
 
+        Actions (partitioned table): ONE aggregate over the persisted
+        source (count, distinct keys, key range, partition keys; the
+        duplicate-key groupBy runs only to name one in the error), ONE
+        grouped semi-join over the probe (matched partitions and the
+        rows each loses), one collect of the merged rows' partitions
+        (for tombstones) and the commit's write.
+
         Returns ``(snapshot_id, stats)``; ``snapshot_id`` is None when
         ``source`` is empty."""
         from pyspark.sql import functions as F
@@ -3174,33 +3181,39 @@ class VersionedTable:
                  "partitions_rewritten": 0, "partitions_dropped": 0}
         src = source.persist()
         try:
-            src_n = src.count()
+            # struct-wrapped: NULL keys count as one key (as in a
+            # groupBy) and NULL partition values survive collect_set
+            aggs = [F.count(F.lit(1)).alias("n"),
+                    F.count_distinct(F.struct(*key_cols)).alias("n_keys")]
+            range_probe = probe_partitions is None and len(key_cols) == 1
+            if range_probe:
+                aggs += [F.min(key_cols[0]).alias("lo"),
+                         F.max(key_cols[0]).alias("hi")]
+            if pcol is not None:
+                aggs.append(F.collect_set(F.struct(
+                    self._row_key_expr(src, pcol).alias("_k")))
+                    .alias("parts"))
+            agg = src.agg(*aggs).collect()[0]
+            src_n = agg["n"]
             if src_n == 0:
                 return None, stats
-            dup = (src.groupBy(*key_cols).count()
-                   .where(F.col("count") > 1).limit(1).collect())
-            if dup:
+            if agg["n_keys"] != src_n:
+                dup = (src.groupBy(*key_cols).count()
+                       .where(F.col("count") > 1).limit(1).collect())
                 raise ValueError(
                     f"merge_into source has duplicate keys on "
                     f"{key_cols} (e.g. {tuple(dup[0])[:-1]}): dedup the "
                     "source first (one winner per key)")
-            keys = src.select(*key_cols).distinct()
+            keys = src.select(*key_cols)  # unique: checked above
             if pcol is None:
-                cur = self.read().persist()
-                try:
-                    total = cur.count()
-                    survivors = cur.join(keys, key_cols, "left_anti")
-                    merged = survivors.unionByName(src).persist()
-                    kept = merged.count() - src_n
-                    sid = self.commit(merged, None,
-                                      note=note or "merge_into",
-                                      operation="merge")
-                    merged.unpersist()
-                finally:
-                    cur.unpersist()
-                stats.update(rows_replaced=total - kept,
+                cur = self.read()
+                stats.update(rows_replaced=cur.join(keys, key_cols,
+                                                    "semi").count(),
                              rows_written=src_n, partitions_rewritten=1)
-                return sid, stats
+                merged = cur.join(keys, key_cols, "left_anti")
+                return self.commit(merged.unionByName(src), None,
+                                   note=note or "merge_into",
+                                   operation="merge"), stats
             from urllib.parse import unquote
             # single-key merge: bound the match probe by the source's
             # key range — on a table with file statistics on the key
@@ -3226,27 +3239,22 @@ class VersionedTable:
                     probe_src = self.read(partitions=want)
                 else:
                     probe_empty = True  # index names nothing live
-            if probe_src is None and not probe_empty                     and len(key_cols) == 1:
-                kc = key_cols[0]
-                b = src.agg(F.min(kc).alias("lo"),
-                            F.max(kc).alias("hi")).collect()[0]
+            if range_probe:
                 ok_types = (int, float, str, bool,
                             datetime.date, datetime.datetime)
-                if (isinstance(b["lo"], ok_types)
-                        and isinstance(b["hi"], ok_types)):
+                bounds = (agg["lo"], agg["hi"])
+                if all(isinstance(b, ok_types) for b in bounds):
                     probe_src = self.read(
-                        where=[(kc, "between", (b["lo"], b["hi"]))])
+                        where=[(key_cols[0], "between", bounds)])
             if probe_src is None and not probe_empty:
                 probe_src = self.read()
-            matched_parts = [] if probe_empty else sorted(
-                {r[0] for r in probe_src.join(keys, key_cols, "semi")
-                 .select(self._row_key_expr(probe_src, pcol)
-                         .alias("_k")).distinct().collect()},
-                key=_norm_pv)
-            src_parts = sorted(
-                {r[0] for r in
-                 src.select(self._row_key_expr(src, pcol).alias("_k"))
-                 .distinct().collect()}, key=_norm_pv)
+            # matched partition -> rows it loses (all in read_parts)
+            matched = {} if probe_empty else {
+                r[0]: r[1] for r in probe_src.join(keys, key_cols, "semi")
+                .groupBy(self._row_key_expr(probe_src, pcol).alias("_k"))
+                .count().collect()}
+            matched_parts = sorted(matched, key=_norm_pv)
+            src_parts = sorted((r[0] for r in agg["parts"]), key=_norm_pv)
             live = self._resolve(None, None)[0]
             live_norm = set(live) | {unquote(k) for k in live}
             # partitions to rewrite: every one holding a matched key,
@@ -3257,14 +3265,9 @@ class VersionedTable:
                 | {v for v in src_parts if _norm_pv(v) in live_norm},
                 key=_norm_pv)
             if read_parts:
-                existing = self.read(partitions=read_parts).persist()
-                total = existing.count()
-                survivors = (existing.join(keys, key_cols, "left_anti")
-                             .persist())
-                kept = survivors.count()
+                survivors = (self.read(partitions=read_parts)
+                             .join(keys, key_cols, "left_anti"))
             else:
-                existing = None
-                total = kept = 0
                 survivors = src.limit(0)
             merged = survivors.unionByName(src)
             present = {_norm_pv(r[0]) for r in
@@ -3275,11 +3278,8 @@ class VersionedTable:
             sid = self.commit(merged, pcol, note=note or "merge_into",
                               drop_partitions=dropped,
                               operation="merge")
-            if existing is not None:
-                survivors.unpersist()
-                existing.unpersist()
-            stats.update(rows_replaced=total - kept, rows_written=src_n,
-                         partitions_rewritten=len(present),
+            stats.update(rows_replaced=sum(matched.values()),
+                         rows_written=src_n, partitions_rewritten=len(present),
                          partitions_dropped=len(dropped))
             return sid, stats
         finally:

@@ -511,3 +511,45 @@ def test_merge_probe_bounded_by_url_index(spark, tmp_path, monkeypatch):
     rows = {(u, d) for u, d, _ in _latest(spark, out)}
     assert rows == {(A, "d4"), (B, "d3"), (C, "d3")}
     assert idx.partitions_for([800]) == ["d1", "d4"]
+
+
+# Spark jobs one gate-off drop may submit after the bootstrap drop.
+# Measured on this fixture (local[4]); the code before the leaf-sized
+# small-input check and the two-aggregate merge_into submitted 49
+# (merge_latest) and 22 (append).
+MERGE_DROP_JOBS = 36
+APPEND_DROP_JOBS = 20
+
+
+@pytest.mark.parametrize("recrawl,budget", [
+    ("merge_latest", MERGE_DROP_JOBS), ("append", APPEND_DROP_JOBS)])
+def test_jobs_per_drop_budget(spark, jobs_in_group, tmp_path, recrawl,
+                              budget):
+    """Each upstream stage of a drop runs once: sizing the input of
+    extract_pages runs no job, and merge_into checks its source and its
+    matches with one aggregate each. A change that re-runs a stage
+    shows here as extra jobs."""
+    drops = str(tmp_path / "drops")
+    urls = [f"https://jobs.example.com/u{i}" for i in range(6)]
+    _write_drop(drops, "day1", [
+        (u, "2026-01-01T00:00:00Z", _page(f"{i}-v1"))
+        for i, u in enumerate(urls[:4])])
+    out = str(tmp_path / "out")
+    run_ingest_job(spark, drops, out, n_buckets=4, recrawl=recrawl)
+    _write_drop(drops, "day2", [
+        (urls[0], "2026-01-02T00:00:00Z", _page("0-v2")),   # changed
+        (urls[1], "2026-01-02T00:00:00Z", _page("1-v2")),   # changed
+        (urls[2], "2026-01-01T00:00:00Z", _page("2-v1")),   # identical
+        (urls[4], "2026-01-02T00:00:00Z", _page("4-v1")),   # new
+        (urls[5], "2026-01-02T00:00:00Z", _page("5-v1"))])  # new
+    group = f"drop-jobs-{recrawl}-{os.getpid()}"
+    n = jobs_in_group(group, lambda: run_ingest_job(
+        spark, drops, out, n_buckets=4, recrawl=recrawl))
+    assert n <= budget, (recrawl, n)
+    got = {(u, d) for u, d, _ in _latest(spark, out)}
+    if recrawl == "merge_latest":
+        assert got == {(urls[0], "day2"), (urls[1], "day2"),
+                       (urls[2], "day1"), (urls[3], "day1"),
+                       (urls[4], "day2"), (urls[5], "day2")}
+    else:
+        assert len(got) == 8

@@ -155,6 +155,57 @@ def test_merge_into_unpartitioned(spark, tmp_path):
         (1, "u1", 10), (1, "u2", 11)]
 
 
+_SCHEMA = "drop_id BIGINT, url STRING, score BIGINT"
+
+
+def test_merge_into_null_keys_are_duplicates(spark, tmp_path):
+    # two NULL keys are one key (a groupBy groups them), so ambiguous
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [(1, "u1", 10)]), "drop_id")
+    with pytest.raises(ValueError, match="duplicate keys"):
+        vt.merge_into(spark.createDataFrame(
+            [(2, None, 1), (3, None, 2)], _SCHEMA), ["url"])
+    assert [s["id"] for s in vt.snapshots()] == [1]
+
+
+def test_merge_into_null_partition_value(spark, tmp_path):
+    # a NULL partition value is the Hive default partition: it is live,
+    # so a source row landing there rewrites it, keeping its other rows
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(spark.createDataFrame(
+        [(None, "u0", 5), (1, "u1", 10)], _SCHEMA), "drop_id")
+    sid, stats = vt.merge_into(spark.createDataFrame(
+        [(None, "u1", 11), (None, "u2", 7)], _SCHEMA), ["url"])
+    assert stats == {"rows_replaced": 1, "rows_written": 2,
+                     "partitions_rewritten": 1, "partitions_dropped": 1}
+    got = sorted((r.url, r.drop_id, r.score) for r in vt.read().collect())
+    assert got == [("u0", None, 5), ("u1", None, 11), ("u2", None, 7)]
+    assert vt.snapshots()[-1]["parts"]["1"] is None
+
+
+@pytest.mark.parametrize("probe", ["key_range", "probe_partitions"])
+def test_merge_into_stats_hand_computed(spark, tmp_path, probe):
+    # partitions 1 and 2 each lose one row and keep one; partition 3
+    # loses its only row (tombstone); partition 4 is new. By hand:
+    # 3 rows replaced, 4 written, {1, 2, 4} rewritten, {3} dropped.
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [(1, "u1", 10), (1, "u2", 11), (2, "u3", 20),
+                          (2, "u4", 21), (3, "u5", 30), (9, "u9", 90)]),
+              "drop_id", stats_cols=["url"])
+    kw = ({"probe_partitions": [1, 2, 3, 4]} if probe == "probe_partitions"
+          else {})
+    sid, stats = vt.merge_into(_mk(spark, [
+        (4, "u1", 100), (4, "u3", 300), (4, "u5", 500), (4, "u6", 600),
+    ]), ["url"], **kw)
+    assert stats == {"rows_replaced": 3, "rows_written": 4,
+                     "partitions_rewritten": 3, "partitions_dropped": 1}
+    assert _rows(vt.read()) == [
+        (1, "u2", 11), (2, "u4", 21), (4, "u1", 100), (4, "u3", 300),
+        (4, "u5", 500), (4, "u6", 600), (9, "u9", 90)]
+    assert vt.snapshots()[-1]["parts"]["3"] is None
+    assert "9" not in vt.snapshots()[-1]["parts"]
+
+
 # ------------------------------------------------------------------- rewrite
 
 
