@@ -769,13 +769,20 @@ def remove_duplicated_spans(df: DataFrame, id_col: str, text_col: str,
 # oracle stays plain SQL); the filter is purely a shuffle-volume lever.
 #
 # Scale notes:
-#   * mask build: ONE pass over the history fingerprint column (8 bytes a
-#     row), coalesced to `coalesce_to` partitions; each partition emits
-#     one n_bits/8-byte mask, OR-reduced on the driver — driver cost is
-#     coalesce_to * n_bits/8 bytes (32 * 16 MiB at n_bits=2^27), constant
-#     in history size. Size n_bits ~ 10x history cardinality for ~1% fp.
+#   * the filter runs only when the history's optimized-plan sizeInBytes
+#     (read without a job; unbounded for an RDD-backed frame) exceeds
+#     spark.sql.autoBroadcastJoinThreshold (-1: always). Below it the
+#     history is broadcast into the anti-join, which shuffles nothing.
+#   * mask build: ONE pass over the non-NULL history fingerprints (8
+#     bytes a row), coalesced to `coalesce_to` partitions; each
+#     partition emits one n_bits/8-byte mask, OR-reduced on the driver
+#     — driver cost is coalesce_to * n_bits/8 bytes (32 * 16 MiB at
+#     n_bits=2^27), constant in history size. Size n_bits ~ 10x history
+#     cardinality for ~1% fp.
 #   * membership: Arrow-batched pandas UDF over the broadcast mask —
-#     vectorized numpy gather, no per-row Python.
+#     vectorized numpy gather, no per-row Python. Neither UDF may see a
+#     NULL: Arrow hands pandas that batch as float64, rounding away the
+#     low bits of every 60-bit hash in it.
 #   * in production the history side of the residual anti-join is a
 #     persisted fingerprint table bucketed by the hash, so only the
 #     Bloom-positive batch sliver shuffles.
@@ -800,7 +807,7 @@ def build_bloom_mask(hashes: DataFrame, hash_col: str,
     """Bloom bitmask (numpy uint8, n_bits/8 bytes) over a hash column.
 
     mapInPandas emits one partial mask per (coalesced) partition; the
-    driver ORs them. n_bits must be a multiple of 8."""
+    driver ORs them. NULL hashes are skipped. n_bits % 8 == 0."""
 
     def build(batches):
         mask = np.zeros(n_bits // 8, np.uint8)
@@ -811,7 +818,8 @@ def build_bloom_mask(hashes: DataFrame, hash_col: str,
                                  (1 << (pos & 7)).astype(np.uint8))
         yield pd.DataFrame({"mask": [mask.tobytes()]})
 
-    rows = (hashes.select(hash_col).coalesce(coalesce_to)
+    rows = (hashes.select(hash_col).where(F.col(hash_col).isNotNull())
+            .coalesce(coalesce_to)
             .mapInPandas(build, "mask binary").collect())
     out = np.zeros(n_bits // 8, np.uint8)
     for r in rows:
@@ -830,7 +838,7 @@ def bloom_member_udf(spark, mask, n_bits: int = DEFAULT_BLOOM_BITS,
     construction, since history built the mask): a full extra Python
     pass at 100 TB that filters nothing. Captured-plan evidence:
     docs/PLANS.md §dedup_exact (history side is scan -> md5 project ->
-    distinct -> broadcast, no ArrowEvalPython)."""
+    distinct -> broadcast, no ArrowEvalPython). Input must be non-NULL."""
     bc = spark.sparkContext.broadcast(mask.tobytes())
 
     @F.pandas_udf("boolean")
@@ -852,9 +860,10 @@ def dedup_incremental(batch: DataFrame, history: DataFrame, id_col: str,
     """Batch rows whose text content does NOT appear in `history`.
 
     Exact result (identical to a plain left-anti join on the content
-    hash); the Bloom prefilter only decides which rows may skip the
-    join. The batch is scanned twice (both scans column-pruned); only
-    Bloom-positive rows carry their payload into the anti-join shuffle.
+    hash). A history too large to broadcast gets the Bloom prefilter,
+    which only decides which rows may skip the join: the batch is
+    scanned twice (both scans column-pruned); only Bloom-positive rows
+    carry their payload into the anti-join shuffle.
     """
     hist_h = history.select(md5long(F.col(text_col)).alias("_h"))
     return dedup_incremental_vs_hashes(
@@ -871,13 +880,19 @@ def dedup_incremental_vs_hashes(batch: DataFrame, hist_h: DataFrame,
     is absent from ``hist_h``, a persisted (_h long) fingerprint table
     — the shape the production ingest loop maintains so yesterday's
     corpus never re-hashes its payload (run_ingest_job keeps one such
-    table per committed drop). Same exactness contract: the Bloom mask
-    only decides which rows may SKIP the residual anti-join."""
-    spark = batch.sparkSession
-    mask = build_bloom_mask(hist_h, "_h", n_bits, n_hashes, coalesce_to)
-    member = bloom_member_udf(spark, mask, n_bits, n_hashes)
+    table per committed drop). Same exactness contract: a ``hist_h``
+    Spark would broadcast by size is one broadcast anti-join, built
+    without a job; a larger one's Bloom mask, collected here, only
+    decides which rows may SKIP the residual anti-join."""
     b = batch.withColumn("_h", key)
-    definite_new = b.where(~member(F.col("_h")))
-    survivors = (b.where(member(F.col("_h")))
-                 .join(hist_h.distinct(), "_h", "left_anti"))
+    conf = batch.sparkSession._jsparkSession.sessionState().conf()
+    size = hist_h._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if 0 <= int(size) <= conf.autoBroadcastJoinThreshold():
+        return (b.join(F.broadcast(hist_h.distinct()), "_h", "left_anti")
+                .drop("_h"))
+    mask = build_bloom_mask(hist_h, "_h", n_bits, n_hashes, coalesce_to)
+    member = bloom_member_udf(batch.sparkSession, mask, n_bits, n_hashes)
+    hit = member(F.coalesce(F.col("_h"), F.lit(0)))
+    definite_new = b.where(~hit)
+    survivors = b.where(hit).join(hist_h.distinct(), "_h", "left_anti")
     return definite_new.unionByName(survivors).drop("_h")

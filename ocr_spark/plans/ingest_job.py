@@ -14,11 +14,11 @@ Composition (all pieces individually proven in rounds 1-3, wired here):
   sources/warc.read_warc        -> pages (per-FILE parallel, record
                                    bytes never shuffle)
   dedup.dedup_incremental_vs_hashes
-                                -> Bloom-prefiltered EXACT content
-                                   dedup vs the persisted fingerprint
-                                   history (only the true-dup +
-                                   false-positive sliver reaches the
-                                   anti-join shuffle)
+                                -> EXACT content dedup vs the persisted
+                                   fingerprint history; Bloom-prefiltered
+                                   (only the true-dup + fp sliver reaches
+                                   the anti-join shuffle) only when the
+                                   history is too large to broadcast
   plans/extract_job.extract_pages
                                 -> the fused narrow extraction UDF
                                    (blobs never shuffle)
@@ -43,7 +43,8 @@ Scale shape (10^12 docs):
   * per-drop work is bounded by the drop, not the corpus: the history
     side is a fingerprint table (8-byte hashes, one column — payload
     never re-read), scanned once per drop to build the Bloom mask
-    (constant-size driver cost: coalesce_to x n_bits/8 bytes).
+    once it is too large to broadcast (constant-size driver cost:
+    coalesce_to x n_bits/8 bytes).
     Size ``n_bits`` ~ 10x corpus cardinality for ~1% fp; at 10^12 docs
     the residual anti-join against the (bucketable) fingerprint table
     is the scalable exact path and the mask is purely a shuffle-volume

@@ -17,6 +17,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.1"
+# The incremental dedup picks its path from the history's planned size
+# while the frame is built; these captures plan it as for a history too
+# large to broadcast, the shape their checks state.
+BLOOM_PATH = ("dedup_exact", "ingest_drop_pipeline")
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 # (query name, what the plan must show, why it matters at scale)
 CHECKS = {
@@ -217,7 +222,10 @@ CHECKS = {
         "arriving via BroadcastExchange; the window sort runs parallel "
         "across the 64 contiguous hash ranges."),
     "dedup_exact": (
-        "incremental dedup vs history: the Bloom membership probe is an "
+        "incremental dedup vs a history above "
+        "spark.sql.autoBroadcastJoinThreshold (captured with the "
+        "threshold at -1; a smaller history is one BroadcastHashJoin "
+        "LeftAnti with no Python pass): the Bloom membership probe is an "
         "ArrowEvalPython NARROW on the batch scan (mask arrives per "
         "executor as a Spark broadcast variable — constant-size, "
         "invisible to the plan), so the definite-new branch reaches the "
@@ -301,8 +309,13 @@ CHECKS = {
         "document text never crosses an Exchange."),
     "ingest_drop_pipeline": (
         "the per-drop unit of plans/ingest_job.py (staged pages -> "
-        "Bloom incremental dedup vs the fingerprint history -> "
-        "extraction): the Bloom membership probe is an ArrowEvalPython "
+        "incremental dedup vs the fingerprint history -> extraction), "
+        "for a history above spark.sql.autoBroadcastJoinThreshold "
+        "(captured with the threshold at -1 while the dedup is built; a "
+        "smaller history is one BroadcastHashJoin LeftAnti of the staged "
+        "scan against the distinct _h, with no Python pass and no job "
+        "before the drop's first action): the Bloom membership probe is "
+        "an ArrowEvalPython "
         "NARROW on the staged scan (mask is a broadcast variable), the "
         "definite-new branch reaches the extraction UDF with NO join, "
         "only Bloom-positive rows enter the anti-join against the "
@@ -396,7 +409,10 @@ def main() -> None:
         from ocr_spark.synth import write_corpus
         write_corpus(corpus, 5000, seed=42)
     extra_note: dict[str, str] = {}
+    threshold = spark.conf.get(THRESHOLD)
     for name, prop in CHECKS.items():
+        if name in BLOOM_PATH:
+            spark.conf.set(THRESHOLD, "-1")
         if name == "extract_flagship":
             # Size scan splits >= slots (bench.py _split_conf discipline):
             # otherwise extract_pages' tiny-input escape hatch pre-spreads
@@ -804,6 +820,7 @@ def main() -> None:
             df = D._star_round(edges)
         else:
             df = specs[name].spark(spark, SF)
+        spark.conf.set(THRESHOLD, threshold)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

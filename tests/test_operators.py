@@ -1080,9 +1080,11 @@ def _inc_frames(spark):
 
 def test_dedup_incremental_matches_plain_antijoin(spark):
     hist, batch = _inc_frames(spark)
-    got = sorted(r["doc_id"] for r in
-                 D.dedup_incremental(batch, hist, "doc_id", "text",
-                                     n_bits=1 << 14).collect())
+    out = D.dedup_incremental(batch, hist, "doc_id", "text", n_bits=1 << 14)
+    # a createDataFrame history has unbounded plan stats: Bloom path
+    assert "ArrowEvalPython" in \
+        out._jdf.queryExecution().executedPlan().toString()
+    got = sorted(r["doc_id"] for r in out.collect())
     plain = sorted(r["doc_id"] for r in batch.join(
         hist.select("text").distinct(), "text", "left_anti").collect())
     assert got == plain == [200 + i for i in range(30)]
