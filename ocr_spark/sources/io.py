@@ -401,8 +401,7 @@ def _apply_entry(live: dict, s: dict) -> dict:
 
 def _fold_live(snaps: list[dict], skip_rewrites: bool = False,
                with_src: bool = False,
-               apply_staged_id: int | None = None,
-               apply_branch: tuple | None = None) -> dict:
+               apply_staged_id: int | None = None) -> dict:
     """Resolve a manifest prefix to its live view via _apply_entry,
     dropping tombstones. ``skip_rewrites`` leaves layout-only commits
     (operation="rewrite") unapplied — the LOGICAL view that
@@ -411,26 +410,10 @@ def _fold_live(snaps: list[dict], skip_rewrites: bool = False,
     :func:`_apply_entry`). ``apply_staged_id`` force-applies the
     staged entry with that id — the write-audit-publish AUDIT view,
     produced only for an EXPLICIT pin of the staged snapshot (the
-    latest live view never includes unpublished staged data).
-
-    ``apply_branch=(uid, base, pin)`` resolves a BRANCH lineage
-    instead: the published view as of the branch's fork point
-    (entries with id <= base) plus the branch's own commit chain
-    (entries stamped with ``branch_uid == uid``, id <= pin) — and
-    NOTHING else. Published entries AFTER the fork are deliberately
-    excluded: an Iceberg branch's lineage is its fork point plus its
-    own commits, never main's later history (that is what
-    fast_forward's conflict check is for)."""
+    latest live view never includes unpublished staged data)."""
     live: dict[str, tuple] = {}
     for s in snaps:
         if skip_rewrites and s.get("operation") == "rewrite":
-            continue
-        if apply_branch is not None:
-            uid, base, pin = apply_branch
-            if s.get("branch_uid") == uid and s["id"] <= pin:
-                live = _apply_entry(live, {**s, "staged": False})
-            elif not s.get("staged") and s["id"] <= base:
-                live = _apply_entry(live, s)
             continue
         if s.get("staged") and s["id"] == apply_staged_id:
             live = _apply_entry(live, {**s, "staged": False})
@@ -465,23 +448,11 @@ def _spec_at(snaps: list[dict], sid: int | None = None) -> tuple:
     pruning under the spec ITS data was laid out with — the Iceberg
     rule that each snapshot plans with its own partition spec.
 
-    A BRANCH commit's spec is recorded ON the entry (``branch_spec``
-    — by the commit-time guard it equals the fork point's spec) and
-    returned directly for branch pins: a later main evolve must not
-    re-plan a branch pin, and the recorded spec survives even after
-    the fork point expires. For the PUBLISHED fold, STAGED entries are
-    skipped entirely — a compacted stale-branch entry must never
-    re-establish its fork-time spec into main's spec line; the seed is
-    the first non-staged entry in range (every entry records the
-    pcol/transform it was written under, and expiry re-states the
-    at-id spec on any survivor following a gap)."""
-    if sid is not None:
-        e = next((s for s in snaps if s["id"] == sid), None)
-        if e is not None and e.get("branch_base") is not None:
-            bs = e.get("branch_spec")
-            if bs is not None:
-                return bs[0], (bs[1] or None)
-            sid = e["branch_base"]
+    STAGED entries are skipped entirely — a compacted staged entry
+    must never re-establish its commit-time spec into the published
+    spec line; the seed is the first non-staged entry in range (every
+    entry records the pcol/transform it was written under, and expiry
+    re-states the at-id spec on any survivor following a gap)."""
     seed = next((s for s in snaps if not s.get("staged")
                  and (sid is None or s["id"] <= sid)), snaps[0])
     pcol = seed["partition_col"]
@@ -1071,8 +1042,8 @@ class VersionedTable:
     commit (files present, no manifest line) is invisible.
 
     Commit protocol: write files, then claim the next metadata
-    version. ALL table metadata — snapshots, refs (tags, branches) and
-    the column registry — is ONE document, ``_v/<n>.json``, written
+    version. ALL table metadata — snapshots, refs (tags) and the
+    column registry — is ONE document, ``_v/<n>.json``, written
     only by :meth:`_cas`: load version n, mutate, claim n+1 by atomic
     create-if-absent (Iceberg's single ``metadata.json`` swap). A lost
     claim rebases and retries, so concurrent writers on any host lose
@@ -1130,16 +1101,12 @@ class VersionedTable:
         return self._load()[1]["snapshots"]
 
     def refs(self) -> dict:
-        """Named snapshot references (Iceberg TAGS and BRANCHES).
-        Tags — ``{name: {"snapshot_id": k, "ts": created}}`` — pin a
-        snapshot by NAME ("the corpus model v1 trained on");
-        ``expire_snapshots`` keeps every tagged snapshot readable, so
-        the pin survives retention policy instead of silently expiring
-        out from under the training run. Branches — ``{name: {"kind":
-        "branch", "base": fork, "head": last, "uid": ...}}`` — are
-        WRITABLE refs with their own commit chain (see
-        :meth:`create_branch`); expiry keeps a live branch's fork
-        point and chain readable the same way."""
+        """Named snapshot references (Iceberg TAGS):
+        ``{name: {"snapshot_id": k, "ts": created}}`` pins a snapshot by
+        NAME ("the corpus model v1 trained on"); ``expire_snapshots``
+        keeps every tagged snapshot readable, so the pin survives
+        retention policy instead of silently expiring out from under
+        the training run."""
         return self._load()[1]["refs"]
 
     # claims tried before CommitConflict surfaces (jittered backoff)
@@ -1189,10 +1156,6 @@ class VersionedTable:
                     f"snapshot {sid} is expired (oldest readable is "
                     f"{snaps[0]['id']}) in {self.root}")
             if name in refs:
-                if refs[name].get("kind") == "branch":
-                    raise ValueError(
-                        f"{name!r} is a branch in {self.root} — one "
-                        "namespace for refs; pick another tag name")
                 if refs[name]["snapshot_id"] == sid:
                     return sid
                 raise ValueError(
@@ -1210,99 +1173,9 @@ class VersionedTable:
             refs = doc["refs"]
             if name not in refs:
                 return False
-            if refs[name].get("kind") == "branch":
-                raise ValueError(
-                    f"{name!r} is a branch in {self.root} — use "
-                    "drop_branch")
             del refs[name]
             return True
         return self._cas(_drop)
-
-    def create_branch(self, name: str,
-                      from_snapshot: int | None = None) -> int:
-        """Create a writable BRANCH ref forked at ``from_snapshot``
-        (default: the latest PUBLISHED snapshot) — Iceberg
-        ``createBranch``, the multi-commit generalization of
-        write-audit-publish: ``commit(df, ..., branch=name)`` chains
-        staged snapshots on the branch, ``read(ref=name)`` shows the
-        fork-point view plus the whole chain (main never sees any of
-        it), and :meth:`fast_forward` publishes the chain's net effect
-        into the live view as one metadata-only entry. The audit
-        workflow for a multi-drop backfill: build it on a branch over
-        days, validate the branch view, fast-forward once.
-
-        Expiry keeps a live branch's fork point and chain readable;
-        ``drop_branch`` releases them. Re-creating an existing
-        unchanged branch at the same fork is a no-op (idempotent job
-        re-runs); any other name collision raises. Returns the fork
-        snapshot id."""
-        def _branch(doc: dict) -> int:
-            snaps, refs = doc["snapshots"], doc["refs"]
-            if not snaps:
-                raise ValueError(
-                    f"cannot branch empty table at {self.root}")
-            if from_snapshot is None:
-                pub = [s["id"] for s in snaps if not s.get("staged")]
-                if not pub:
-                    raise ValueError(
-                        f"table at {self.root} has only STAGED "
-                        "snapshots — nothing published to branch from")
-                sid = max(pub)
-            else:
-                sid = from_snapshot
-                e = next((s for s in snaps if s["id"] == sid), None)
-                if e is not None and e.get("staged"):
-                    raise ValueError(
-                        f"cannot branch from {sid}: a staged/branch "
-                        "snapshot is not on the published lineage")
-            # raises on future/expired ids
-            self._resolve(sid, None, snaps=snaps)
-            if name in refs:
-                r = refs[name]
-                if (r.get("kind") == "branch" and r["base"] == sid
-                        and r["head"] == sid):
-                    return sid
-                raise ValueError(
-                    f"ref {name!r} already exists in {self.root} "
-                    f"({r}); drop it first — a moved ref must be "
-                    "explicit")
-            refs[name] = {"kind": "branch", "base": sid, "head": sid,
-                          "uid": uuid.uuid4().hex[:12],
-                          "ts": time.time()}
-            return sid
-        return self._cas(_branch)
-
-    def drop_branch(self, name: str) -> bool:
-        """Remove branch ``name``; its chain (and, if otherwise
-        unreferenced, its fork point) becomes expirable. An already
-        fast-forwarded branch's PUBLISHED data stays live — the
-        publish entry references the data directories, so GC keeps
-        them partition-grain. Returns False when the branch did not
-        exist (idempotent)."""
-        def _drop(doc: dict) -> bool:
-            refs = doc["refs"]
-            r = refs.get(name)
-            if r is None:
-                return False
-            if r.get("kind") != "branch":
-                raise ValueError(
-                    f"{name!r} is a tag in {self.root} — use drop_tag")
-            del refs[name]
-            return True
-        return self._cas(_drop)
-
-    def _ref_id(self, ref: str, refs: dict) -> int:
-        if ref not in refs:
-            raise ValueError(
-                f"unknown ref {ref!r} in {self.root} "
-                f"(known: {sorted(refs) or 'none'})")
-        r = refs[ref]
-        if r.get("kind") == "branch":
-            # the branch HEAD: its entry is self-describing
-            # (branch_uid/branch_base), so _resolve folds the chain;
-            # an empty branch's head IS its published fork point
-            return r["head"]
-        return r["snapshot_id"]
 
     # manifest versions kept behind the newest claim — deep enough that
     # no reader is still resolving one this old by the time it's pruned
@@ -1568,7 +1441,6 @@ class VersionedTable:
                bloom_cols: list[str] | None = None,
                sort_order: list[str] | None = None,
                staged: bool = False,
-               branch: str | None = None,
                partition_transform=None) -> int:
         """Write ``df`` as a new snapshot. With ``partition_col``,
         default semantics are Iceberg DYNAMIC overwrite: partitions
@@ -1676,40 +1548,9 @@ class VersionedTable:
         :meth:`publish`, which cherry-picks its partitions after a
         conflict check. An abandoned staged snapshot (failed audit) is
         GC'd by ``expire_snapshots`` like any superseded commit; tag
-        it to keep the quarantined data inspectable past retention.
-
-        ``branch="name"`` commits to a BRANCH (see
-        :meth:`create_branch`) — the multi-commit generalization of
-        WAP: the entry is staged (invisible to the live view and to
-        every incremental/maintenance surface) and CHAINS on the
-        branch's previous commits, so ``read(ref="name")`` shows the
-        fork-point view plus the whole chain, and
-        :meth:`fast_forward` later publishes the chain's net effect
-        in one metadata-only entry. Branch commits are plain
-        dynamic-overwrite/append writes: ``replace_all``,
-        ``drop_partitions``, and combining with ``staged=True``
-        raise, and the commit is rejected when the table's partition
-        spec changed since the fork (same hard block as publish —
-        the branch's layout would no longer match the table's)."""
+        it to keep the quarantined data inspectable past retention."""
         _, doc0 = self._load()
         snaps = doc0["snapshots"]
-        if branch is not None:
-            if staged:
-                raise ValueError(
-                    "pass branch= OR staged=True, not both (a branch "
-                    "commit is staged by definition)")
-            if replace_all or drop_partitions:
-                raise ValueError(
-                    "branch commits support plain dynamic-overwrite/"
-                    "append writes only (no replace_all / "
-                    "drop_partitions) — apply such changes on main, "
-                    "or re-create the branch")
-            br0 = doc0["refs"].get(branch)
-            if br0 is None or br0.get("kind") != "branch":
-                raise ValueError(
-                    f"unknown branch {branch!r} in {self.root} "
-                    "(create_branch first; tags are read-only refs)")
-            staged = True
         # hidden partitioning: the transform is a table property
         # established at the first commit — later commits inherit it
         # (maintenance never re-states it) and may only re-pass the
@@ -1855,7 +1696,7 @@ class VersionedTable:
             raise ValueError("drop_partitions requires a partitioned table")
         # the manifest append runs through _cas: validate + build the
         # entry against the loaded document, claim the next version; a
-        # CAS loss rebases — re-validate (specs/branches may have
+        # CAS loss rebases — re-validate (the spec may have
         # moved), re-number sid — and retries. Data files never move:
         # the dir name is provisional (uuid suffix), only the manifest
         # assigns ids.
@@ -1940,25 +1781,6 @@ class VersionedTable:
                                 f"partition {k!r} is both rewritten and "
                                 f"dropped in one commit")
                         pts[k] = None
-            br = None
-            if branch is not None:
-                # re-validate under the lock: the branch must still
-                # exist and the spec at the fork must still be the
-                # live spec (an evolve/rollback between stage and now
-                # would mean this commit's layout no longer matches
-                # the lineage it chains onto — same hard block as
-                # publish, caught before the entry lands)
-                br = doc["refs"].get(branch)
-                if br is None or br.get("kind") != "branch":
-                    raise ValueError(
-                        f"branch {branch!r} was dropped in {self.root} "
-                        "while this commit was writing")
-                if _spec_at(snaps) != _spec_at(snaps, br["base"]):
-                    raise ValueError(
-                        f"cannot commit to branch {branch!r}: the "
-                        "table's partition spec changed since the "
-                        "branch forked (evolve or rollback) — "
-                        "re-create the branch from a current snapshot")
             sid = (snaps[-1]["id"] + 1) if snaps else 1
             entry = {"id": sid, "ts": time.time(), "note": note,
                      "operation": operation,
@@ -1968,15 +1790,6 @@ class VersionedTable:
                 entry["transform"] = tf
             if staged:
                 entry["staged"] = True
-            if br is not None:
-                entry["branch"] = branch
-                entry["branch_uid"] = br["uid"]
-                entry["branch_base"] = br["base"]
-                # the spec this commit's layout was written under
-                # (== the fork's, by the guard above) — recorded so
-                # branch pins keep planning with it after a main
-                # evolve, and after the fork point itself expires
-                entry["branch_spec"] = [lock_pcol, lock_tf]
             if schema_dir is not None:
                 entry["schema_dir"] = schema_dir
             name_to_id = ({c["name"]: c["id"]
@@ -1997,8 +1810,6 @@ class VersionedTable:
                     entry[ikey] = [name_to_id[n] for n in prop
                                    if n in name_to_id]
             snaps.append(entry)
-            if br is not None:
-                br["head"] = sid   # same claim as the entry
             return sid
 
         return self._cas(_append_entry)
@@ -2036,12 +1847,6 @@ class VersionedTable:
                 raise ValueError(
                     f"snapshot {staged_id} in {self.root} is not a "
                     "staged commit")
-            if src.get("branch_uid") is not None:
-                raise ValueError(
-                    f"snapshot {staged_id} belongs to branch "
-                    f"{src.get('branch')!r} — cherry-picking one link "
-                    "of a chain would skip its predecessors; publish "
-                    "the branch with fast_forward()")
             for s in snaps:
                 if (s.get("operation") == "publish"
                         and s.get("source") == staged_id):
@@ -2100,141 +1905,6 @@ class VersionedTable:
             return sid
         return self._cas(_publish)
 
-    def fast_forward(self, name: str, note: str = "",
-                     force: bool = False) -> int | None:
-        """Publish branch ``name``'s whole chain into the live view
-        (Iceberg ``fast_forward main <branch>``): ONE metadata-only
-        manifest entry carrying the chain's NET delta vs the fork
-        point — partitions the branch (re)wrote map to their branch
-        data dirs, no data file is read or moved, publish is O(changed
-        partitions) however many commits the branch holds.
-
-        Conflict check (the cherry-pick validation, chain-wide): every
-        partition in the net delta must be UNCHANGED on main between
-        fork and now, and no merge-on-read delete recorded since the
-        fork may touch it — otherwise fast-forwarding would clobber
-        work the branch never saw; such a publish raises unless
-        ``force=True``. A partition-spec change since the fork
-        (evolve or spec-crossing rollback) is a HARD block, no force —
-        the branch's layout no longer matches the table's.
-
-        Idempotent: re-running after a crash between publish and the
-        caller's own marker returns the existing publish entry's id
-        (the entry and the ref's ``published`` pointer land in one
-        claim). The branch ref survives (drop_branch to release it);
-        an empty branch (head == fork) publishes nothing and returns
-        None.
-
-        REPEATED fast-forward of an advancing branch works (commit →
-        ff → commit more → ff again, Iceberg's continuous-promotion
-        shape): partitions main already carries at exactly a version
-        this branch published are neither conflicts nor re-stated in
-        the delta — each publish carries only the chain's new work,
-        and re-stamping would otherwise un-scope merge-on-read
-        records issued since the earlier publish. Any third-party
-        change to a touched partition since the fork still
-        conflicts."""
-        def _ff(doc: dict) -> int | None:
-            refs = doc["refs"]
-            br = refs.get(name)
-            if br is None or br.get("kind") != "branch":
-                raise ValueError(
-                    f"unknown branch {name!r} in {self.root} "
-                    f"(known branches: "
-                    f"{sorted(r for r in refs if refs[r].get('kind') == 'branch') or 'none'})")
-            base, head, uid = br["base"], br["head"], br["uid"]
-            snaps = doc["snapshots"]
-            for s in snaps:
-                if (s.get("operation") == "publish"
-                        and s.get("source") == head
-                        and s.get("branch_ff") == name):
-                    return s["id"]
-            if head == base:
-                return None
-            evolved = [s["id"] for s in snaps
-                       if s.get("operation") == "evolve"
-                       and s["id"] > base]
-            if evolved or _spec_at(snaps) != _spec_at(snaps, base):
-                raise ValueError(
-                    f"cannot fast_forward branch {name!r}: the "
-                    f"partition spec changed after it forked "
-                    f"(evolve at {evolved or 'a rollback'}) — "
-                    "re-create the branch under the current spec")
-            bview = _fold_live(snaps, with_src=True,
-                               apply_branch=(uid, base, head))
-            fork = _fold_live([s for s in snaps if s["id"] <= base])
-            bv = {k: v[0] for k, v in bview.items()}
-            # the net delta vs the fork, MINUS partitions main already
-            # carries at exactly the branch's version (a previous
-            # fast_forward of this branch published them): re-stating
-            # those would pointlessly bump their src ids — and a
-            # re-stamp would un-scope merge-on-read records issued
-            # since. Dropping them is what makes REPEATED fast-forward
-            # of an advancing branch work (commit → ff → commit → ff),
-            # each publish carrying only the chain's new work.
-            now_l = _fold_live(snaps, skip_rewrites=True)
-            delta: dict[str, str | None] = {
-                k: rel for k, rel in bv.items()
-                if fork.get(k) != rel and now_l.get(k) != rel}
-            delta.update({k: None for k in fork
-                          if k not in bv and k in now_l})
-            touched = set(delta)
-            if not delta:
-                return None   # everything already on main
-            # conflict check on the LOGICAL views (layout-only
-            # compaction commits not applied — same rule as publish/
-            # changed_partitions): a rewrite_files between fork and
-            # now moved dirs without touching rows, and fast-forward
-            # replaces the touched partitions' CONTENT anyway
-            fork_l = _fold_live([s for s in snaps if s["id"] <= base],
-                                skip_rewrites=True)
-            # main's current version of a partition is NOT a conflict
-            # when it is one THIS branch previously published (the
-            # repeated-ff workflow: commit → ff → rewrite the same
-            # partition on the branch → ff again); any third-party
-            # change since the fork still conflicts
-            prior_pub: dict[str, str | None] = {}
-            for s in snaps:
-                if (s.get("operation") == "publish"
-                        and s.get("branch_ff_uid") == uid):
-                    prior_pub.update(s["parts"])
-            conflicts = sorted(
-                k for k in touched
-                if fork_l.get(k) != now_l.get(k)
-                and (k not in prior_pub
-                     or prior_pub[k] != now_l.get(k)))
-            for d in snaps:
-                if (d.get("operation") == "row_delete"
-                        and d["id"] > base):
-                    aff = d.get("affected")
-                    hit = (touched if aff is None
-                           else touched & set(aff))
-                    conflicts.extend(f"{k} (row_delete {d['id']})"
-                                     for k in sorted(hit))
-            if conflicts and not force:
-                raise ValueError(
-                    f"cannot fast_forward branch {name!r}: partitions "
-                    f"changed on main since the fork — {conflicts}; "
-                    "re-create the branch against the current view or "
-                    "pass force=True to clobber")
-            sid = snaps[-1]["id"] + 1
-            pcol = _spec_at(snaps)[0]
-            entry = {"id": sid, "ts": time.time(),
-                     "note": note or f"fast_forward {name} @{head}",
-                     "operation": "publish", "source": head,
-                     "branch_ff": name,
-                     # uid under its OWN key: chain membership is
-                     # keyed on branch_uid, and the publish entry is
-                     # main lineage, never part of the chain fold
-                     "branch_ff_uid": uid,
-                     "partition_col": pcol,
-                     "replace_all": pcol is None,
-                     "parts": dict(delta)}
-            snaps.append(entry)
-            br["published"] = sid   # same claim as the entry
-            return sid
-        return self._cas(_ff)
-
     def _inherited_prop(self, doc: dict, key: str,
                         ids_key: str) -> list | None:
         """A column-list table property (``stats_cols`` /
@@ -2247,9 +1917,9 @@ class VersionedTable:
         columns fall out of the property (their stats are meaningless
         against the current schema).
 
-        Staged/branch recordings are PREFERRED AGAINST: an explicit
-        property on a quarantined commit must not rewrite main's
-        table configuration (the fold falls back to the newest staged
+        Staged recordings are PREFERRED AGAINST: an explicit property
+        on a quarantined commit must not rewrite the published table
+        configuration (the fold falls back to the newest staged
         recording only when no published commit ever recorded the
         property — the stage-first bootstrap)."""
         snaps = doc["snapshots"]
@@ -2257,12 +1927,8 @@ class VersionedTable:
                     if s.get(key) is not None
                     and not s.get("staged")), None)
         if rec is None:
-            # plain-staged fallback only: BRANCH recordings never
-            # feed inheritance — a branch's explicit property stays
-            # its own even when main never configured one
             rec = next((s for s in reversed(snaps)
-                        if s.get(key) is not None
-                        and s.get("branch_uid") is None), None)
+                        if s.get(key) is not None), None)
         if rec is None:
             return None
         reg = doc["registry"]
@@ -2341,35 +2007,17 @@ class VersionedTable:
         latest): top-level row_delete entries plus records carried in
         expiry-compacted base entries (``row_deletes``), deduped by
         delete id. Driver-side over the manifest.
-
-        A BRANCH pin sees the delete state of its FORK POINT: branch
-        commits cannot issue deletes and main's later takedowns are
-        not part of the branch lineage, so the fold runs over the
-        prefix at ``branch_base`` — plus the branch chain's own
-        entries, whose expiry-compacted carries (computed at the base)
-        keep the set alive even after the base itself expires.
         ``snaps``: the manifest to fold (default: load it)."""
         if snaps is None:
             snaps = self.snapshots()
-        carry_uid = None
         if snapshot_id is not None:
-            e = next((s for s in snaps if s["id"] == snapshot_id), None)
-            if e is not None and e.get("branch_base") is not None:
-                uid, base = e["branch_uid"], e["branch_base"]
-                carry_uid = uid
-                snaps = [s for s in snaps
-                         if s["id"] <= base
-                         or (s.get("branch_uid") == uid
-                             and s["id"] <= snapshot_id)]
-            else:
-                snaps = [s for s in snaps if s["id"] <= snapshot_id]
-        dels = self._fold_deletes(snaps, pin=snapshot_id,
-                                  carry_uid=carry_uid)
+            snaps = [s for s in snaps if s["id"] <= snapshot_id]
+        dels = self._fold_deletes(snaps, pin=snapshot_id)
         return [dels[i] for i in sorted(dels)]
 
     @classmethod
-    def _fold_deletes(cls, snaps: list[dict], pin: int | None = None,
-                      carry_uid: str | None = None) -> dict[int, dict]:
+    def _fold_deletes(cls, snaps: list[dict],
+                      pin: int | None = None) -> dict[int, dict]:
         """Fold the manifest prefix to its VISIBLE delete-record set.
         A rollback entry restores the delete state OF ITS TARGET —
         computed recursively from the prefix at the target, so a
@@ -2381,17 +2029,16 @@ class VersionedTable:
         (compaction may have truncated the rollback entry whose
         filtering produced it).
 
-        A STAGED entry's additive carry is scoped to ITS OWN pin: for
-        the published fold it is skipped entirely — a compacted
-        branch-chain entry carries the records visible at its FORK,
-        and re-adding one a later surviving rollback had cancelled
-        would change the live view. ``pin`` enables the carry for
-        exactly the pinned staged entry; ``carry_uid`` additionally
-        enables a whole branch chain's carries for a branch pin (an
-        earlier compacted chain entry may hold the fork-state records
-        after the fork itself expired)."""
+        A STAGED entry is scoped to ITS OWN pin: the published fold
+        skips it entirely — a compacted staged entry's carry is the
+        set visible at the staged id, and applying it to the live
+        lineage would re-add records a later surviving rollback had
+        cancelled. ``pin`` enables it for exactly the pinned staged
+        entry."""
         dels: dict[int, dict] = {}
         for s in snaps:
+            if s.get("staged") and s["id"] != pin:
+                continue
             if s.get("deletes_set"):
                 dels = {d["id"]: d for d in s.get("row_deletes", [])}
                 continue
@@ -2404,11 +2051,6 @@ class VersionedTable:
                 dels = cls._fold_deletes(
                     [e for e in snaps if e["id"] <= s["target"]],
                     pin=s["target"])
-            if s.get("staged") and not (
-                    s["id"] == pin
-                    or (carry_uid is not None
-                        and s.get("branch_uid") == carry_uid)):
-                continue
             for d in s.get("row_deletes", []):
                 dels.setdefault(d["id"], d)
         return dels
@@ -3747,26 +3389,6 @@ class VersionedTable:
             out.append(step)
         return out
 
-    def refs_table(self) -> DataFrame:
-        """Named-refs metadata table (Iceberg's ``.refs``): one row
-        per tag and branch — tags carry their pinned snapshot, a
-        branch its fork point (``base``), chain head, and the publish
-        entry's id once fast-forwarded. Driver-side over the ref
-        store; pass a row's name to ``read(ref=)``."""
-        rows = []
-        for name, r in sorted(self.refs().items()):
-            if r.get("kind") == "branch":
-                rows.append((name, "branch", r["head"], r["base"],
-                             r["head"], r.get("published"),
-                             float(r["ts"])))
-            else:
-                rows.append((name, "tag", r["snapshot_id"], None,
-                             None, None, float(r["ts"])))
-        return self.spark.createDataFrame(
-            rows,
-            "name STRING, kind STRING, snapshot_id INT, base INT, "
-            "head INT, published INT, created_ts DOUBLE")
-
     def history(self) -> DataFrame:
         """Snapshot metadata as a DataFrame (Iceberg's ``.history`` /
         ``.snapshots`` metadata tables): one row per commit with the
@@ -3851,24 +3473,11 @@ class VersionedTable:
         # AUDIT view (parent + the staged changes — Iceberg WAP: a
         # full snapshot the table ref never points at); latest-view
         # resolution (snapshot_id=None) never applies unpublished
-        # staged data. A pin of a BRANCH commit resolves the branch
-        # lineage (fork-point view + the branch's own chain up to the
-        # pin — earlier branch commits included, later main commits
-        # excluded); the entry is self-describing (branch_uid/
-        # branch_base), so branch pins stay readable even after the
-        # branch ref is dropped (e.g. a tagged branch snapshot).
-        branch_ctx = None
-        if (apply_staged and snapshot_id is not None
-                and meta["id"] == snapshot_id
-                and meta.get("branch_uid") is not None):
-            branch_ctx = (meta["branch_uid"], meta["branch_base"],
-                          snapshot_id)
+        # staged data.
         live = _fold_live(snaps, skip_rewrites=skip_rewrites,
                           with_src=with_src,
                           apply_staged_id=(snapshot_id if apply_staged
-                                           and branch_ctx is None
-                                           else None),
-                          apply_branch=branch_ctx)
+                                           else None))
         if partitions is not None:
             # match the on-disk spelling AND its percent-unescaped form
             # (Spark Hive-escapes special chars in partition dirs), with
@@ -4006,7 +3615,7 @@ class VersionedTable:
             recent = sum(1 for s in snaps if s["ts"] >= older_than)
             keep_last = max(keep_last, recent)
         keep_ids = {s["id"] for s in snaps[-keep_last:]}
-        # the newest PUBLISHED entry always survives: a staged/branch
+        # the newest PUBLISHED entry always survives: a staged
         # tail can push it out of the keep_last window, and dropping
         # it would leave no published survivor to compact the live
         # state onto (the delete-record fold would silently lose the
@@ -4014,15 +3623,7 @@ class VersionedTable:
         pub_ids = [s["id"] for s in snaps if not s.get("staged")]
         if pub_ids:
             keep_ids.add(max(pub_ids))
-        for r in doc["refs"].values():
-            if r.get("kind") == "branch":
-                # a live branch pins its FORK POINT (the branch fold's
-                # published base) and its whole commit chain
-                keep_ids.add(r["base"])
-                keep_ids |= {s["id"] for s in snaps
-                             if s.get("branch_uid") == r["uid"]}
-            else:
-                keep_ids.add(r["snapshot_id"])
+        keep_ids |= {r["snapshot_id"] for r in doc["refs"].values()}
         if any(s["id"] not in keep_ids for s in snaps):
             # general keep-set truncation: walk the old manifest in
             # order; a kept snapshot straight after a dropped gap can no
@@ -4077,16 +3678,6 @@ class VersionedTable:
                     # audit view; the publish conflict check rejects
                     # it unless forced).
                     compacted["staged"] = True
-                    # a compacted BRANCH commit stays self-describing:
-                    # the branch fold and _deletes_upto key off these
-                    # fields, and _resolve above already produced the
-                    # BRANCH audit view for it (chain-aware), so the
-                    # compacted entry is a valid reset point of its
-                    # own chain
-                    for bk in ("branch", "branch_uid", "branch_base",
-                               "branch_spec"):
-                        if bk in s:
-                            compacted[bk] = s[bk]
                     parent_src = _fold_live(
                         [e for e in snaps if e["id"] <= s["id"]],
                         with_src=True)
@@ -4111,17 +3702,15 @@ class VersionedTable:
                                for k, (_rel, src) in carry_items)]
                 if pend:
                     compacted["row_deletes"] = pend
-                if not s.get("staged"):
-                    # authoritative (deletes_set): the carried records
-                    # ARE the visible set at this id — a truncated
-                    # rollback entry's filtering must survive even
-                    # when an EARLIER surviving entry still carries a
-                    # record that the rollback had cancelled (expiry
-                    # must never change what a surviving id reads). A
-                    # staged compacted entry keeps the additive carry:
-                    # it is invisible to live folds, and resetting
-                    # there would corrupt the published lineage.
-                    compacted["deletes_set"] = True
+                # authoritative (deletes_set): the carried records ARE
+                # the visible set at this id — a truncated rollback
+                # entry's filtering must survive even when an EARLIER
+                # surviving entry still carries a record that the
+                # rollback had cancelled (expiry must never change what
+                # a surviving id reads). A staged entry's set is read
+                # only at its own pin (_fold_deletes skips it for every
+                # other fold), so it never resets the published lineage.
+                compacted["deletes_set"] = True
                 # the stats/bloom properties must survive history
                 # truncation: each compacted entry inherits the newest
                 # set at or before its id (id-spelled form included, so
@@ -4130,8 +3719,8 @@ class VersionedTable:
                                    ("bloom_cols", "bloom_col_ids"),
                                    ("sort_order", "sort_order_ids")):
                     # prefer published recordings (same rule as
-                    # _inherited_prop: a staged/branch commit's
-                    # explicit property must not rewrite main's
+                    # _inherited_prop: a staged commit's explicit
+                    # property must not rewrite the published
                     # configuration through the compaction carry)
                     prop = next((p for p in reversed(snaps)
                                  if p["id"] <= s["id"]
@@ -4140,9 +3729,7 @@ class VersionedTable:
                     if prop is None:
                         prop = next((p for p in reversed(snaps)
                                      if p["id"] <= s["id"]
-                                     and p.get(pkey) is not None
-                                     and p.get("branch_uid") is None),
-                                    None)
+                                     and p.get(pkey) is not None), None)
                     if prop is not None:
                         compacted[pkey] = prop[pkey]
                         if prop.get(ikey) is not None:
@@ -4305,7 +3892,11 @@ class VersionedTable:
             return snapshot_id
         if snapshot_id is not None:
             raise ValueError("pass snapshot_id OR ref, not both")
-        return self._ref_id(ref, refs)
+        if ref not in refs:
+            raise ValueError(
+                f"unknown ref {ref!r} in {self.root} "
+                f"(known: {sorted(refs) or 'none'})")
+        return refs[ref]["snapshot_id"]
 
     def read(self, snapshot_id: int | None = None,
              partitions: list | None = None,

@@ -170,29 +170,26 @@ def test_keyed_sync_across_rollback_restores_chunks(spark, src,
         _words(src.read()), "url", "pos", "w")
 
 
-def test_sync_across_branch_activity(spark, src, tmp_path):
-    """Branch lineages are invisible to derived consumers until
-    fast-forward: branch commits on the source cause NO sync work
-    (the watermark doesn't even advance — staged entries aren't
-    published), and after fast_forward exactly the branch's
-    partitions reconcile."""
+def test_sync_across_staged_publish(spark, src, tmp_path):
+    """Staged (write-audit-publish) commits are invisible to derived
+    consumers until publish: a staged commit on the source causes NO
+    sync work (the watermark doesn't even advance — staged entries
+    aren't published), and after publish exactly the staged
+    partition reconciles."""
     dst = str(tmp_path / "dv")
     sync_aligned(spark, src.root, dst, _tcounts)
-    src.create_branch("backfill")
-    src.commit(_df(spark, [(3, "d", "one two")]), "drop_id",
-               branch="backfill")
-    res = sync_aligned(spark, src.root, dst, _tcounts)
-    assert not res["synced"]           # nothing published yet
-    src.commit(_df(spark, [(3, "d", "one two three")]), "drop_id",
-               branch="backfill")
+    aid = src.commit(_df(spark, [(3, "d", "one two three")]), "drop_id",
+                     staged=True)
     assert not sync_aligned(spark, src.root, dst, _tcounts)["synced"]
-    src.fast_forward("backfill")
+    src.publish(aid)
     res = sync_aligned(spark, src.root, dst, _tcounts)
     assert res["synced"] and res["changed"] == ["3"]
+    assert res["dropped"] == []
     dvt = VersionedTable(spark, dst)
     assert _rows(dvt.read(), "drop_id", "url", "n") == _rows(
         _tcounts(src.read()), "drop_id", "url", "n")
     assert (3, "d", 3) in _rows(dvt.read(), "drop_id", "url", "n")
+    assert not sync_aligned(spark, src.root, dst, _tcounts)["synced"]
 
 
 def test_aligned_drop_only_and_layout_only_ranges(spark, src,

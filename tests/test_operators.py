@@ -1889,90 +1889,6 @@ def test_c4_page_flags(spark):
     }
 
 
-def test_bpe_train_paper_example():
-    """Sennrich et al. 2016's worked example: {low:5, lower:2, newest:6,
-    widest:3} learns es -> est -> est</w> -> lo -> low first (with the
-    documented highest-count / smallest-pair tie-break)."""
-    from ocr_spark.operators import bpe as B
-    wf = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
-    merges = B.bpe_train(wf, 5)
-    assert merges == [("e", "s"), ("es", "t"), ("est", B.END),
-                      ("l", "o"), ("lo", "w")]
-    ranks = {p: i for i, p in enumerate(merges)}
-    assert B.bpe_segment("newest", ranks) == ["n", "e", "w",
-                                              "est" + B.END]
-    assert B.bpe_segment("lowest", ranks) == ["low", "est" + B.END]
-    # marker-strip normalization: END codepoints in input words vanish
-    assert B.bpe_segment("new" + B.END + "est", ranks) == [
-        "n", "e", "w", "est" + B.END]
-    assert B.bpe_segment(B.END, ranks) == []
-    # unseen characters segment to chars + END (never raises)
-    assert B.bpe_segment("xyz", ranks) == ["x", "y", "z", B.END]
-    # early stop: no pair occurs twice -> fewer merges than asked
-    assert B.bpe_train([("ab", 1)], 10) == []
-
-
-def _naive_bpe_apply(word, merges):
-    """Independent mirror of segmentation: replay the merge LIST in
-    learned order (rank order == replay order for BPE), each merge
-    applied to all occurrences left-to-right."""
-    from ocr_spark.operators.bpe import END
-    sym = list(word.replace(END, "")) + [END]
-    for a, b in merges:
-        out, i = [], 0
-        while i < len(sym):
-            if i + 1 < len(sym) and sym[i] == a and sym[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(sym[i])
-                i += 1
-        sym = out
-    return sym
-
-
-def test_bpe_tokenize_distributed_roundtrip(spark):
-    """End-to-end over the real testdata corpus: distributed word
-    frequencies -> driver merge loop -> Arrow-batched tokenizer UDF.
-    Every doc's tokens (a) match the independent naive merge-replay
-    mirror word-for-word and (b) detokenize back to the original
-    whitespace-normalized text; NULL text stays NULL."""
-    from ocr_spark.operators import bpe as B
-    d = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-         .limit(60))
-    wf = B.word_frequencies(d, "text", top_v=200).collect()
-    merges = B.bpe_train([(r["word"], r["cnt"]) for r in wf], 50)
-    assert len(merges) == 50
-    got = {r["doc_id"]: (r["tokens"], r["n_bpe_tokens"])
-           for r in B.bpe_tokenize(d, "doc_id", "text", merges).collect()}
-    texts = {r["doc_id"]: r["text"] for r in d.collect()}
-    assert set(got) == set(texts)
-    for i, text in texts.items():
-        toks, n = got[i]
-        assert n == len(toks)
-        words = [w for w in text.split(" ") if w]
-        expect = [t for w in words for t in _naive_bpe_apply(w, merges)]
-        assert toks == expect
-        assert B.detokenize(toks) == " ".join(words)
-    # merges compress: fewer tokens than characters-per-word baseline
-    base = sum(len(w) + 1 for ws in texts.values()
-               for w in ws.split(" ") if w)
-    assert sum(n for _, n in got.values()) < base
-
-
-def test_bpe_word_frequencies_top_v(spark):
-    """top_v cap is deterministic (count desc, word asc) and the
-    aggregation counts every occurrence."""
-    from ocr_spark.operators import bpe as B
-    df = spark.createDataFrame(
-        [(1, "b b b a a c"), (2, "a c  c")], ["doc_id", "text"])
-    allf = {r["word"]: r["cnt"]
-            for r in B.word_frequencies(df, "text").collect()}
-    assert allf == {"a": 3, "b": 3, "c": 3}
-    top = B.word_frequencies(df, "text", top_v=2).collect()
-    assert sorted((r["word"], r["cnt"]) for r in top) == [("a", 3), ("b", 3)]
-
-
 def test_quantile_buckets_terciles(spark):
     """CCNet-style per-group terciles: integer cut ranks (ceil(n*k/3)
     via floor-div), ties fall into the LOWER bucket, NULL scores get a
@@ -2200,27 +2116,6 @@ def test_apply_robots_bare_table_collect_is_capped(spark, monkeypatch):
     monkeypatch.setattr(U, "MAX_BARE_RULES", 3)
     with _pytest.raises(ValueError, match="robots_rule_table"):
         U.apply_robots(df, "doc_id", "url", bare)
-
-
-def test_bpe_memo_lru_keeps_recent_models():
-    """ADVICE r4: the per-worker segmentation memo is a small LRU —
-    interleaved jobs with different merge tables no longer thrash each
-    other's word memos, and old models are evicted oldest-first."""
-    from ocr_spark.operators import bpe as B
-
-    B._MEMO.clear()
-    keys = [((f"a{i}", "b"),) for i in range(B._MEMO_MAX + 2)]
-    for k in keys:
-        B._memo_entry(k, list(k))
-    assert len(B._MEMO) == B._MEMO_MAX
-    assert keys[0] not in B._MEMO and keys[1] not in B._MEMO
-    # a hit refreshes recency: touching the oldest survivor keeps it
-    # alive through the next insertion
-    survivor = keys[2]
-    B._memo_entry(survivor, list(survivor))
-    B._memo_entry((("z", "z"),), [("z", "z")])
-    assert survivor in B._MEMO
-    B._MEMO.clear()
 
 
 def test_remove_duplicated_spans_matches_python_mirror(spark):

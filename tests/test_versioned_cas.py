@@ -1,6 +1,6 @@
 """Cross-process optimistic-concurrency commits.
 
-All table metadata — snapshots, refs (tags/branches) and the column
+All table metadata — snapshots, refs (tags) and the column
 registry — is ONE document, claimed as ``_v/<n>.json`` by a
 compare-and-swap (atomic ``os.link``); the lock file is only
 contention avoidance. Contract under test:
@@ -11,9 +11,9 @@ contention avoidance. Contract under test:
     or snapshot, and field ids stay unique;
   * ``commit()`` rebases and retries after losing the CAS to a rival
     committer (fresh read, re-numbered id, both commits' rows live);
-  * a crash right after the claim loses no ref state: a branch
-    commit's head and a fast-forward's ``published`` pointer land in
-    the same claim as the snapshot entry;
+  * a crash right after a ``publish`` claim is replay-safe: the
+    re-run returns the same publish id and the staged rows are live
+    exactly once;
   * lock takeover no longer needs pid-liveness: an expired lease is
     taken over even when the recorded pid is alive (safe — CAS guards
     correctness), and no ``_LOCK`` file survives;
@@ -254,40 +254,28 @@ def _link_then_crash(real):
     return link
 
 
-def test_branch_commit_crash_after_claim_keeps_head(spark, tmp_path,
-                                                    monkeypatch):
+def test_publish_crash_after_claim_replays_same_id(spark, tmp_path,
+                                                  monkeypatch):
+    """The ingest audit's crash window: the publish claim lands, then
+    the process dies before its done marker. The replay must find the
+    existing publish entry — same id, no second entry — and the staged
+    rows are live exactly once."""
     vt = VersionedTable(spark, str(tmp_path / "t"))
     df = lambda p, v: spark.createDataFrame([(p, v)], "p INT, v STRING")
     vt.commit(df(1, "base"), "p")
-    vt.create_branch("b")
+    aid = vt.commit(df(2, "staged"), "p", staged=True)
     monkeypatch.setattr(os, "link", _link_then_crash(os.link))
     with pytest.raises(OSError, match="simulated crash"):
-        vt.commit(df(2, "on-branch"), "p", branch="b")
+        vt.publish(aid)
     monkeypatch.undo()
-    # the entry and the branch head landed in one claim
-    assert vt.refs()["b"]["head"] == 2
-    assert {(r.p, r.v) for r in vt.read(ref="b").collect()} == {
-        (1, "base"), (2, "on-branch")}
-    assert {(r.p, r.v) for r in vt.read().collect()} == {(1, "base")}
-
-
-def test_fast_forward_crash_after_claim_keeps_published(spark, tmp_path,
-                                                        monkeypatch):
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    df = lambda p, v: spark.createDataFrame([(p, v)], "p INT, v STRING")
-    vt.commit(df(1, "base"), "p")
-    vt.create_branch("b")
-    vt.commit(df(2, "on-branch"), "p", branch="b")
-    monkeypatch.setattr(os, "link", _link_then_crash(os.link))
-    with pytest.raises(OSError, match="simulated crash"):
-        vt.fast_forward("b")
-    monkeypatch.undo()
-    pub = [s["id"] for s in vt.snapshots() if s.get("branch_ff") == "b"]
-    assert len(pub) == 1
-    assert vt.refs()["b"].get("published") == pub[0]
-    assert vt.fast_forward("b") == pub[0]   # replay is a no-op
-    assert {(r.p, r.v) for r in vt.read().collect()} == {
-        (1, "base"), (2, "on-branch")}
+    pub = [s["id"] for s in vt.snapshots()
+           if s.get("operation") == "publish"]
+    assert pub == [aid + 1]
+    assert vt.publish(aid) == pub[0]   # replay is a no-op
+    assert [s["id"] for s in vt.snapshots()
+            if s.get("operation") == "publish"] == pub
+    assert sorted((r.p, r.v) for r in vt.read().collect()) == [
+        (1, "base"), (2, "staged")]
 
 
 def test_version_history_pruned(tmp_path):

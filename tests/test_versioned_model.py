@@ -67,15 +67,6 @@ def test_versioned_table_random_walk_matches_model(spark, tmp_path, seed,
     audit_expect: dict[int, list] = {}     # staged id -> audit view
     model_at: dict[int, list] = {}   # published id -> model rows then
     spec_of: dict[int, tuple] = {}   # published id -> spec active then
-    # at most one live BRANCH: its own lineage model (fork rows +
-    # chain replacements under the FORK spec), the fork spec, and the
-    # partition keys its chain touched (the fast-forward delta)
-    branch_st: list[dict | None] = [None]
-
-    def _branch_key(st, r):
-        pc, t = st["spec"]
-        v = r[0] if pc == "drop_id" else r[1]
-        return _transform_py(_validate_transform(t), v)
 
     def fresh_rows(n):
         return [(rnd.randint(1, 4), f"u{rnd.randint(0, 9)}",
@@ -85,14 +76,9 @@ def test_versioned_table_random_walk_matches_model(spark, tmp_path, seed,
     for step in range(18):
         op = "commit" if step == 0 else rnd.choice(
             ["commit", "commit", "delete", "merge", "rewrite", "expire",
-             "apply", "stage", "publish", "evolve", "rollback",
-             "branch", "branch_commit", "branch_ff"])
+             "apply", "stage", "publish", "evolve", "rollback"])
         if op == "publish" and not staged_pending:
             op = "commit"
-        if op == "branch" and branch_st[0] is not None:
-            op = "branch_commit"
-        if op in ("branch_commit", "branch_ff") and branch_st[0] is None:
-            op = "branch"
         if op == "commit":
             rows = fresh_rows(rnd.randint(1, 5))
             sid = vt.commit(_df(spark, rows), spec[0][0],
@@ -185,67 +171,12 @@ def test_versioned_table_random_walk_matches_model(spark, tmp_path, seed,
                 sid = vt.rollback_to(tgt)
                 model = list(model_at[tgt])
                 spec[0] = spec_of[tgt]
-        elif op == "branch":
-            # fork a branch at the latest published snapshot: its
-            # lineage model starts as the CURRENT live model and from
-            # here on evolves independently of main
-            name = f"b{step}"
-            vt.create_branch(name)
-            branch_st[0] = {"name": name, "model": list(model),
-                            "spec": spec[0], "touched": set()}
-            sid = None
-        elif op == "branch_commit":
-            st = branch_st[0]
-            rows = fresh_rows(rnd.randint(1, 4))
-            try:
-                vt.commit(_df(spark, rows), st["spec"][0],
-                          branch=st["name"])
-            except ValueError:
-                # only a spec change since the fork may reject a
-                # branch commit — anything else is a real bug
-                assert spec[0] != st["spec"], (
-                    f"seed {seed} step {step}: branch commit raised "
-                    "without a spec change")
-            else:
-                parts = {_branch_key(st, r) for r in rows}
-                st["model"] = [r for r in st["model"]
-                               if _branch_key(st, r) not in parts] + rows
-                st["touched"] |= parts
-            sid = None
-        elif op == "branch_ff":
-            st = branch_st[0]
-            try:
-                fid = vt.fast_forward(st["name"])
-            except ValueError:
-                # conflicted (main changed a touched partition / a
-                # takedown since the fork) or spec-blocked: live must
-                # be untouched (generic checks below); the branch
-                # stays for a later attempt
-                sid = None
-            else:
-                if fid is not None:
-                    t = st["touched"]
-                    model = ([r for r in model
-                              if _branch_key(st, r) not in t]
-                             + [r for r in st["model"]
-                                if _branch_key(st, r) in t])
-                    sid = fid
-                else:
-                    sid = None   # empty branch: nothing published
-                if fid is None or rnd.random() < 0.5:
-                    vt.drop_branch(st["name"])
-                    branch_st[0] = None
-                # else: branch kept ALIVE post-publish — later
-                # branch_commits extend the chain and a later
-                # branch_ff exercises REPEATED fast-forward (main at
-                # this branch's own published versions is not a
-                # conflict; each publish carries only new work)
         else:
             keep = rnd.randint(2, 4)
             vt.expire_snapshots(keep)
-            # eviction is ALIVE-set based, not oldest-id based: a live
-            # branch's keep set leaves HOLES in the id line (its chain
-            # and fork survive while intermediate published ids drop)
+            # eviction is ALIVE-set based, not oldest-id based: the
+            # newest published entry survives a staged tail, which
+            # leaves HOLES in the id line
             alive = {s["id"] for s in vt.snapshots()}
             for old in [p for p in pins if p not in alive]:
                 pins.pop(old)
@@ -313,16 +244,6 @@ def test_versioned_table_random_walk_matches_model(spark, tmp_path, seed,
             assert _read(vt, snapshot_id=aid) == expected, (
                 f"seed {seed} step {step}: staged audit view {aid} "
                 f"drifted after {op}")
-        # a live branch's view is ITS OWN lineage — byte-stable under
-        # every main-side op (commits, deletes, merges, rollbacks,
-        # expiry compaction), evolving only with its own chain
-        if branch_st[0] is not None:
-            st = branch_st[0]
-            got = sorted((r.drop_id, r.url, r.score)
-                         for r in vt.read(ref=st["name"]).collect())
-            assert got == sorted(st["model"]), (
-                f"seed {seed} step {step}: branch view {st['name']} "
-                f"diverged after {op}")
 
     # the walk must have exercised time travel at least once (pins may
     # have been dropped by a late expiry — the checks still ran)

@@ -14,9 +14,16 @@ The contract under test:
     marker replays safely) and CONFLICT-CHECKED: a partition changed
     between stage and publish — by a commit, or by a merge-on-read
     delete touching it — raises unless force=True;
+  * a layout-only compaction between stage and publish is not a
+    conflict;
+  * an explicit table property on a staged commit never becomes the
+    published table's configuration;
   * expiry GCs an abandoned (unpublished, untagged) staged snapshot;
     a TAGGED one survives compaction still reading its audit view,
     while the live lineage folds from the parent view underneath;
+  * expiry never changes the live view under staged survivors: a
+    compacted staged entry does not heal a truncation gap, and the
+    newest published entry survives a staged tail;
   * the ingest jobs' ``audit=`` gate stages each drop, shows the audit
     exactly the rows the published table would gain, publishes on
     pass, and quarantines on fail — live readers never see a rejected
@@ -104,6 +111,93 @@ def test_publish_validation_errors(spark, tmp_path):
         vt.publish(sid)
     with pytest.raises(ValueError, match="unknown snapshot"):
         vt.publish(99)
+
+
+def test_publish_ignores_layout_only_compaction(spark, tmp_path):
+    """Stage, compact the live table, publish — the compaction moved
+    partition dirs without touching rows, so it is no conflict."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    p1 = _mk(spark, [("u1", "a", 1), ("u2", "a", 2)]).repartition(2)
+    p2 = _mk(spark, [("u3", "b", 3), ("u4", "b", 4)]).repartition(2)
+    vt.commit(p1.unionByName(p2), "d")
+    aid = vt.commit(_mk(spark, [("u3", "b", 30)]), "d", staged=True)
+    _, stats = vt.rewrite_files(target_bytes=1 << 30)
+    assert stats["partitions_rewritten"] == 2
+    vt.publish(aid)
+    assert _rows(vt.read()) == [("u1", "a", 1), ("u2", "a", 2),
+                                ("u3", "b", 30)]
+
+
+def test_staged_property_does_not_leak(spark, tmp_path):
+    """An explicit table property on a quarantined (staged) commit
+    must not rewrite the published configuration: inheritance prefers
+    published recordings."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [("u1", "a", 1)]), "d", stats_cols=["url"],
+              sort_order=["url"])
+    vt.commit(_mk(spark, [("u2", "b", 2)]), "d", staged=True,
+              stats_cols=["v"], sort_order=["v"])
+    assert vt.sort_order() == ["url"]
+    sid = vt.commit(_mk(spark, [("u3", "c", 3)]), "d")
+    e = next(s for s in vt.snapshots() if s["id"] == sid)
+    assert e["stats_cols"] == ["url"] and e["sort_order"] == ["url"]
+
+
+def test_expiry_gap_not_healed_by_staged_survivor(spark, tmp_path):
+    """Expiry must never change the live view. A compacted STAGED
+    survivor sits between a DROPPED rollback and the next published
+    survivor; it is invisible to live folds, so it must not 'heal' the
+    truncation gap: the next published survivor still has to compact
+    (re-stating the rollback's delete state), or the tagged
+    pre-rollback survivor's takedown silently re-applies after a pure
+    maintenance op."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [("a", "p1", 1), ("c", "p2", 2)]), "d",
+              stats_cols=["url"])                               # 1
+    vt.delete_where([("url", "==", "a")], mode="merge_on_read")  # 2
+    vt.commit(_mk(spark, [("g", "p7", 7)]), "d")                # 3
+    vt.create_tag("pre", 3)
+    vt.rollback_to(1)            # 4: url a back, partition p7 gone
+    aid = vt.commit(_mk(spark, [("i", "p9", 9)]), "d",
+                    staged=True)                                # 5
+    vt.create_tag("quarantine", aid)
+    vt.commit(_mk(spark, [("h", "p8", 8)]), "d")                # 6
+    vt.commit(_mk(spark, [("f", "p6", 6)]), "d")                # 7
+    before = _rows(vt.read())
+    assert before == [("a", "p1", 1), ("c", "p2", 2), ("f", "p6", 6),
+                      ("h", "p8", 8)]
+    vt.expire_snapshots(keep_last=2)   # drops ids 1, 2, 4
+    assert [s["id"] for s in vt.snapshots()] == [3, 5, 6, 7]
+    assert _rows(vt.read()) == before
+    # each tag keeps ITS state: before the rollback url a is filtered
+    # and p7 live; the quarantined audit (after it) sees url a again
+    assert _rows(vt.read(ref="pre")) == [("c", "p2", 2),
+                                         ("g", "p7", 7)]
+    assert _rows(vt.read(ref="quarantine")) == [
+        ("a", "p1", 1), ("c", "p2", 2), ("i", "p9", 9)]
+
+
+def test_expiry_keeps_last_published_under_staged_tail(spark,
+                                                       tmp_path):
+    """A staged tail must not push the newest PUBLISHED entry out of
+    the keep window: dropping it would lose the last takedown from
+    the live fold (no published survivor left to compact it onto)."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [("a", "p1", 1), ("c", "p2", 2)]), "d",
+              stats_cols=["url"])                               # 1
+    vt.delete_where([("url", "==", "a")], mode="merge_on_read")  # 2
+    vt.commit(_mk(spark, [("g", "p7", 7)]), "d")                # 3
+    vt.commit(_mk(spark, [("i", "p9", 9)]), "d", staged=True)   # 4
+    aid = vt.commit(_mk(spark, [("i", "p9", 10)]), "d",
+                    staged=True)                                # 5
+    before = _rows(vt.read())
+    assert before == [("c", "p2", 2), ("g", "p7", 7)]
+    vt.expire_snapshots(keep_last=2)   # the window = the staged tail
+    assert [s["id"] for s in vt.snapshots()] == [3, 4, 5]
+    assert _rows(vt.read()) == before  # the takedown still applies
+    # the staged pin still reads its audit view under the takedown
+    assert _rows(vt.read(snapshot_id=aid)) == [
+        ("c", "p2", 2), ("g", "p7", 7), ("i", "p9", 10)]
 
 
 def test_abandoned_staged_snapshot_gcd_at_expiry(spark, tmp_path):
