@@ -242,6 +242,13 @@ def _physical_buckets(pages_path: str) -> tuple[set[int], int | None] | None:
     return vals, declared
 
 
+# The versioned results tables' url layout (table properties, so
+# maintenance rewrites keep it): per-file min/max bounds and Bloom
+# filters on url, and url-sorted data files.
+URL_LAYOUT = {"stats_cols": ["url"], "bloom_cols": ["url"],
+              "sort_order": ["url"]}
+
+
 def run_extract_job(
     spark: SparkSession,
     pages_path: str,
@@ -253,9 +260,6 @@ def run_extract_job(
     fail_point: str = "group_start",
     versioned: bool = False,
     reextract_stale: bool = False,
-    stats_cols: tuple[str, ...] | None = ("url",),
-    stats_bloom_cols: tuple[str, ...] | None = ("url",),
-    sort_order: tuple[str, ...] | None = ("url",),
     io=None,
 ) -> dict:
     """Resumable driver loop: process pending buckets in groups.
@@ -282,14 +286,13 @@ def run_extract_job(
     its crashed predecessor), and any earlier snapshot id stays
     byte-stable for corpus pinning. Versioned results MUST be read
     through VersionedTable — a plain recursive parquet read of the root
-    would see every historical snapshot at once. ``stats_cols``
-    (versioned sink only) sets the table's file-statistics property:
-    per-file min/max bounds on the named columns make
-    ``read(where=[("url", "==", u)])`` takedowns/point lookups skip
-    non-matching result files driver-side; ``stats_bloom_cols`` adds
-    per-file BLOOM filters, the variant that bites on this url-HASH-
-    bucketed layout (bounds prune nothing when every file spans the
-    full url range).
+    would see every historical snapshot at once. The versioned sink
+    commits with ``URL_LAYOUT``: per-file url min/max bounds and BLOOM
+    filters make ``read(where=[("url", "==", u)])`` takedowns/point
+    lookups skip non-matching result files driver-side (the bloom is
+    the variant that bites on this url-HASH-bucketed layout, where
+    every file spans the full url range), and url-sorted files let the
+    pushed predicate skip row groups inside the survivors.
 
     Each group is one extraction plan over its buckets' rows; results are
     written with dynamic partition overwrite (idempotent), lineage/metrics
@@ -427,22 +430,9 @@ def run_extract_job(
         results = extract_pages(subset, n_buckets, salt_n, hot=hot).cache()
         out_cols = results.drop("extract_us", "input_bytes", "salt")
         if vt is not None:
-            # stats_cols: file-level min/max on url (versioned sink
-            # only) — a takedown/point lookup via read(where=[("url",
-            # "==", u)]) skips the result files whose bounds exclude
-            # it. sort_order: within-file url clustering — under the
-            # hash-bucketed layout file-level bounds prune nothing,
-            # but the pushed url predicate then skips ROW GROUPS
-            # inside each bloom-surviving file (and maintenance
-            # rewrites keep the clustering, it's a table property)
             vt.commit(out_cols, "bucket",
                       note=f"run {snapshot_id} buckets {group}",
-                      stats_cols=(list(stats_cols) if stats_cols
-                                  else None),
-                      bloom_cols=(list(stats_bloom_cols)
-                                  if stats_bloom_cols else None),
-                      sort_order=(list(sort_order) if sort_order
-                                  else None))
+                      **URL_LAYOUT)
         else:
             io.overwrite_partitions(out_cols, "results", ["bucket"])
         attempt = max(manifest.attempt_of(b) for b in group)

@@ -25,6 +25,11 @@ Composition (all pieces individually proven in rounds 1-3, wired here):
   sources/io.VersionedTable     -> one snapshot COMMIT per drop,
                                    partitioned by drop_id
 
+Everything after the WARC staging and before the done marker is ONE
+function, :func:`ingest_drop`; ``run_ingest_job`` calls it per drop and
+the streaming twin (streaming/ingest.py) per micro-batch, so the two
+jobs cannot drift apart.
+
 Exactly-once protocol (the load-bearing detail): the fingerprint
 history a drop dedups against is the union of the histories of DONE
 drops only — drops marked in the manifest — never whatever happens to
@@ -67,8 +72,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.plans.extract_job import extract_pages, lineage_of, metrics_of
-from ocr_spark.sources.io import TableIO, VersionedTable, atomic_write_json
+from ocr_spark.plans.extract_job import (URL_LAYOUT, extract_pages,
+                                        lineage_of, metrics_of)
+from ocr_spark.sources.io import (TableIO, VersionedTable, atomic_write_json,
+                                  next_attempt)
 
 
 class DropManifest:
@@ -100,14 +107,8 @@ class DropManifest:
             return None
 
     def attempt_of(self, drop: str) -> int:
-        p = os.path.join(self.root, f"drop-{drop}.attempts")
-        n = 0
-        if os.path.exists(p):
-            with open(p) as f:
-                n = int(f.read().strip() or 0)
-        with open(p, "w") as f:
-            f.write(str(n + 1))
-        return n + 1
+        """Next attempt number for a drop."""
+        return next_attempt(os.path.join(self.root, f"drop-{drop}.attempts"))
 
 
 def _list_drops(warc_dir: str) -> list[str]:
@@ -343,93 +344,6 @@ class IngestAuditError(RuntimeError):
         self.staged_snapshot = staged_snapshot
 
 
-def commit_drop_results(vt: VersionedTable, out_cols: DataFrame,
-                        recrawl: str, note: str,
-                        stats_cols: tuple[str, ...] | None = None,
-                        bloom_cols: tuple[str, ...] | None = None,
-                        sort_order: tuple[str, ...] | None = ("url",),
-                        audit=None,
-                        probe_partitions: list | None = None
-                        ) -> int | None:
-    """One results commit per drop under either recrawl policy — the
-    shared unit of the batch and streaming ingest jobs (semantics in
-    run_ingest_job's docstring). "append": one dynamic-overwrite commit
-    at the drop's partition. "merge_latest": rows (already one per url
-    — keep_latest_within_drop ran before extraction) merge by url into
-    the table; the FIRST commit of the table has nothing to merge onto
-    and commits plainly, and a crash replay of it re-merges identical
-    rows onto the keys its crashed attempt wrote (byte-identical
-    either way). Returns None when a merge_latest drop carried nothing
-    new — no snapshot exists for it, and the marker must record that
-    rather than borrow an earlier drop's id.
-
-    ``stats_cols`` sets the table's file-statistics property on plain
-    commits (the merge path inherits it from the table's bootstrap
-    commit); it turns on file-level min/max statistics so a takedown
-    or point lookup
-    (``vt.read(where=[("url", "==", u)])``) skips the data files whose
-    url bounds prove no match instead of scanning the corpus.
-    ``bloom_cols`` sets the per-file BLOOM property the same way — the
-    one that actually bites on this table: the extraction layout is
-    url-HASH-bucketed, so every file spans the full url range and the
-    min/max bounds prune nothing for a point lookup, while the bloom
-    skips every file that cannot hold the url (cost: one url-column
-    re-read of the drop's just-written files, bounded by the drop).
-    ``sort_order`` (default ``("url",)``) declares the table's WRITE
-    SORT ORDER: each data file comes out internally url-clustered
-    (task-local sort, no extra shuffle), so the pushed url predicate
-    additionally skips ROW GROUPS inside each bloom-surviving file —
-    and being a table property, maintenance rewrites (merge,
-    takedown, compaction) keep the clustering.
-
-    ``audit`` (write-audit-publish — ``recrawl="append"`` only; the
-    merge path commits inside ``merge_into`` and cannot stage) gates
-    the commit: the drop is committed STAGED (written but invisible to
-    every reader of the live table), ``audit`` is called with the
-    staged drop's rows (the exact DataFrame the published table would
-    gain), and only a truthy return publishes — one O(1) metadata
-    cherry-pick, no data rewrite. A falsy return raises
-    :class:`IngestAuditError` carrying the quarantined snapshot id.
-    Crash-safe like the rest of the protocol: a crash between publish
-    and the caller's done marker replays the drop, whose re-publish of
-    a fresh staged commit dynamic-overwrites the same partition with
-    identical rows; an abandoned staged snapshot is GC'd by
-    ``expire_snapshots``."""
-    if audit is not None and recrawl == "merge_latest":
-        raise ValueError(
-            "audit gate requires recrawl='append': merge_latest "
-            "commits inside VersionedTable.merge_into and cannot "
-            "stage")
-    if recrawl == "merge_latest" and vt.snapshots():
-        sid, _ = vt.merge_into(out_cols, ["url"],
-                               note=note + " (merge_latest)",
-                               probe_partitions=probe_partitions)
-        return sid
-    if audit is None:
-        return vt.commit(out_cols, "drop_id", note=note,
-                         stats_cols=list(stats_cols) if stats_cols
-                         else None,
-                         bloom_cols=list(bloom_cols) if bloom_cols
-                         else None,
-                         sort_order=list(sort_order) if sort_order
-                         else None)
-    staged_id = vt.commit(out_cols, "drop_id", note=note + " (staged)",
-                          staged=True,
-                          stats_cols=list(stats_cols) if stats_cols
-                          else None,
-                          bloom_cols=list(bloom_cols) if bloom_cols
-                          else None,
-                          sort_order=list(sort_order) if sort_order
-                          else None)
-    staged_parts = next(s for s in vt.snapshots()
-                        if s["id"] == staged_id)["parts"]
-    audit_df = vt.read(snapshot_id=staged_id,
-                       partitions=sorted(staged_parts))
-    if not audit(audit_df):
-        raise IngestAuditError(note, staged_id)
-    return vt.publish(staged_id, note=note)
-
-
 class UrlBucketIndex:
     """url-bucket -> results-partitions sidecar (VERDICT r4 #7): kills
     the merge_latest probe's per-drop corpus scan. 1024 coarse
@@ -562,15 +476,18 @@ def _freeze_neardup_params(out_dir: str, c: dict) -> dict:
 
 def apply_neardup_gate(spark: SparkSession, out_dir: str,
                        out_cols: DataFrame, done_drops: set[str],
-                       cfg: dict) -> tuple[DataFrame, DataFrame, int]:
+                       cfg: dict
+                       ) -> tuple[DataFrame, DataFrame, int, DataFrame]:
     """Drop-incremental NEAR-dup gate (the Bloom history's sibling for
     near-duplicates — operators/neardup.py): signature the drop's
     extracted docs, drop within-drop near-dups (greedy lowest-url
     survives) and docs matching the PERSISTED MinHash index of
     already-DONE drops, and return ``(kept out_cols, index rows of the
-    kept docs, n_dropped)``. The caller commits the index rows AFTER
-    the results commit (both pre-marker) as a partition-replace
-    snapshot of ``out_dir/neardup_index``, so replay converges.
+    kept docs, n_dropped, signatures)``. The caller commits the index
+    rows AFTER the results commit (both pre-marker) as a
+    partition-replace snapshot of ``out_dir/neardup_index``, so replay
+    converges, then unpersists ``signatures``: the persisted frame
+    the kept rows derive from.
 
     Exactly-once: the matching index view reads ONLY partitions of
     drops with a done marker — never disk state — so a replayed drop
@@ -612,10 +529,174 @@ def apply_neardup_gate(spark: SparkSession, out_dir: str,
             .select("url")).distinct()
     n_dropped = drop_ids.count()
     if n_dropped == 0:
-        return out_cols, rows, 0
+        return out_cols, rows, 0, rows
     kept = out_cols.join(drop_ids, "url", "left_anti")
     kept_rows = rows.join(drop_ids, "url", "left_anti")
-    return kept, kept_rows, n_dropped
+    return kept, kept_rows, n_dropped, rows
+
+
+def _check_policy(recrawl: str, audit) -> None:
+    """Reject a recrawl policy the drop unit cannot run, before any
+    drop starts."""
+    if recrawl not in ("append", "merge_latest"):
+        raise ValueError(
+            f"recrawl must be 'append' or 'merge_latest', got {recrawl!r}")
+    if audit is not None and recrawl == "merge_latest":
+        raise ValueError(
+            "audit gate requires recrawl='append': merge_latest "
+            "commits inside VersionedTable.merge_into and cannot "
+            "stage")
+
+
+def _compact_if_due(spark: SparkSession, out_dir: str,
+                    every: int | None) -> None:
+    """Run :func:`compact_history` once the history view spans
+    ``every`` directories (after a done marker; None never compacts)."""
+    if every is None:
+        return
+    done = DropManifest(os.path.join(out_dir, "_checkpoints")).done_drops()
+    if len(_history_view_dirs(out_dir, done)) >= every:
+        compact_history(spark, out_dir)
+
+
+# sub-keys a hot host fans out over in a drop's extraction
+SALT_N = 4
+
+
+def ingest_drop(spark: SparkSession, out_dir: str, drop: str,
+                pages: DataFrame, run_id: str, n_buckets: int,
+                recrawl: str = "append", audit=None,
+                neardup: dict | None = None
+                ) -> tuple[int | None, int, int]:
+    """Run one drop's ``pages`` through every step before its done
+    marker: the unit both ingest jobs share (``run_ingest_job`` per WARC
+    drop, ``run_streaming_ingest`` per micro-batch).
+
+    1. Exact content dedup against the fingerprint history of DONE
+       drops only (module docstring); under ``merge_latest``, then
+       ``keep_latest_within_drop``.
+    2. Extraction. The hot-host skew stats come from ``pages`` (url
+       column only): deriving them inside ``extract_pages`` would re-run
+       the dedup subtree.
+    3. The near-dup gate (``neardup``, see :func:`apply_neardup_gate`).
+    4. The results commit. ``append`` is one dynamic-overwrite commit at
+       the drop's partition. ``merge_latest`` merges the rows (one per
+       url) by url, probing only the partitions the url-bucket index
+       names plus the drop's own; the table's first commit has nothing
+       to merge onto and commits plainly.
+    5. The url-bucket index update (post-commit, pre-marker).
+    6. The attempt count, and the lineage and metrics appends tagged
+       with it.
+    7. The fingerprints of every page the drop carried, and the kept
+       docs' near-dup index rows.
+
+    A crash anywhere replays the whole unit to the same state: the
+    commits and the fingerprint write replace the drop's partition, and
+    the lineage/metrics appends carry the attempt, so
+    ``latest_metrics`` reads only the newest one. Plain commits set the
+    results table's ``URL_LAYOUT``: per-file url bounds and Bloom
+    filters let point lookups and takedowns
+    (``vt.read(where=[("url", "==", u)])``) skip files (on this
+    url-hash-bucketed layout only the Bloom filter prunes), and the url
+    sort order lets the pushed predicate skip row groups too.
+
+    ``audit`` (write-audit-publish, ``append`` only) commits the drop
+    STAGED, calls ``audit`` with exactly the rows the published table
+    would gain, and publishes only on a truthy return (one metadata
+    cherry-pick, no data rewrite). A falsy return raises
+    :class:`IngestAuditError` carrying the quarantined snapshot id; the
+    drop stays unmarked. A crash between publish and the marker replays
+    the drop, whose fresh staged commit overwrites the same partition
+    with identical rows.
+
+    Returns ``(snapshot_id, attempt, neardup_dropped)``; ``snapshot_id``
+    is None when a merge_latest drop carried nothing new, and the marker
+    must record that rather than borrow an earlier drop's id. Cached
+    frames are released on every exit."""
+    from ocr_spark.functions.bucketing import SKEW_FACTOR, hot_hosts
+    from ocr_spark.operators.dedup import dedup_incremental_vs_hashes
+
+    vt = VersionedTable(spark, os.path.join(out_dir, "results"))
+    manifest = DropManifest(os.path.join(out_dir, "_checkpoints"))
+    done = manifest.done_drops()
+    new_pages = pages
+    hist_dirs = _history_view_dirs(out_dir, done)
+    if hist_dirs:
+        new_pages = dedup_incremental_vs_hashes(
+            pages, spark.read.parquet(*hist_dirs).select("_h"),
+            _content_key())
+    if recrawl == "merge_latest":
+        # one capture per url BEFORE extraction (losers are never
+        # extracted), unconditionally — including the table's first
+        # drop, so the one-row-per-url contract holds from commit 1
+        new_pages = keep_latest_within_drop(new_pages)
+    results = extract_pages(new_pages, n_buckets, SALT_N,
+                            hot=hot_hosts(pages, SKEW_FACTOR)).cache()
+    nd_rows = signatures = None
+    nd_dropped = 0
+    try:
+        out_cols = (results.drop("extract_us", "input_bytes", "salt")
+                    .withColumn("drop_id", F.lit(drop)))
+        if neardup is not None:
+            out_cols, nd_rows, nd_dropped, signatures = apply_neardup_gate(
+                spark, out_dir, out_cols, done, neardup)
+        note = f"ingest {run_id} drop {drop}"
+        uidx = UrlBucketIndex(out_dir)
+        drop_bks = None
+        if recrawl == "merge_latest" and vt.snapshots():
+            if uidx.load() is None:
+                uidx.bootstrap(vt)
+            drop_bks = uidx.buckets_of(out_cols)
+            probe = sorted(set(uidx.partitions_for(drop_bks) or [])
+                           | {drop})
+            sid, _ = vt.merge_into(out_cols, ["url"],
+                                   note=note + " (merge_latest)",
+                                   probe_partitions=probe)
+        elif audit is None:
+            sid = vt.commit(out_cols, "drop_id", note=note, **URL_LAYOUT)
+        else:
+            staged_id = vt.commit(out_cols, "drop_id",
+                                  note=note + " (staged)", staged=True,
+                                  **URL_LAYOUT)
+            parts = next(s for s in vt.snapshots()
+                         if s["id"] == staged_id)["parts"]
+            if not audit(vt.read(snapshot_id=staged_id,
+                                 partitions=sorted(parts))):
+                raise IngestAuditError(note, staged_id)
+            sid = vt.publish(staged_id, note=note)
+        if recrawl == "merge_latest":
+            if drop_bks is None:  # the table's first commit
+                if uidx.load() is None:
+                    uidx.bootstrap(vt)  # covers this drop
+                    drop_bks = []
+                else:
+                    drop_bks = uidx.buckets_of(out_cols)
+            uidx.update(drop_bks, drop)
+        attempt = manifest.attempt_of(drop)
+        io = TableIO(spark, out_dir)
+        io.append(lineage_of(results, attempt, f"{run_id}:{sid}"),
+                  "lineage")
+        io.append(metrics_of(results, attempt, f"{run_id}:{sid}"),
+                  "metrics")
+        # fingerprints of EVERY page the drop carried (not only the
+        # extracted survivors): all of it is now "seen" for later
+        # drops. Plain per-drop overwrite: idempotent under replay.
+        (pages.select(_content_key().alias("_h")).distinct()
+         .write.mode("overwrite")
+         .parquet(os.path.join(out_dir, "_history", f"drop={drop}")))
+        if nd_rows is not None:
+            # partition replace, so replay converges; the gate's
+            # matching view read done drops only, so a replayed drop
+            # never matches its own crashed attempt's partition
+            ndvt = VersionedTable(
+                spark, os.path.join(out_dir, "neardup_index"))
+            ndvt.commit(nd_rows.withColumn("drop_id", F.lit(drop)),
+                        "drop_id", note=f"neardup {run_id} drop {drop}")
+    finally:
+        if signatures is not None:
+            signatures.unpersist()
+        results.unpersist()
+    return sid, attempt, nd_dropped
 
 
 def run_ingest_job(
@@ -623,29 +704,23 @@ def run_ingest_job(
     warc_dir: str,
     out_dir: str,
     n_buckets: int = 32,
-    salt_n: int = 4,
-    bloom_bits: int = 1 << 20,
     fail_after_drops: int | None = None,
-    fail_point: str = "drop_start",
     compact_history_every: int | None = None,
-    keep_staged: bool = False,
     recrawl: str = "append",
-    stats_cols: tuple[str, ...] | None = ("url",),
-    stats_bloom_cols: tuple[str, ...] | None = ("url",),
     audit=None,
     neardup: dict | None = None,
 ) -> dict:
     """Process every pending drop under ``warc_dir`` (see module
-    docstring for the protocol). Returns a status dict. Read results
-    ONLY through ``VersionedTable(spark, out_dir + "/results")`` —
-    ``read()`` is the latest exactly-once view, ``read(snapshot_id=k)``
-    pins the corpus as of commit k.
+    docstring for the protocol), each through :func:`ingest_drop`.
+    Returns a status dict. Read results ONLY through
+    ``VersionedTable(spark, out_dir + "/results")`` — ``read()`` is the
+    latest exactly-once view, ``read(snapshot_id=k)`` pins the corpus as
+    of commit k.
 
-    ``fail_after_drops``/``fail_point`` inject the resume test's crash:
-    ``drop_start`` stops cleanly before the (N+1)-th drop;
-    ``pre_mark`` stops INSIDE the N-th drop after the snapshot commit
-    and the fingerprint write but before the done marker — the
-    worst-case window the exactly-once protocol exists for.
+    ``fail_after_drops=N`` injects the resume test's crash: the run
+    stops INSIDE the N-th drop, after its unit (snapshot commit,
+    fingerprint write) but before its done marker — the worst-case
+    window the exactly-once protocol exists for.
 
     ``recrawl`` picks the results-table policy for re-captured URLs:
 
@@ -670,24 +745,7 @@ def run_ingest_job(
       onto keys its crashed attempt wrote — byte-identical either way.
       A drop whose every page was already seen commits nothing (its
       done marker records ``snapshot_id: None``), so "one snapshot per
-      drop" holds for drops that carry any new content. Scale note:
-      the merge's matched-partition probe semi-joins the drop's urls
-      against the live table's (url, drop_id) columns — one
-      column-pruned corpus scan per drop, the price Iceberg MERGE
-      pays too; at extreme drop cadence, batch drops or maintain a
-      url->partition side index.
-
-    ``stats_cols`` (default ``("url",)``) sets the results table's
-    file-statistics property: per-file min/max bounds, harvested from
-    the parquet footers at commit, let
-    ``vt.read(where=[("url", "==", u)])`` takedowns and point lookups
-    skip the data files whose bounds prove no match instead of
-    scanning the corpus; ``None`` disables. ``stats_bloom_cols``
-    (default ``("url",)``; distinct from ``bloom_bits``, the
-    incremental-dedup mask) adds per-file BLOOM filters — on this
-    url-HASH-bucketed layout the bounds prune nothing for a point
-    lookup (every file spans the full url range) while the bloom
-    skips every file that cannot hold the url.
+      drop" holds for drops that carry any new content.
 
     ``neardup`` (dict, keys ``threshold``/``n_hashes``/``band_size``/
     ``shingle_k``, see NEARDUP_DEFAULTS; ``None`` disables) turns on
@@ -700,34 +758,24 @@ def run_ingest_job(
     contracts. Done markers record ``neardup_dropped`` per drop.
 
     ``audit`` (write-audit-publish, ``recrawl="append"`` only — see
-    ``commit_drop_results``): a callable ``(DataFrame) -> bool`` run
-    on each drop's STAGED rows before they become visible; a falsy
-    return stops the job with ``completed: False`` and a
-    ``quarantined`` record naming the drop and its staged snapshot id
-    (inspectable via ``VersionedTable.read(snapshot_id=...)``, GC'd by
-    expiry, NEVER visible to live readers), and the drop stays
-    pending — a later run re-stages and re-audits it."""
-    from ocr_spark.operators.dedup import dedup_incremental_vs_hashes
+    :func:`ingest_drop`): a callable ``(DataFrame) -> bool`` run on
+    each drop's STAGED rows before they become visible; a falsy return
+    stops the job with ``completed: False`` and a ``quarantined``
+    record naming the drop and its staged snapshot id (inspectable via
+    ``VersionedTable.read(snapshot_id=...)``, GC'd by expiry, NEVER
+    visible to live readers), and the drop stays pending — a later run
+    re-stages and re-audits it."""
+    import shutil
+
     from ocr_spark.sources.warc import read_warc
 
-    if recrawl not in ("append", "merge_latest"):
-        raise ValueError(
-            f"recrawl must be 'append' or 'merge_latest', got {recrawl!r}")
-    io = TableIO(spark, out_dir)
-    vt = VersionedTable(spark, os.path.join(out_dir, "results"))
+    _check_policy(recrawl, audit)
     manifest = DropManifest(os.path.join(out_dir, "_checkpoints"))
-    hist_root = os.path.join(out_dir, "_history")
     run_id = uuid.uuid4().hex[:12]
-
     done = manifest.done_drops()
     pending = [d for d in _list_drops(warc_dir) if d not in done]
 
-    n_done = 0
     for di, drop in enumerate(pending):
-        if fail_after_drops is not None and di >= fail_after_drops \
-                and fail_point == "drop_start":
-            return {"completed": False, "drops_done":
-                    sorted(manifest.done_drops()), "run_id": run_id}
         drop_path = os.path.join(warc_dir, drop)
         # STAGE the drop once: gzip members are not splittable and each
         # pass over raw WARC re-parses every record, so the one WARC
@@ -740,118 +788,28 @@ def run_ingest_job(
         else:
             raw = read_warc(spark, warc_dir, glob=drop)
         raw.write.mode("overwrite").parquet(staged)
-        pages = spark.read.parquet(staged)
-        # history = fingerprints of DONE drops ONLY (never disk state):
-        # a replayed drop must dedup against exactly what the crashed
-        # attempt did, or resume diverges (module docstring)
-        hist_dirs = _history_view_dirs(out_dir, manifest.done_drops())
-        if hist_dirs:
-            hist_h = spark.read.parquet(*hist_dirs).select("_h")
-            new_pages = dedup_incremental_vs_hashes(
-                pages, hist_h, _content_key(), n_bits=bloom_bits)
-        else:
-            new_pages = pages
-        if recrawl == "merge_latest":
-            # one capture per url BEFORE extraction (losers are never
-            # extracted), unconditionally — including the table's first
-            # drop, so the one-row-per-url contract holds from commit 1
-            # and a crash replay of any drop reproduces the same winners
-            new_pages = keep_latest_within_drop(new_pages)
-        # skew stats from the STAGED table (url column only), not from
-        # new_pages — letting extract_pages derive them internally would
-        # re-run the whole Bloom+anti-join subtree just to count hosts
-        # (caught in the captured plan, docs/PLANS.md ingest_drop_
-        # pipeline); the superset is equally valid skew evidence
-        from ocr_spark.functions.bucketing import SKEW_FACTOR, hot_hosts
-        results = extract_pages(new_pages, n_buckets, salt_n,
-                                hot=hot_hosts(pages, SKEW_FACTOR)).cache()
-        out_cols = (results.drop("extract_us", "input_bytes", "salt")
-                    .withColumn("drop_id", F.lit(drop)))
-        nd_rows, nd_dropped = None, 0
-        if neardup is not None:
-            out_cols, nd_rows, nd_dropped = apply_neardup_gate(
-                spark, out_dir, out_cols, manifest.done_drops(),
-                neardup)
-        probe = drop_bks = None
-        if recrawl == "merge_latest" and vt.snapshots():
-            # url-bucket side index bounds the merge probe; the drop's
-            # own partition joins the set for crash-replay safety
-            # (class docstring's superset argument)
-            uidx = UrlBucketIndex(out_dir)
-            if uidx.load() is None:
-                uidx.bootstrap(vt)
-            drop_bks = uidx.buckets_of(out_cols)
-            probe = sorted(set(uidx.partitions_for(drop_bks) or [])
-                           | {drop})
         try:
-            sid = commit_drop_results(vt, out_cols, recrawl,
-                                      f"ingest {run_id} drop {drop}",
-                                      stats_cols=stats_cols,
-                                      bloom_cols=stats_bloom_cols,
-                                      audit=audit,
-                                      probe_partitions=probe)
+            sid, _, nd_dropped = ingest_drop(
+                spark, out_dir, drop, spark.read.parquet(staged), run_id,
+                n_buckets, recrawl, audit, neardup)
         except IngestAuditError as e:
-            results.unpersist()
-            if nd_rows is not None:
-                nd_rows.unpersist()
             return {"completed": False, "run_id": run_id,
                     "drops_done": sorted(manifest.done_drops()),
                     "quarantined": {"drop": drop,
                                     "staged_snapshot": e.staged_snapshot}}
-        if recrawl == "merge_latest":
-            # index update post-commit / pre-marker: a crash in between
-            # replays the drop, whose probe explicitly includes it
-            uidx = UrlBucketIndex(out_dir)
-            if drop_bks is None:
-                if uidx.load() is None:
-                    uidx.bootstrap(vt)  # covers the first-commit drop
-                    drop_bks = []
-                else:
-                    drop_bks = uidx.buckets_of(out_cols)
-            uidx.update(drop_bks, drop)
-        attempt = manifest.attempt_of(drop)
-        io.append(lineage_of(results, attempt, f"{run_id}:{sid}"),
-                  "lineage")
-        io.append(metrics_of(results, attempt, f"{run_id}:{sid}"),
-                  "metrics")
-        # fingerprints of EVERY page the drop carried (not only the
-        # extracted survivors): all of it is now "seen" for later
-        # drops. Plain per-drop overwrite: idempotent under replay.
-        (pages.select(_content_key().alias("_h")).distinct()
-         .write.mode("overwrite")
-         .parquet(os.path.join(hist_root, f"drop={drop}")))
-        if nd_rows is not None:
-            # kept docs' signatures join the index BEFORE the marker
-            # (partition replace — replay converges); the matching view
-            # above read done-marker drops only, so a replayed drop
-            # never matches its own crashed attempt's partition
-            ndvt = VersionedTable(
-                spark, os.path.join(out_dir, "neardup_index"))
-            ndvt.commit(nd_rows.withColumn("drop_id", F.lit(drop)),
-                        "drop_id", note=f"neardup {run_id} drop {drop}")
-            nd_rows.unpersist()
-        results.unpersist()
-        if fail_after_drops is not None and di + 1 >= fail_after_drops \
-                and fail_point == "pre_mark":
+        if fail_after_drops is not None and di + 1 >= fail_after_drops:
             return {"completed": False, "drops_done":
                     sorted(manifest.done_drops()), "run_id": run_id}
         info = {"run_id": run_id, "snapshot_id": sid}
         if neardup is not None:
             info["neardup_dropped"] = nd_dropped
         manifest.mark_done(drop, info)
-        n_done += 1
-        if not keep_staged:
-            # the staged table served this drop only; a replay re-stages
-            # from the WARC source, so post-marker deletion is safe and
-            # keeps disk bounded by the in-flight drop
-            import shutil
-            shutil.rmtree(staged, ignore_errors=True)
-        if (compact_history_every is not None
-                and len(_history_view_dirs(
-                    out_dir, manifest.done_drops()))
-                >= compact_history_every):
-            compact_history(spark, out_dir)
+        # the staged table served this drop only; a replay re-stages
+        # from the WARC source, so post-marker deletion is safe and
+        # keeps disk bounded by the in-flight drop
+        shutil.rmtree(staged, ignore_errors=True)
+        _compact_if_due(spark, out_dir, compact_history_every)
 
     return {"completed": True,
             "drops_done": sorted(manifest.done_drops()),
-            "run_id": run_id, "drops_run": n_done}
+            "run_id": run_id, "drops_run": len(pending)}

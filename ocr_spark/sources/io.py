@@ -201,6 +201,20 @@ def atomic_write_json(path: str, obj, **dump_kw) -> None:
     os.replace(tmp, path)
 
 
+def next_attempt(path: str) -> int:
+    """Bump the attempt counter file at ``path`` and return the new
+    count (1 when the file is absent). The write goes through
+    :func:`atomic_write_json`, so a write that fails leaves the previous
+    count readable instead of an empty file that reads as 0 (which
+    would hand a retry an earlier attempt's number)."""
+    n = 0
+    if os.path.exists(path):
+        with open(path) as f:
+            n = int(f.read().strip() or 0)
+    atomic_write_json(path, n + 1)
+    return n + 1
+
+
 def _read_json(path: str, default=None):
     """The JSON at ``path``, or ``default`` when the file is absent."""
     if not os.path.exists(path):
@@ -249,15 +263,9 @@ class CheckpointManifest:
                           {"bucket": bucket, "ts": time.time(), **info})
 
     def attempt_of(self, bucket: int) -> int:
-        """Next attempt number for a bucket (counts prior attempt files)."""
-        p = os.path.join(self.root, f"bucket-{bucket}.attempts")
-        n = 0
-        if os.path.exists(p):
-            with open(p) as f:
-                n = int(f.read().strip() or 0)
-        with open(p, "w") as f:
-            f.write(str(n + 1))
-        return n + 1
+        """Next attempt number for a bucket."""
+        return next_attempt(
+            os.path.join(self.root, f"bucket-{bucket}.attempts"))
 
 
 class CommitConflict(RuntimeError):

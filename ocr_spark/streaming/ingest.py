@@ -1,33 +1,25 @@
 """Structured Streaming twin of the daily-ingest job: a file-source
 ``readStream`` over the pages directory, ``foreachBatch`` running the
-SAME per-drop unit as ``plans/ingest_job.run_ingest_job`` (Bloom
-incremental dedup vs committed history -> narrow extraction -> one
-VersionedTable snapshot per micro-batch), with ``Trigger.AvailableNow``
-for bounded runs and unchanged continuous triggers on a real cluster.
+SAME per-drop unit as ``plans/ingest_job.run_ingest_job``
+(``ingest_drop``: incremental dedup vs committed history -> narrow
+extraction -> one VersionedTable snapshot per micro-batch), with
+``Trigger.AvailableNow`` for bounded runs and unchanged continuous
+triggers on a real cluster.
 
-This is the reference upload endpoint (/root/reference/ocr_project/
-ocr_app/views.py:18-26) at its most literal: files land in a directory,
-each micro-batch of new files becomes one pinnable snapshot, and pages
-whose bytes were already extracted in an earlier COMMITTED batch are
-never extracted or stored twice.
+This is the upload endpoint at its most literal: files land in a
+directory, each micro-batch of new files becomes one pinnable snapshot,
+and pages whose bytes were already extracted in an earlier COMMITTED
+batch are never extracted or stored twice.
 
 Exactly-once under foreachBatch's at-least-once contract (the
 load-bearing detail): Spark's streaming checkpoint commits a batch only
 AFTER the foreachBatch callback returns, so a crash anywhere inside the
 callback replays the whole micro-batch — same batch_id, same files (the
-file source logs its offsets before processing). The callback is
-therefore built to be a pure function of (batch files, DONE-batch
-history):
-
-  * history = fingerprints of batches with a done marker ONLY (never
-    whatever sits on disk) — a replay dedups against exactly what the
-    crashed attempt did and reproduces the same rows;
-  * the VersionedTable commit shadows the crashed attempt's snapshot
-    copy-on-write at the same ``drop_id`` partition;
-  * the per-batch fingerprint write is an idempotent overwrite;
-  * the done marker is written LAST, so the one remaining window —
-    crash after our marker but before Spark's checkpoint commit —
-    replays into an early-return no-op.
+file source logs its offsets before processing). ``ingest_drop`` is a
+pure function of (batch files, DONE-batch history) whose writes are
+idempotent per batch, and the done marker is written LAST, so the one
+remaining window — crash after our marker but before Spark's checkpoint
+commit — replays into an early-return no-op.
 
 Scale shape: identical to the batch job (per-batch cost bounded by the
 batch, history side is an 8-byte hash column, blobs never shuffle);
@@ -43,10 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.plans.extract_job import extract_pages, lineage_of, metrics_of
 from ocr_spark.plans.ingest_job import (
-    DropManifest, _content_key, _history_view_dirs, commit_drop_results)
-from ocr_spark.sources.io import TableIO, VersionedTable
+    DropManifest, _check_policy, _compact_if_due, ingest_drop)
 
 
 class InjectedCrash(RuntimeError):
@@ -60,14 +50,10 @@ def run_streaming_ingest(
     out_dir: str,
     checkpoint: str,
     n_buckets: int = 16,
-    salt_n: int = 4,
-    bloom_bits: int = 1 << 20,
     max_files_per_trigger: int = 1,
     fail_once_pre_mark_at: int | None = None,
     compact_history_every: int | None = None,
     recrawl: str = "append",
-    stats_cols: tuple[str, ...] | None = ("url",),
-    stats_bloom_cols: tuple[str, ...] | None = ("url",),
     audit=None,
     neardup: dict | None = None,
     allowed_lateness_s: float | None = None,
@@ -82,44 +68,24 @@ def run_streaming_ingest(
     inside the worst-case crash window; the restarted query replays the
     batch (same id, same files) and must converge byte-identically.
 
-    ``recrawl`` mirrors ``run_ingest_job`` (see its docstring for the
-    exact latest-NOVEL-content semantics and scale notes): "append"
-    keeps every content-distinct capture; "merge_latest" keeps ONE row
-    per url — within-batch winners chosen pre-extraction, merged via
-    ``VersionedTable.merge_into`` (a replayed batch re-merges the same
-    winners onto keys its crashed attempt wrote — identical values, so
-    the at-least-once replay still converges byte-identically).
+    ``recrawl``, ``neardup`` and ``audit`` mean what they mean for
+    ``run_ingest_job``, per micro-batch. A falsy ``audit`` return raises
+    out of foreachBatch: the query stops with the quarantined snapshot
+    id in the error, the batch is NOT marked done, and a restart replays
+    it (re-stage, re-audit); until the audit passes, live readers never
+    see the batch.
 
-    ``audit`` (write-audit-publish, ``recrawl="append"`` only — see
-    ``commit_drop_results``): each micro-batch commits STAGED, the
-    audit sees exactly the rows the published table would gain, and a
-    falsy return raises out of foreachBatch — the query stops with the
-    quarantined snapshot id in the error, the batch is NOT marked
-    done, and a restart replays it (re-stage, re-audit); until the
-    audit passes, live readers never see the batch.
-
-    ``neardup`` mirrors ``run_ingest_job``'s drop-incremental near-dup
-    gate (``apply_neardup_gate`` — the shared unit): per micro-batch,
-    within-batch near-dups and near-dups of already-DONE batches'
-    persisted MinHash index are excluded from the commit, kept docs'
-    signatures join the index pre-marker; a replayed batch never
-    matches its own crashed attempt's index partition because the
-    matching view is done-marker-gated.
+    ``allowed_lateness_s`` turns on the event-time watermark: pages
+    older than the newest done batch's ``max_warc_ts`` minus the
+    lateness are quarantined to ``late_pages/``, dropped, or accepted
+    with a count (``late_policy``).
     """
-    from ocr_spark.functions.bucketing import SKEW_FACTOR, hot_hosts
-    from ocr_spark.operators.dedup import dedup_incremental_vs_hashes
-
     if late_policy not in ("quarantine", "drop", "accept"):
         raise ValueError(
             f"late_policy must be quarantine/drop/accept, "
             f"got {late_policy!r}")
-    if recrawl not in ("append", "merge_latest"):
-        raise ValueError(
-            f"recrawl must be 'append' or 'merge_latest', got {recrawl!r}")
-    io = TableIO(spark, out_dir)
-    vt = VersionedTable(spark, os.path.join(out_dir, "results"))
+    _check_policy(recrawl, audit)
     manifest = DropManifest(os.path.join(out_dir, "_checkpoints"))
-    hist_root = os.path.join(out_dir, "_history")
     ran: list[str] = []
 
     def _event_watermark() -> float | None:
@@ -139,24 +105,18 @@ def run_streaming_ingest(
         drop = f"batch-{batch_id:06d}"
         if drop in manifest.done_drops():
             return  # replay of a batch that crashed post-mark: no-op
-        attempt = manifest.attempt_of(drop)
         base = batch_df.persist()  # unpersist target (pages may narrow)
         pages = base
         late_n = 0
         batch_max_ts = None
         try:
             if allowed_lateness_s is not None:
-                # event-time watermark + late-arrival policy: pages
-                # whose warc_ts predates the watermark are quarantined
-                # to a side table (reprocessable), dropped, or
-                # accepted-with-count — a continuously-running ingest
-                # has a bounded-state answer for stragglers instead of
-                # silently folding months-old captures into today's
-                # snapshot. Epochs compared as seconds (timestamp cast
-                # to double) so the marker value is engine-stable.
-                # NTZ timestamps cast to epoch via TIMESTAMP (wall
-                # clock in the session tz — fixed per deployment, so
-                # replays compute identical epochs)
+                # pages whose warc_ts predates the watermark go to the
+                # late policy instead of folding months-old captures
+                # into today's snapshot. Epochs compared as seconds
+                # (timestamp cast to double, wall clock in the session
+                # tz — fixed per deployment, so replays compute
+                # identical epochs and the marker value is stable)
                 ts = F.col("warc_ts").cast("timestamp").cast("double")
                 row = pages.agg(F.max(ts).alias("m")).collect()[0]
                 batch_max_ts = (float(row["m"])
@@ -177,78 +137,9 @@ def run_streaming_ingest(
                         # would silently drop it with the stragglers
                         pages = pages.where(~is_late
                                             | F.col("warc_ts").isNull())
-            hist_dirs = _history_view_dirs(out_dir,
-                                           manifest.done_drops())
-            if hist_dirs:
-                hist_h = spark.read.parquet(*hist_dirs).select("_h")
-                new_pages = dedup_incremental_vs_hashes(
-                    pages, hist_h, _content_key(), n_bits=bloom_bits)
-            else:
-                new_pages = pages
-            if recrawl == "merge_latest":
-                # one capture per url BEFORE extraction, unconditionally
-                # (incl. batch 0) — same rationale as run_ingest_job
-                from ocr_spark.plans.ingest_job import (
-                    keep_latest_within_drop)
-                new_pages = keep_latest_within_drop(new_pages)
-            # skew stats once, from the batch itself (url column only) —
-            # same rationale as run_ingest_job: deriving them inside
-            # extract_pages would re-run the dedup subtree
-            results = extract_pages(new_pages, n_buckets, salt_n,
-                                    hot=hot_hosts(pages, SKEW_FACTOR)
-                                    ).cache()
-            out_cols = (results.drop("extract_us", "input_bytes", "salt")
-                        .withColumn("drop_id", F.lit(drop)))
-            nd_rows, nd_dropped = None, 0
-            if neardup is not None:
-                from ocr_spark.plans.ingest_job import apply_neardup_gate
-                out_cols, nd_rows, nd_dropped = apply_neardup_gate(
-                    spark, out_dir, out_cols, manifest.done_drops(),
-                    neardup)
-            probe = drop_bks = None
-            if recrawl == "merge_latest" and vt.snapshots():
-                # url-bucket side index bounds the merge probe (see
-                # plans/ingest_job.UrlBucketIndex — shared discipline:
-                # recorded post-commit/pre-marker, own partition added
-                # for replay safety)
-                from ocr_spark.plans.ingest_job import UrlBucketIndex
-                uidx = UrlBucketIndex(out_dir)
-                if uidx.load() is None:
-                    uidx.bootstrap(vt)
-                drop_bks = uidx.buckets_of(out_cols)
-                probe = sorted(
-                    set(uidx.partitions_for(drop_bks) or []) | {drop})
-            sid = commit_drop_results(vt, out_cols, recrawl,
-                                      f"stream batch {batch_id}",
-                                      stats_cols=stats_cols,
-                                      bloom_cols=stats_bloom_cols,
-                                      audit=audit,
-                                      probe_partitions=probe)
-            io.append(lineage_of(results, attempt, f"stream:{sid}"),
-                      "lineage")
-            io.append(metrics_of(results, attempt, f"stream:{sid}"),
-                      "metrics")
-            if recrawl == "merge_latest":
-                from ocr_spark.plans.ingest_job import UrlBucketIndex
-                uidx = UrlBucketIndex(out_dir)
-                if drop_bks is None:
-                    if uidx.load() is None:
-                        uidx.bootstrap(vt)  # first-commit batch
-                        drop_bks = []
-                    else:
-                        drop_bks = uidx.buckets_of(out_cols)
-                uidx.update(drop_bks, drop)
-            (pages.select(_content_key().alias("_h")).distinct()
-             .write.mode("overwrite")
-             .parquet(os.path.join(hist_root, f"drop={drop}")))
-            if nd_rows is not None:
-                ndvt = VersionedTable(
-                    spark, os.path.join(out_dir, "neardup_index"))
-                ndvt.commit(nd_rows.withColumn("drop_id", F.lit(drop)),
-                            "drop_id",
-                            note=f"neardup stream batch {batch_id}")
-                nd_rows.unpersist()
-            results.unpersist()
+            sid, attempt, nd_dropped = ingest_drop(
+                spark, out_dir, drop, pages, "stream", n_buckets,
+                recrawl, audit, neardup)
         finally:
             base.unpersist()
         if fail_once_pre_mark_at == batch_id and attempt == 1:
@@ -261,12 +152,7 @@ def run_streaming_ingest(
             info["late_pages"] = late_n
         manifest.mark_done(drop, info)
         ran.append(drop)
-        if (compact_history_every is not None
-                and len(_history_view_dirs(out_dir,
-                                            manifest.done_drops()))
-                >= compact_history_every):
-            from ocr_spark.plans.ingest_job import compact_history
-            compact_history(spark, out_dir)
+        _compact_if_due(spark, out_dir, compact_history_every)
 
     try:
         schema = spark.read.parquet(pages_dir).schema

@@ -88,7 +88,7 @@ def test_ingest_two_drops_crash_resume_byte_identical(spark, tmp_path):
     # --- crashed run + resume ---
     out_b = str(tmp_path / "b")
     st1 = run_ingest_job(spark, drops, out_b, n_buckets=8,
-                         fail_after_drops=1, fail_point="pre_mark")
+                         fail_after_drops=1)
     assert st1["completed"] is False
     assert st1["drops_done"] == []  # committed but unmarked
     snap1_before = _latest(spark, out_b, snapshot_id=1)
@@ -206,7 +206,7 @@ def test_ingest_merge_latest_recrawl(spark, tmp_path):
     out_b = str(tmp_path / "b")
     st1 = run_ingest_job(spark, drops, out_b, n_buckets=8,
                          recrawl="merge_latest",
-                         fail_after_drops=2, fail_point="pre_mark")
+                         fail_after_drops=2)
     assert st1["completed"] is False
     st2 = run_ingest_job(spark, drops, out_b, n_buckets=8,
                          recrawl="merge_latest")
@@ -217,7 +217,7 @@ def test_ingest_merge_latest_recrawl(spark, tmp_path):
     out_c = str(tmp_path / "c")
     st3 = run_ingest_job(spark, drops, out_c, n_buckets=8,
                          recrawl="merge_latest",
-                         fail_after_drops=1, fail_point="pre_mark")
+                         fail_after_drops=1)
     assert st3["completed"] is False
     st4 = run_ingest_job(spark, drops, out_c, n_buckets=8,
                          recrawl="merge_latest")
@@ -418,8 +418,8 @@ def test_retract_drop_guards(spark, tmp_path):
 
 def test_ingest_url_stats_power_point_lookup_and_takedown(spark, tmp_path):
     """The ingest jobs set the results table's file-statistics property
-    on url by default (stats_cols=("url",), shared by the streaming
-    twin via commit_drop_results): with drops whose url ranges are
+    on url (URL_LAYOUT, committed by ingest_drop, the unit the streaming
+    twin shares): with drops whose url ranges are
     lexically disjoint, a point lookup / takedown via
     read(where=[("url", "==", u)]) skips the other drops' files
     driver-side instead of scanning the corpus — and the takedown

@@ -160,8 +160,12 @@ def _urls(spark, out):
 def test_ingest_neardup_gate_drops_cross_and_within(spark, tmp_path):
     drops = _drops(tmp_path)
     out = str(tmp_path / "out")
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
     st = run_ingest_job(spark, drops, out, n_buckets=8, neardup=_ND)
     assert st["completed"]
+    # every drop releases what it cached, the gate's signatures included
+    assert jsc.getPersistentRDDs().size() <= persisted
     assert _urls(spark, out) == ["a", "b", "c", "d1"]
     # index holds ONLY kept docs, partitioned by drop
     nd = VersionedTable(spark, os.path.join(out, "neardup_index"))
@@ -188,7 +192,7 @@ def test_ingest_neardup_replay_never_matches_itself(spark, tmp_path):
 
     out_b = str(tmp_path / "b")
     st1 = run_ingest_job(spark, drops, out_b, n_buckets=8, neardup=_ND,
-                         fail_after_drops=2, fail_point="pre_mark")
+                         fail_after_drops=2)
     assert not st1["completed"]
     # the hazard is real: the crashed attempt's index partition exists
     nd = VersionedTable(spark, os.path.join(out_b, "neardup_index"))

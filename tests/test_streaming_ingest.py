@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -119,6 +120,49 @@ def test_streaming_ingest_crash_resume_byte_identical(spark, tmp_path):
     # (d) nothing pending
     st3 = run_streaming_ingest(spark, stream, out_b, ck_b, n_buckets=4)
     assert st3["batches_run"] == []
+
+
+def test_streaming_ingest_audit_rejects_then_publishes_once(spark,
+                                                            tmp_path):
+    """audit= on the streaming twin: a rejecting audit raises out of the
+    query, leaves the batch unmarked and the live view unchanged, keeps
+    the staged rows readable at their own pin and releases the batch's
+    cached frames. A restart under a passing audit then publishes the
+    batch exactly once."""
+    from ocr_spark.plans.ingest_job import DropManifest
+
+    stream = _seed_stream(tmp_path)
+    out_ref = str(tmp_path / "ref")
+    run_streaming_ingest(spark, stream, out_ref, str(tmp_path / "ck_ref"),
+                         n_buckets=4)
+    ref = _latest(spark, out_ref)
+    batch0 = [r for r in ref if r[1] == "batch-000000"]
+
+    out = str(tmp_path / "o")
+    ck = str(tmp_path / "ck")
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    # batch 0 carries three new docs and passes; batch 1 carries two
+    with pytest.raises(Exception, match="audit rejected") as err:
+        run_streaming_ingest(spark, stream, out, ck, n_buckets=4,
+                             audit=lambda df: df.count() >= 3)
+    assert jsc.getPersistentRDDs().size() <= persisted
+    man = DropManifest(os.path.join(out, "_checkpoints"))
+    assert man.done_drops() == {"batch-000000"}
+    assert _latest(spark, out) == batch0
+    staged = int(re.search(r"snapshot (\d+) left quarantined",
+                           str(err.value)).group(1))
+    assert ({u for u, d, _ in _latest(spark, out, snapshot_id=staged)
+             if d == "batch-000001"}
+            == {"https://s.example.com/u4", "https://s.example.com/u5"})
+
+    st = run_streaming_ingest(spark, stream, out, ck, n_buckets=4,
+                              audit=lambda df: True)
+    assert st["batches_run"] == ["batch-000001"]
+    assert _latest(spark, out) == ref
+    st2 = run_streaming_ingest(spark, stream, out, ck, n_buckets=4,
+                               audit=lambda df: True)
+    assert st2["batches_run"] == []
 
 
 def test_streaming_retract_batch_then_redrop(spark, tmp_path):
