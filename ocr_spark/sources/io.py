@@ -193,12 +193,26 @@ def write_pages_bucketed(pages: DataFrame, path: str,
 def atomic_write_json(path: str, obj, **dump_kw) -> None:
     """Write ``obj`` as JSON to ``path`` atomically (uuid-named temp
     file in the same directory, then ``os.replace``): readers never see
-    a torn file. ``dump_kw`` goes to ``json.dump``."""
+    a torn file. ``dump_kw`` goes to ``json.dump``. A failed write
+    (ENOSPC, an unserializable ``obj``) removes its temp file and
+    re-raises, leaving ``path`` as it was."""
     tmp = os.path.join(os.path.dirname(path),
                        f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(obj, f, **dump_kw)
-    os.replace(tmp, path)
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, **dump_kw)
+        os.replace(tmp, path)
+    except BaseException:
+        _unlink_quiet(tmp)
+        raise
+
+
+def _unlink_quiet(path: str) -> None:
+    """Remove ``path`` if it exists."""
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
 
 
 def next_attempt(path: str) -> int:
@@ -282,7 +296,7 @@ class _ManifestLock:
     cycles.
 
     This lock is an EFFICIENCY device, not the correctness mechanism:
-    all table metadata (snapshots, refs, column registry) lives in one
+    all table metadata (snapshots and refs) lives in one
     document written only through the versioned CAS
     (``VersionedTable._cas`` claims ``_v/<n>.json`` atomically), so two
     writers that both slip past the lock — different hosts on a shared
@@ -352,12 +366,8 @@ class _ManifestLock:
             time.sleep(0.05)
 
     def __exit__(self, *exc):
-        if self.disabled:
-            return
-        try:
-            os.unlink(self.path)
-        except FileNotFoundError:
-            pass
+        if not self.disabled:
+            _unlink_quiet(self.path)
 
 
 def _apply_entry(live: dict, s: dict) -> dict:
@@ -728,20 +738,6 @@ _STATS_FILE = "_filestats.json"
 # opens are faster than a job round-trip.
 _DIST_HARVEST_MIN_FILES = 64
 
-# schema evolution: per-snapshot-dir column mapping {physical_name:
-# field_id} (Iceberg's name-mapping, travelling WITH the data so it
-# survives manifest truncation by expire_snapshots), plus the safe
-# type promotions reads may cast across (Iceberg's allowed evolutions:
-# widening only — a narrowing cast would corrupt values)
-_COLS_FILE = "_cols.json"
-_TYPE_PROMOTIONS = {
-    "tinyint": ("smallint", "int", "bigint"),
-    "smallint": ("int", "bigint"),
-    "int": ("bigint",),
-    "float": ("double",),
-}
-
-
 def _stats_encode(v):
     """JSON-safe encoding for a footer min/max value; None = unusable
     (pruning must treat the bound as absent)."""
@@ -1050,13 +1046,13 @@ class VersionedTable:
     commit (files present, no manifest line) is invisible.
 
     Commit protocol: write files, then claim the next metadata
-    version. ALL table metadata — snapshots, refs (tags) and the
-    column registry — is ONE document, ``_v/<n>.json``, written
-    only by :meth:`_cas`: load version n, mutate, claim n+1 by atomic
-    create-if-absent (Iceberg's single ``metadata.json`` swap). A lost
-    claim rebases and retries, so concurrent writers on any host lose
-    no update; the ``_LOCK`` file (:class:`_ManifestLock`) only spares
-    same-host writers the retries.
+    version. ALL table metadata — snapshots and refs (tags) — is ONE
+    document, ``_v/<n>.json``, written only by :meth:`_cas`: load
+    version n, mutate, claim n+1 by atomic create-if-absent (Iceberg's
+    single ``metadata.json`` swap). A lost claim rebases and retries,
+    so concurrent writers on any host lose no update; the ``_LOCK``
+    file (:class:`_ManifestLock`) only spares same-host writers the
+    retries.
 
     Scale shape: the manifest holds (partition -> directory) strings,
     one entry per partition per commit that touched it — independent of
@@ -1086,12 +1082,12 @@ class VersionedTable:
         return max(vs, default=0)
 
     def _load(self) -> tuple[int, dict]:
-        """``(version, {"snapshots": [...], "refs": {...}, "registry":
-        {...} | None})`` at the newest claimed version. Pre-document
-        tables still read: a list-shaped ``_v/<n>.json`` (or, with no
-        ``_v/``, the old ``_snapshots.json``) is the snapshot list, and
-        refs and registry come from the old ``_refs.json`` /
-        ``_columns.json``; the first :meth:`_cas` write folds them in."""
+        """``(version, {"snapshots": [...], "refs": {...}})`` at the
+        newest claimed version. Pre-document tables still read: a
+        list-shaped ``_v/<n>.json`` (or, with no ``_v/``, the old
+        ``_snapshots.json``) is the snapshot list, and refs come from
+        the old ``_refs.json``; the first :meth:`_cas` write folds them
+        in."""
         v = self._latest_version()
 
         def old(name: str, default):
@@ -1101,8 +1097,7 @@ class VersionedTable:
                if v else old("_snapshots.json", []))
         if isinstance(doc, dict):
             return v, doc
-        return v, {"snapshots": doc, "refs": old("_refs.json", {}),
-                   "registry": old("_columns.json", None)}
+        return v, {"snapshots": doc, "refs": old("_refs.json", {})}
 
     def snapshots(self) -> list[dict]:
         """The manifest: one entry per snapshot, oldest first."""
@@ -1194,252 +1189,26 @@ class VersionedTable:
         ``os.link`` of a complete temp file is an atomic
         create-if-absent, so no torn JSON is ever visible under a
         claimed name. An existing target raises :class:`CommitConflict`
-        (:meth:`_cas`, the only caller, rebases)."""
+        (:meth:`_cas`, the only caller, rebases). The temp file is
+        removed whether the dump, the claim or neither fails."""
         os.makedirs(self._vdir, exist_ok=True)
         tmp = os.path.join(self._vdir,
                            f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1)
         try:
+            with open(tmp, "w") as f:
+                json.dump(doc, f, indent=1)
             os.link(tmp, os.path.join(self._vdir, f"{version}.json"))
         except FileExistsError:
             raise CommitConflict(
                 f"manifest version {version} of {self.root} was claimed "
                 "by a concurrent writer — re-read and retry")
         finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
+            _unlink_quiet(tmp)
         # opportunistic prune of deep version history (never the tail
         # a lagging reader could still be resolving)
         for n in range(max(1, version - 2 * self._KEEP_VERSIONS),
                        version - self._KEEP_VERSIONS):
-            try:
-                os.unlink(os.path.join(self._vdir, f"{n}.json"))
-            except FileNotFoundError:
-                pass
-
-    # ---- schema evolution (Iceberg field-id column registry) ----
-    #
-    # Columns are resolved by FIELD ID, not name (Iceberg's core schema
-    # rule): rename/drop/add/widen are metadata-only — no data file is
-    # ever rewritten — and reads ALIGN each data file's physical columns
-    # to the current logical schema through the id. The two properties
-    # this buys that name-based resolution cannot:
-    #   * rename is free and old files keep reading under the new name;
-    #   * drop-then-re-add NEVER resurfaces old values (the re-added
-    #     column is a NEW id; old files' same-named physical column maps
-    #     to the dead id and is projected out).
-    # Like Iceberg, the schema is TABLE-level: time-travel and tagged
-    # reads show the CURRENT schema over old data (a pinned corpus's
-    # bytes are stable; its column names follow the table). Tables that
-    # never call an evolution op have no registry and keep the plain
-    # single-scan mergeSchema read path unchanged.
-
-    def registry(self) -> dict | None:
-        """The column registry, or None for tables that never called a
-        schema-evolution op. Shape: ``{"next_id": n, "cols": [{"id",
-        "name", "type", "dropped"}, ...], "init_names": {name: id}}`` —
-        ``cols`` in schema order; ``init_names`` records the physical
-        names at registry creation, which is what pre-registry data
-        directories (no ``_cols.json`` of their own) carry on disk."""
-        return self._load()[1]["registry"]
-
-    @staticmethod
-    def _live_cols(reg: dict) -> list[dict]:
-        return [c for c in reg["cols"] if not c["dropped"]]
-
-    def _evolve_registry(self, doc: dict, name: str | None,
-                         op: str) -> dict:
-        """Guard a schema-evolution op on ``name`` (never the partition
-        column) and return ``doc``'s registry, creating it from the live
-        schema on first use (field ids in schema order)."""
-        snaps = doc["snapshots"]
-        if not snaps:
-            raise ValueError(
-                f"cannot {op} on empty table at {self.root}: commit "
-                "first (the registry initializes from the live schema)")
-        if name is not None and _spec_at(snaps)[0] == name:
-            raise ValueError(
-                f"cannot {op} the partition column {name!r}: it is the "
-                "table's layout key (Iceberg partition-source fields "
-                "are likewise undroppable)")
-        if doc["registry"] is None:
-            # pre-registry: plain merged read
-            schema = self._read(doc).schema
-            cols = [{"id": i + 1, "name": f.name,
-                     "type": f.dataType.simpleString(), "dropped": False}
-                    for i, f in enumerate(schema.fields)]
-            doc["registry"] = {
-                "next_id": len(cols) + 1, "cols": cols,
-                "init_names": {c["name"]: c["id"] for c in cols}}
-        return doc["registry"]
-
-    def add_column(self, name: str, dtype: str) -> int:
-        """Metadata-only ``ALTER TABLE ADD COLUMN``: no data rewrite;
-        existing rows read typed NULL until a commit provides the
-        column. ``dtype`` is a Spark DDL type string ("string",
-        "bigint", "array<double>", ...). Returns the new field id.
-        Re-adding a previously dropped name allocates a NEW id, so the
-        dropped column's old values never resurface."""
-        from pyspark.sql import types as T
-        T.StructType.fromDDL(f"`{name}` {dtype}")   # validate the type
-
-        def _add(doc: dict) -> int:
-            reg = self._evolve_registry(doc, None, "add_column")
-            if any(c["name"] == name for c in self._live_cols(reg)):
-                raise ValueError(f"column {name!r} already exists")
-            fid = reg["next_id"]
-            reg["cols"].append({"id": fid, "name": name,
-                                "type": dtype, "dropped": False})
-            reg["next_id"] = fid + 1
-            return fid
-        return self._cas(_add)
-
-    def rename_column(self, old: str, new: str) -> None:
-        """Metadata-only ``ALTER TABLE RENAME COLUMN``: resolved by
-        field id, so every data file written under the old name keeps
-        reading without a rewrite, and every snapshot — past, tagged,
-        future — shows the CURRENT name (Iceberg semantics: schema is
-        table-level). The partition column cannot be renamed."""
-        def _rename(doc: dict) -> None:
-            reg = self._evolve_registry(doc, old, "rename_column")
-            live = self._live_cols(reg)
-            tgt = [c for c in live if c["name"] == old]
-            if not tgt:
-                raise ValueError(
-                    f"unknown column {old!r} "
-                    f"(live: {[c['name'] for c in live]})")
-            if any(c["name"] == new for c in live):
-                raise ValueError(f"column {new!r} already exists")
-            tgt[0]["name"] = new
-        self._cas(_rename)
-
-    def drop_column(self, name: str) -> None:
-        """Metadata-only ``ALTER TABLE DROP COLUMN``: the field id is
-        tombstoned and reads project the physical column out of every
-        epoch — no data rewrite (the bytes go away as their snapshots
-        expire, like any copy-on-write history). A later
-        :meth:`add_column` with the same name is a NEW id: old values
-        do not resurface (the Iceberg drop/re-add contract)."""
-        def _drop(doc: dict) -> None:
-            reg = self._evolve_registry(doc, name, "drop_column")
-            tgt = [c for c in self._live_cols(reg) if c["name"] == name]
-            if not tgt:
-                raise ValueError(f"unknown column {name!r}")
-            if len(self._live_cols(reg)) == 1:
-                raise ValueError("cannot drop the last column")
-            # a pending merge-on-read delete filters through its
-            # predicate at read time; dropping a predicate column would
-            # leave the deleted rows' OTHER columns unfilterable (data
-            # resurrection in every read, including pinned ones).
-            # Conservative guard: any row_delete record still in the
-            # manifest blocks the drop — apply_deletes() +
-            # expire_snapshots() retire the records and release it.
-            fid = tgt[0]["id"]
-            for d in self._deletes_upto(None, snaps=doc["snapshots"]):
-                pred = d.get("predicate_ids")
-                if pred is None:
-                    # pre-registry record: map its stored (init-time)
-                    # names through init_names, so a rename since
-                    # registry init cannot slip the guard
-                    pred = [reg.get("init_names", {}).get(col)
-                            for col, _o, _v in
-                            (tuple(p) for p in d["predicate"])]
-                if fid in pred:
-                    raise ValueError(
-                        f"cannot drop column {name!r}: merge-on-read "
-                        f"delete {d['id']} references it; run "
-                        "apply_deletes() and expire_snapshots() first")
-            tgt[0]["dropped"] = True
-        self._cas(_drop)
-
-    def update_column_type(self, name: str, new_type: str) -> None:
-        """Metadata-only type WIDENING (Iceberg's allowed promotions:
-        int→bigint, float→double, and the smaller integer chains): no
-        data rewrite — reads cast each epoch's physical values up to
-        the current type. Narrowing or cross-family changes raise."""
-        def _widen(doc: dict) -> None:
-            reg = self._evolve_registry(doc, name, "update_column_type")
-            tgt = [c for c in self._live_cols(reg) if c["name"] == name]
-            if not tgt:
-                raise ValueError(f"unknown column {name!r}")
-            cur = tgt[0]["type"]
-            if new_type == cur:
-                return
-            if new_type not in _TYPE_PROMOTIONS.get(cur, ()):
-                raise ValueError(
-                    f"unsafe type change {cur!r} -> {new_type!r} for "
-                    f"{name!r}: only widening promotions are allowed "
-                    f"({_TYPE_PROMOTIONS})")
-            tgt[0]["type"] = new_type
-        self._cas(_widen)
-
-    def _epoch_cols(self, top: str, reg: dict, cache: dict) -> dict:
-        """``{physical_name: {"id": field_id, "type": t}}`` for the
-        files under ``data/<top>``. Post-registry commits wrote a
-        ``_cols.json`` beside their files (it survives manifest
-        truncation — the mapping travels WITH the data); pre-registry
-        dirs carry the registry's init-time names with type None (they
-        were all mutually mergeable under the old single-scan read, so
-        they group together)."""
-        if top not in cache:
-            cache[top] = _read_json(
-                os.path.join(self.root, "data", top, _COLS_FILE),
-                {n: {"id": i, "type": None}
-                 for n, i in reg.get("init_names", {}).items()})
-        return cache[top]
-
-    def _typed_empty(self, reg: dict) -> DataFrame:
-        ddl = ", ".join(f"`{c['name']}` {c['type']}"
-                        for c in self._live_cols(reg))
-        return self.spark.createDataFrame([], ddl)
-
-    def _aligned_df(self, paths_by_top: dict[str, list[str]],
-                    reg: dict) -> DataFrame:
-        """Union of per-schema-epoch scans aligned to the CURRENT
-        logical schema by field id: an epoch that has a live column's
-        physical name selects + casts + renames it; an epoch that lacks
-        the id reads typed NULL; physical columns whose ids are dropped
-        are projected out (drop-then-re-add never resurfaces values).
-        Epochs sharing an identical alignment read as ONE scan, so the
-        scan count is bounded by the number of DISTINCT commit schemas
-        (a handful over a table's life), never by file or snapshot
-        count — at 100 TB this is the same physics as the plain read
-        plus a zero-cost union."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        live_cols = self._live_cols(reg)
-        cache: dict = {}
-        groups: dict[tuple, list[str]] = {}
-        for top, paths in paths_by_top.items():
-            em = self._epoch_cols(top, reg, cache)
-            phys_of = {v["id"]: (n, v["type"]) for n, v in em.items()}
-            key = tuple(phys_of.get(c["id"], (None, None))
-                        for c in live_cols)
-            groups.setdefault(key, []).extend(paths)
-        parts = []
-        for key in sorted(groups, key=str):
-            df = (self.spark.read.option("mergeSchema", "true")
-                  .parquet(*sorted(groups[key])))
-            sel = []
-            for (phys, _ptype), c in zip(key, live_cols):
-                # the df.columns guard matters for PRE-registry groups:
-                # init_names is the MERGED live schema at init, and an
-                # individual old dir may lack some of those columns
-                if phys is not None and phys in df.columns:
-                    sel.append(F.col(phys).cast(c["type"])
-                               .alias(c["name"]))
-                else:
-                    sel.append(F.lit(None).cast(c["type"])
-                               .alias(c["name"]))
-            parts.append(df.select(sel))
-        if not parts:
-            return self._typed_empty(reg)
-        return reduce(lambda a, b: a.unionByName(b), parts)
+            _unlink_quiet(os.path.join(self._vdir, f"{n}.json"))
 
     def commit(self, df: DataFrame, partition_col: str | None = None,
                note: str = "", replace_all: bool = False,
@@ -1599,8 +1368,7 @@ class VersionedTable:
                     f"{df.columns}")
             stats_prop: list[str] | None = list(stats_cols)
         else:
-            stats_prop = self._inherited_prop(doc0, "stats_cols",
-                                              "stats_col_ids")
+            stats_prop = self._inherited_prop(snaps, "stats_cols")
         if bloom_cols is not None:
             types = {f.name: f.dataType.simpleString()
                      for f in df.schema.fields}
@@ -1613,8 +1381,7 @@ class VersionedTable:
                     f"of the DataFrame (have: {types})")
             bloom_prop: list[str] | None = list(bloom_cols)
         else:
-            bloom_prop = self._inherited_prop(doc0, "bloom_cols",
-                                              "bloom_col_ids")
+            bloom_prop = self._inherited_prop(snaps, "bloom_cols")
         if sort_order is not None:
             missing = [c for c in sort_order if c not in df.columns]
             if missing:
@@ -1623,8 +1390,7 @@ class VersionedTable:
                     f"{df.columns}")
             sort_prop: list[str] | None = list(sort_order)
         else:
-            sort_prop = self._inherited_prop(doc0, "sort_order",
-                                             "sort_order_ids")
+            sort_prop = self._inherited_prop(snaps, "sort_order")
         # write sort order: task-local (no shuffle) — each written file
         # comes out internally sorted on the present order columns
         sort_now = [c for c in (sort_prop or []) if c in df.columns]
@@ -1725,48 +1491,6 @@ class VersionedTable:
                         f"table at {self.root} uses partition transform "
                         f"{lock_tf!r}; this commit's layout was written "
                         f"under {tf!r}")
-            # schema-evolution registry: map this commit's physical
-            # columns to field ids (new names register implicitly —
-            # the add-column path mergeSchema always allowed; same-id
-            # type drift must be a safe WIDENING, and auto-widens the
-            # registry so reads cast every epoch up), and write the
-            # mapping beside the data so it survives manifest
-            # truncation. Only tables that called an evolution op pay
-            # any of this.
-            reg = doc["registry"]
-            col_ids: dict[str, int] | None = None
-            if reg is not None:
-                col_ids = {}
-                live_by_name = {c["name"]: c for c in self._live_cols(reg)}
-                for fld in df.schema.fields:
-                    c = live_by_name.get(fld.name)
-                    t = fld.dataType.simpleString()
-                    if c is None:
-                        c = {"id": reg["next_id"], "name": fld.name,
-                             "type": t, "dropped": False}
-                        reg["cols"].append(c)
-                        reg["next_id"] += 1
-                        live_by_name[fld.name] = c
-                    elif t != c["type"]:
-                        if t in _TYPE_PROMOTIONS.get(c["type"], ()):
-                            c["type"] = t
-                        elif c["type"] not in _TYPE_PROMOTIONS.get(t, ()):
-                            raise ValueError(
-                                f"commit column {fld.name!r} has type "
-                                f"{t!r} incompatible with the table's "
-                                f"{c['type']!r} (only widening "
-                                "promotions are allowed)")
-                        # narrower than registry: fine — reads cast up
-                    col_ids[fld.name] = c["id"]
-                # physical TYPE recorded beside the id: epochs only
-                # share a merged scan when their physical schemas
-                # actually merge (int and bigint files must land in
-                # separate scan groups and cast up at alignment)
-                atomic_write_json(
-                    os.path.join(out, _COLS_FILE),
-                    {fld.name: {"id": col_ids[fld.name],
-                                "type": fld.dataType.simpleString()}
-                     for fld in df.schema.fields})
             # attempt-local copy: a rebase re-resolves tombstones
             # against the FRESH live view instead of accumulating
             # stale ones across retries
@@ -1800,23 +1524,11 @@ class VersionedTable:
                 entry["staged"] = True
             if schema_dir is not None:
                 entry["schema_dir"] = schema_dir
-            name_to_id = ({c["name"]: c["id"]
-                           for c in self._live_cols(reg)}
-                          if reg is not None else None)
-            for prop, pkey, ikey in ((stats_prop, "stats_cols",
-                                      "stats_col_ids"),
-                                     (bloom_prop, "bloom_cols",
-                                      "bloom_col_ids"),
-                                     (sort_prop, "sort_order",
-                                      "sort_order_ids")):
-                if prop is None:
-                    continue
-                entry[pkey] = prop
-                if name_to_id is not None:
-                    # record the property by FIELD ID too, so a later
-                    # rename keeps skipping alive (names are display)
-                    entry[ikey] = [name_to_id[n] for n in prop
-                                   if n in name_to_id]
+            for prop, pkey in ((stats_prop, "stats_cols"),
+                               (bloom_prop, "bloom_cols"),
+                               (sort_prop, "sort_order")):
+                if prop is not None:
+                    entry[pkey] = prop
             snaps.append(entry)
             return sid
 
@@ -1913,42 +1625,23 @@ class VersionedTable:
             return sid
         return self._cas(_publish)
 
-    def _inherited_prop(self, doc: dict, key: str,
-                        ids_key: str) -> list | None:
+    @staticmethod
+    def _inherited_prop(snaps: list[dict], key: str) -> list | None:
         """A column-list table property (``stats_cols`` /
-        ``bloom_cols``) as CURRENT logical names. Without a registry
-        this is the newest recorded name list verbatim. With one, the
-        recorder's names may be stale (renamed since) — so
-        post-registry commits also record the property as FIELD IDS
-        and inheritance maps id → current name; a pre-registry
-        recorder maps through the registry's init-time names. Dropped
-        columns fall out of the property (their stats are meaningless
-        against the current schema).
+        ``bloom_cols`` / ``sort_order``): the newest recorded list.
 
         Staged recordings are PREFERRED AGAINST: an explicit property
         on a quarantined commit must not rewrite the published table
         configuration (the fold falls back to the newest staged
         recording only when no published commit ever recorded the
         property — the stage-first bootstrap)."""
-        snaps = doc["snapshots"]
         rec = next((s for s in reversed(snaps)
                     if s.get(key) is not None
                     and not s.get("staged")), None)
         if rec is None:
             rec = next((s for s in reversed(snaps)
                         if s.get(key) is not None), None)
-        if rec is None:
-            return None
-        reg = doc["registry"]
-        if reg is None:
-            return rec[key]
-        cur_by_id = {c["id"]: c["name"] for c in self._live_cols(reg)}
-        if rec.get(ids_key) is not None:
-            ids = rec[ids_key]
-        else:
-            ids = [reg.get("init_names", {}).get(n) for n in rec[key]]
-        return [cur_by_id[i] for i in ids
-                if i is not None and i in cur_by_id]
+        return None if rec is None else rec[key]
 
     def _harvest_filestats(self, out: str, parts: dict,
                            files_by_key: dict[str, list[str]],
@@ -2053,7 +1746,6 @@ class VersionedTable:
             if s.get("operation") == "row_delete":
                 dels[s["id"]] = {"id": s["id"],
                                  "predicate": s["predicate"],
-                                 "predicate_ids": s.get("predicate_ids"),
                                  "affected": s.get("affected")}
             elif s.get("operation") == "rollback":
                 dels = cls._fold_deletes(
@@ -2080,36 +1772,8 @@ class VersionedTable:
         aff = d.get("affected")
         return aff is None or k in aff
 
-    def _delete_predicate_now(self, d: dict, reg: dict | None) -> list:
-        """A stored delete predicate translated to CURRENT column
-        names. Predicates are recorded by field id when a registry
-        exists (``predicate_ids``), so a later rename keeps the delete
-        applying; a pre-registry record maps through the registry's
-        init-time names. A predicate column whose id is no longer live
-        raises — :meth:`drop_column` guards against creating that
-        state, so reaching it means manifest surgery."""
-        pred = [tuple(p) for p in d["predicate"]]
-        if reg is None:
-            return pred
-        cur_by_id = {c["id"]: c["name"] for c in self._live_cols(reg)}
-        ids = d.get("predicate_ids")
-        if ids is None:
-            ids = [reg.get("init_names", {}).get(col)
-                   for col, _op, _val in pred]
-        out = []
-        for (col, op, val), fid in zip(pred, ids):
-            if fid is None:
-                out.append((col, op, val))
-                continue
-            if fid not in cur_by_id:
-                raise ValueError(
-                    f"pending row delete {d['id']} references dropped "
-                    f"column id {fid} (recorded as {col!r}) in "
-                    f"{self.root}")
-            out.append((cur_by_id[fid], op, val))
-        return out
-
-    def _delete_filter(self, deletes: list[dict], reg: dict | None):
+    @staticmethod
+    def _delete_filter(deletes: list[dict]):
         """One Column keeping exactly the rows NO applicable delete
         matches (SQL DELETE null semantics per delete: a row where a
         predicate evaluates NULL is kept by that predicate)."""
@@ -2117,12 +1781,11 @@ class VersionedTable:
 
         from pyspark.sql import functions as F
 
-        conds = [~_where_to_column(self._delete_predicate_now(d, reg))
+        conds = [~_where_to_column(d["predicate"])
                  .eqNullSafe(F.lit(True)) for d in deletes]
         return reduce(lambda a, b: a & b, conds)
 
     def _scan_with_deletes(self, live_src: dict, deletes: list[dict],
-                           reg: dict | None,
                            files_by_rel: dict[str, list[str]]
                            | None = None) -> DataFrame:
         """Scan the live view applying each pending row delete to
@@ -2136,7 +1799,7 @@ class VersionedTable:
         from functools import reduce
 
         data = os.path.join(self.root, "data")
-        groups: dict[tuple, dict[str, list[str]]] = {}
+        groups: dict[tuple, list[str]] = {}
         for k, (rel, src) in live_src.items():
             if files_by_rel is not None:
                 paths = files_by_rel.get(rel)
@@ -2146,24 +1809,16 @@ class VersionedTable:
                 paths = [os.path.join(data, rel)]
             key = tuple(d["id"] for d in deletes
                         if self._delete_applies(d, k, src))
-            by_top = groups.setdefault(key, {})
-            by_top.setdefault(rel.split(os.sep)[0], []).extend(paths)
+            groups.setdefault(key, []).extend(paths)
         parts = []
         for key in sorted(groups):
-            by_top = groups[key]
-            if reg is not None:
-                df = self._aligned_df(by_top, reg)
-            else:
-                paths = sorted(p for ps in by_top.values() for p in ps)
-                df = (self.spark.read.option("mergeSchema", "true")
-                      .parquet(*paths))
+            df = (self.spark.read.option("mergeSchema", "true")
+                  .parquet(*sorted(groups[key])))
             applicable = [d for d in deletes if d["id"] in key]
             if applicable:
-                df = df.where(self._delete_filter(applicable, reg))
+                df = df.where(self._delete_filter(applicable))
             parts.append(df)
         if not parts:
-            if reg is not None:
-                return self._typed_empty(reg)
             raise ValueError(
                 f"VersionedTable at {self.root}: empty scan plan")
         # groups may span evolved plain-table schemas: unionByName with
@@ -2383,12 +2038,11 @@ class VersionedTable:
     def _delete_mor(self, condition, note: str) -> tuple[int | None,
                                                          dict]:
         """The merge-on-read branch of :meth:`delete_where`: validate
-        the predicate against the CURRENT logical schema (a bad column
-        must fail HERE, not poison every later read), bound the
-        affected partitions driver-side through the file-statistics
-        plan, and append one metadata-only manifest entry. No Spark
-        job runs unless the table has no registry (one driver-side
-        schema inference for validation)."""
+        the predicate against the live schema (a bad column must fail
+        HERE, not poison every later read), bound the affected
+        partitions driver-side through the file-statistics plan, and
+        append one metadata-only manifest entry. The only Spark work
+        is the live read's schema inference for that validation."""
         if not isinstance(condition, list):
             raise ValueError(
                 "merge_on_read deletes take the structured "
@@ -2407,11 +2061,7 @@ class VersionedTable:
         if not doc["snapshots"]:
             raise ValueError(
                 f"VersionedTable at {self.root} has no snapshots")
-        reg = doc["registry"]
-        if reg is not None:
-            avail = {c["name"] for c in self._live_cols(reg)}
-        else:
-            avail = set(self._read(doc).columns)
+        avail = set(self._read(doc).columns)
         missing = [c for c, _op, _v in where if c not in avail]
         if missing:
             raise ValueError(
@@ -2437,10 +2087,6 @@ class VersionedTable:
             k = rel_to_k.get(rel)
             if k is not None:
                 affected.add(k)
-        predicate_ids = None
-        if reg is not None:
-            id_of = {c["name"]: c["id"] for c in self._live_cols(reg)}
-            predicate_ids = [id_of[c] for c, _op, _v in where]
         def _append(doc: dict) -> int:
             snaps = doc["snapshots"]
             sid = snaps[-1]["id"] + 1
@@ -2451,8 +2097,6 @@ class VersionedTable:
                      "replace_all": False, "parts": {},
                      "predicate": [list(w) for w in where],
                      "affected": sorted(affected)}
-            if predicate_ids is not None:
-                entry["predicate_ids"] = predicate_ids
             snaps.append(entry)
             return sid
         sid = self._cas(_append)
@@ -2632,13 +2276,13 @@ class VersionedTable:
 
         Both endpoints resolve on the PUBLISHED lineage: a staged
         (write-audit-publish) snapshot id is rejected — audit it at
-        its own pin; publish it to diff it. Schema evolution across
-        the range is fine (both pins project through the CURRENT
-        table-level schema, the Iceberg rule); pre-registry commits
-        that changed the column set via mergeSchema are rejected with
-        a pointer to the evolution API. ``exceptAll`` cannot compare
-        map-typed columns — only raised when a row diff is actually
-        needed (ranges with no rewritten partitions still work)."""
+        its own pin; publish it to diff it. A range whose commits
+        changed the column set (an additive mergeSchema commit) is
+        rejected — rewrite the table with ``commit(...,
+        replace_all=True)`` to diff across it. ``exceptAll`` cannot
+        compare map-typed columns — only raised when a row diff is
+        actually needed (ranges with no rewritten partitions still
+        work)."""
         from pyspark.sql import functions as F
 
         snaps = self.snapshots()
@@ -2747,20 +2391,18 @@ class VersionedTable:
     def _diff_aligned(self, old: DataFrame, new: DataFrame,
                       row_diff: bool = False) -> DataFrame:
         """Align ``old`` to ``new``'s column ORDER for the set-diff
-        operators (both pins already show the current logical schema;
-        only pre-registry mergeSchema drift can change the SET — a
-        documented artifact the evolution API supersedes).
-        ``row_diff=True`` additionally rejects map-typed columns,
-        which ``exceptAll`` cannot compare — checked only where a row
-        diff is actually about to run."""
+        operators; a different column SET (additive mergeSchema drift
+        between the pins) raises. ``row_diff=True`` additionally
+        rejects map-typed columns, which ``exceptAll`` cannot compare
+        — checked only where a row diff is actually about to run."""
         from pyspark.sql.types import MapType
         if set(old.columns) != set(new.columns):
             raise ValueError(
-                f"read_changes across a pre-registry column-set change "
+                f"read_changes across a column-set change "
                 f"({sorted(old.columns)} vs {sorted(new.columns)}): "
-                f"plain-commit mergeSchema drift has no per-file id "
-                f"mapping to align — use the schema-evolution API "
-                f"(add_column/drop_column) for tracked changes")
+                f"the two pins do not share one schema to diff — "
+                f"rewrite the table with commit(..., replace_all=True) "
+                f"and diff from that snapshot")
         if row_diff and any(isinstance(f.dataType, MapType)
                             for f in new.schema.fields):
             raise ValueError(
@@ -2977,8 +2619,7 @@ class VersionedTable:
             raise ValueError(
                 f"VersionedTable at {self.root} has no snapshots")
         if sort_by is None:
-            sort_by = self._inherited_prop(doc, "sort_order",
-                                           "sort_order_ids")
+            sort_by = self._inherited_prop(snaps, "sort_order")
         pcol = _spec_at(snaps)[0]
         live, _ = self._resolve(None, None, snaps=snaps)
         plan: dict[str, int] = {}
@@ -3028,18 +2669,15 @@ class VersionedTable:
         return sid, stats
 
     def sort_order(self) -> list[str] | None:
-        """The table's WRITE SORT ORDER property as current logical
-        column names (None when never set, ``[]`` when explicitly
-        switched off) — the column list every commit task-locally
-        sorts by before writing and ``rewrite_files`` range-
-        distributes on by default. Renames follow via field ids like
-        the stats/bloom properties."""
+        """The table's WRITE SORT ORDER property (None when never set,
+        ``[]`` when explicitly switched off) — the column list every
+        commit task-locally sorts by before writing and
+        ``rewrite_files`` range-distributes on by default."""
         _, doc = self._load()
         if not doc["snapshots"]:
             raise ValueError(
                 f"VersionedTable at {self.root} has no snapshots")
-        return self._inherited_prop(doc, "sort_order",
-                                    "sort_order_ids")
+        return self._inherited_prop(doc["snapshots"], "sort_order")
 
     def partition_spec(self, snapshot_id: int | None = None,
                        ref: str | None = None) -> dict:
@@ -3095,9 +2733,8 @@ class VersionedTable:
           evolution ids under ``"evolved"``;
         * a staged (write-audit-publish) snapshot predating the
           evolution can no longer be published — re-stage the drop;
-        * stats/bloom properties and the schema registry are inherited
-          unchanged (the rewrite re-harvests file stats for the new
-          layout).
+        * stats/bloom/sort-order properties are inherited unchanged
+          (the rewrite re-harvests file stats for the new layout).
 
         ``layout_partitions`` pre-shuffles the rewrite into that many
         tasks hash-clustered by the NEW partition key (each key's rows
@@ -3168,7 +2805,7 @@ class VersionedTable:
           (``spec_set``), so a rollback across an
           ``evolve_partition_spec`` restores the old layout and later
           commits/maintenance run under it;
-        * table properties (stats/bloom cols, schema registry) are
+        * table properties (stats/bloom/sort-order cols) are
           deliberately NOT rolled back — they are harvest/metadata
           config, not data state (the Iceberg rule: rollback moves
           the current snapshot pointer, table metadata stays).
@@ -3703,8 +3340,7 @@ class VersionedTable:
                     carry_items = list(live_src.items())
                 # carry the row-delete records still applicable to this
                 # view (a truncated row_delete line must not lose its
-                # effect); fully-applied records drop out here, which
-                # is what releases drop_column's conservative guard
+                # effect); fully-applied records drop out here
                 pend = [d for d in self._deletes_upto(s["id"], snaps)
                         if any(self._delete_applies(d, k, src)
                                for k, (_rel, src) in carry_items)]
@@ -3719,29 +3355,14 @@ class VersionedTable:
                 # only at its own pin (_fold_deletes skips it for every
                 # other fold), so it never resets the published lineage.
                 compacted["deletes_set"] = True
-                # the stats/bloom properties must survive history
-                # truncation: each compacted entry inherits the newest
-                # set at or before its id (id-spelled form included, so
-                # skipping keeps following renames)
-                for pkey, ikey in (("stats_cols", "stats_col_ids"),
-                                   ("bloom_cols", "bloom_col_ids"),
-                                   ("sort_order", "sort_order_ids")):
-                    # prefer published recordings (same rule as
-                    # _inherited_prop: a staged commit's explicit
-                    # property must not rewrite the published
-                    # configuration through the compaction carry)
-                    prop = next((p for p in reversed(snaps)
-                                 if p["id"] <= s["id"]
-                                 and p.get(pkey) is not None
-                                 and not p.get("staged")), None)
-                    if prop is None:
-                        prop = next((p for p in reversed(snaps)
-                                     if p["id"] <= s["id"]
-                                     and p.get(pkey) is not None), None)
+                # the stats/bloom/sort-order properties must survive
+                # history truncation: each compacted entry inherits the
+                # set _inherited_prop resolves at its id
+                upto = [p for p in snaps if p["id"] <= s["id"]]
+                for pkey in ("stats_cols", "bloom_cols", "sort_order"):
+                    prop = self._inherited_prop(upto, pkey)
                     if prop is not None:
-                        compacted[pkey] = prop[pkey]
-                        if prop.get(ikey) is not None:
-                            compacted[ikey] = prop[ikey]
+                        compacted[pkey] = prop
                 if ct is not None:
                     compacted["transform"] = ct
                 new_snaps.append(compacted)
@@ -3841,11 +3462,7 @@ class VersionedTable:
                 pruned_parts = len(live) - len(keep)
                 if pruned_parts:
                     live = {k: v for k, v in live.items() if k in keep}
-        reg = doc["registry"] if where else None
-        id_of = ({c["name"]: c["id"] for c in self._live_cols(reg)}
-                 if reg is not None else {})
         cache: dict[str, dict | None] = {}
-        cols_cache: dict[str, dict] = {}
         kept: list[str] = []
         total = 0
         for k, rel in sorted(live.items()):
@@ -3857,36 +3474,9 @@ class VersionedTable:
                 d = os.path.join(self.root, "data", rel)
                 entries = [{"f": f} for f in sorted(os.listdir(d))
                            if f.endswith(".parquet")]
-            eff_where = where
-            if reg is not None and where:
-                # schema evolution: predicates carry CURRENT names;
-                # stats in this epoch's manifest carry the names at
-                # write time — map through the field id. An epoch that
-                # LACKS a predicate's id reads it as all-NULL, and
-                # every supported op is NULL-rejecting, so its files
-                # are provably non-matching (same rule as the all-null
-                # stats skip). Unknown predicate columns translate
-                # as-is: no pruning, and the residual filter raises at
-                # analysis exactly as read().where(...) would.
-                em = self._epoch_cols(top, reg, cols_cache)
-                phys_of = {v["id"]: n for n, v in em.items()}
-                trans, absent = [], False
-                for col, op, val in where:
-                    fid = id_of.get(col)
-                    if fid is None:
-                        trans.append((col, op, val))
-                    elif fid in phys_of:
-                        trans.append((phys_of[fid], op, val))
-                    else:
-                        absent = True
-                        break
-                if absent:
-                    total += len(entries)
-                    continue
-                eff_where = trans
             for e in entries:
                 total += 1
-                if not eff_where or _file_may_match(e, eff_where):
+                if not where or _file_may_match(e, where):
                     kept.append(os.path.join(self.root, "data", rel,
                                              e["f"]))
         return {"files": kept, "files_total": total,
@@ -3940,7 +3530,6 @@ class VersionedTable:
         from pyspark.sql import functions as F
 
         snaps = doc["snapshots"]
-        reg = doc["registry"]
         deletes = self._deletes_upto(snapshot_id, snaps)
         if where:
             where = _validate_where(where)
@@ -3964,29 +3553,15 @@ class VersionedTable:
                     rel = os.path.dirname(os.path.relpath(p, data))
                     files_by_rel.setdefault(rel, []).append(p)
                 return self._scan_with_deletes(
-                    live_src, deletes, reg, files_by_rel).where(cond)
-            if reg is not None:
-                # schema evolution: align each epoch's physical names
-                # to the current schema FIRST; the residual condition
-                # (current names) then applies uniformly
-                data = os.path.join(self.root, "data")
-                by_top: dict[str, list[str]] = {}
-                for p in plan["files"]:
-                    top = os.path.relpath(p, data).split(os.sep)[0]
-                    by_top.setdefault(top, []).append(p)
-                return self._aligned_df(by_top, reg).where(cond)
+                    live_src, deletes, files_by_rel).where(cond)
             return (self.spark.read.option("mergeSchema", "true")
                     .parquet(*plan["files"]).where(cond))
         live, _ = self._resolve(snapshot_id, partitions,
                                 with_src=True, snaps=snaps)
         if deletes and live:
-            return self._scan_with_deletes(live, deletes, reg)
+            return self._scan_with_deletes(live, deletes)
         live = {k: v[0] for k, v in live.items()}
         if not live:
-            if reg is not None:
-                # the current logical schema IS the registry — no
-                # schema-source directory needed for a typed empty
-                return self._typed_empty(reg)
             full, _ = self._resolve(snapshot_id, None, snaps=snaps)
             dirs = [os.path.join(self.root, "data", rel)
                     for rel in full.values()]
@@ -4006,12 +3581,6 @@ class VersionedTable:
                         f"recorded schema")
             return (self.spark.read.option("mergeSchema", "true")
                     .parquet(*dirs).where(F.lit(False)))
-        if reg is not None:
-            by_top = {}
-            for rel in live.values():
-                by_top.setdefault(rel.split(os.sep)[0], []).append(
-                    os.path.join(self.root, "data", rel))
-            return self._aligned_df(by_top, reg)
         dirs = [os.path.join(self.root, "data", rel)
                 for rel in live.values()]
         return (self.spark.read.option("mergeSchema", "true")

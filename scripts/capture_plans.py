@@ -56,18 +56,6 @@ CHECKS = {
         "everything. At 100 TB this is what makes scheduled compaction "
         "safe to automate: maintenance can never silently destroy the "
         "manifest-pruned scan."),
-    "schema_evolved_aligned_read": (
-        "VersionedTable.read() over a table whose url column was RENAMED "
-        "mid-history (field-id registry): a Union of exactly ONE FileScan "
-        "per DISTINCT COMMIT SCHEMA — not per snapshot — each with a "
-        "Project renaming/casting its epoch's physical columns to the "
-        "current logical schema. Evolution never rewrites a data file, "
-        "and at 100 TB the scan count is bounded by the handful of "
-        "schemas a table sees in its life, never by its thousands of "
-        "daily snapshots. The where= spelling additionally skips files "
-        "of BOTH name epochs driver-side (predicate translated "
-        "current-name -> field id -> per-epoch physical name; see "
-        "Measured)."),
     "merge_latest_probe": (
         "The matched-partition probe of VersionedTable.merge_into (the "
         "one corpus scan a recrawl merge pays per drop, stated at the "
@@ -509,46 +497,6 @@ def main() -> None:
                 f"kept {len(skipped['files'])} of "
                 f"{skipped['files_total']} files "
                 f"({skipped['files_skipped']} skipped driver-side)"))
-        elif name == "schema_evolved_aligned_read":
-            from pyspark.sql import functions as F
-            from ocr_spark.sources.io import VersionedTable
-            vt = VersionedTable(spark,
-                                os.path.join(REPO, "BENCH",
-                                             "_plans_vtevo"))
-            if not vt.snapshots():
-                # disjoint drop_id ranges: BOTH name epochs stay live,
-                # so the read must union one aligned scan per epoch
-                e1 = (spark.range(0, 10_000)
-                      .select(F.format_string("u%07d", F.col("id"))
-                              .alias("url"),
-                              (F.col("id") % 2).cast("int")
-                              .alias("drop_id"),
-                              F.length(F.md5(F.col("id").cast("string")))
-                              .alias("nchars"))
-                      .repartitionByRange(8, "url")
-                      .sortWithinPartitions("url"))
-                vt.commit(e1, "drop_id", stats_cols=["url"])
-                vt.rename_column("url", "page_url")
-                e2 = (spark.range(10_000, 20_000)
-                      .select(F.format_string("u%07d", F.col("id"))
-                              .alias("page_url"),
-                              (F.col("id") % 2 + 2).cast("int")
-                              .alias("drop_id"),
-                              F.length(F.md5(F.col("id").cast("string")))
-                              .alias("nchars"))
-                      .repartitionByRange(8, "page_url")
-                      .sortWithinPartitions("page_url"))
-                vt.commit(e2, "drop_id")
-            skipped = vt.plan_files(
-                where=[("page_url", "==", "u0014007")])
-            extra_note[name] = (
-                f"point lookup on the CURRENT name across both name "
-                f"epochs: kept {len(skipped['files'])} of "
-                f"{skipped['files_total']} files "
-                f"({skipped['files_skipped']} skipped driver-side, "
-                f"pre-rename epoch pruned via its recorded OLD "
-                f"physical name)")
-            df = vt.read()
         elif name == "merge_latest_probe":
             # the exact probe expression merge_into builds, over a real
             # VersionedTable holding a payload column — pruning must

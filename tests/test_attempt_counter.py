@@ -1,7 +1,7 @@
 """The attempt counter both checkpoint manifests share: a counter write
 that fails part-way must leave the previous count readable, or the next
 attempt reuses an earlier number and ``latest_metrics`` keeps both
-attempts' rows."""
+attempts' rows. It must not leave its temp file behind either."""
 
 from __future__ import annotations
 
@@ -52,4 +52,7 @@ def test_failed_counter_write_keeps_previous_count(tmp_path, monkeypatch,
 
     with open(os.path.join(str(tmp_path), name)) as f:
         assert f.read() == "2"
+    # the failed write removed its temp file
+    assert not [n for n in os.listdir(str(tmp_path))
+                if n.startswith(".tmp-")]
     assert m.attempt_of(key) == 3

@@ -14,7 +14,7 @@ Contract under test (io.py):
   * on a hash layout where bounds keep everything, the bloom skips
     most files for == and in predicates; range ops ignore blooms;
   * bloom_cols is an inherited table property (maintenance commits and
-    the expiry compacted base keep it) and follows renames by field id;
+    the expiry compacted base keep it);
   * nulls never enter the bloom and comparison predicates never match
     them (consistent with the bounds' all-null rule);
   * explicitly naming a non-string/integer column raises.
@@ -117,21 +117,6 @@ def test_bloom_property_is_inherited_by_maintenance(spark, tmp_path):
     assert p3["files_skipped"] >= p3["files_total"] - 2
     assert [r.seq for r in
             vt.read(where=[("url", "==", "u0004007")]).collect()] == [4007]
-
-
-def test_bloom_follows_rename_by_field_id(spark, tmp_path):
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    vt.commit(_hash_layout(spark), "drop_id", bloom_cols=["url"])
-    vt.rename_column("url", "page_url")
-    vt.commit(_hash_layout(spark, base=2000, dropbase=4)
-              .withColumnRenamed("url", "page_url"), "drop_id")
-    # point lookups on the CURRENT name prune files of BOTH name epochs
-    for target, seq in (("u0000777", 777), ("u0002777", 2777)):
-        p = vt.plan_files(where=[("page_url", "==", target)])
-        assert p["files_skipped"] >= p["files_total"] - 2, (target, p)
-        assert [r.seq for r in
-                vt.read(where=[("page_url", "==", target)])
-                .collect()] == [seq]
 
 
 def test_bloom_nulls_and_type_guard(spark, tmp_path):

@@ -1,14 +1,13 @@
 """Cross-process optimistic-concurrency commits.
 
-All table metadata — snapshots, refs (tags) and the column
-registry — is ONE document, claimed as ``_v/<n>.json`` by a
+All table metadata — snapshots and refs (tags) — is ONE
+document, claimed as ``_v/<n>.json`` by a
 compare-and-swap (atomic ``os.link``); the lock file is only
 contention avoidance. Contract under test:
   * N real PROCESSES x M appends each, lock DISABLED (pure CAS): every
     append lands, snapshot ids are exactly 1..N*M, no entry lost;
-  * N real processes racing ``rename_column``, ``create_tag`` and
-    merge-on-read deletes with the lock disabled lose no column, tag
-    or snapshot, and field ids stay unique;
+  * N real processes racing ``create_tag`` and merge-on-read deletes
+    with the lock disabled lose no tag or snapshot;
   * ``commit()`` rebases and retries after losing the CAS to a rival
     committer (fresh read, re-numbered id, both commits' rows live);
   * a crash right after a ``publish`` claim is replay-safe: the
@@ -18,14 +17,17 @@ contention avoidance. Contract under test:
     taken over even when the recorded pid is alive (safe — CAS guards
     correctness), and no ``_LOCK`` file survives;
   * legacy tables read fine — mirror file only (no ``_v/``), or a
-    list-shaped ``_v/<n>.json`` with ``_refs.json`` / ``_columns.json``
-    beside it — and their first new write claims one document carrying
-    the full history, refs and registry;
+    list-shaped ``_v/<n>.json`` with ``_refs.json`` beside it — and
+    their first new write claims one document carrying the full
+    history and refs;
+  * a manifest write that fails mid-dump claims nothing and leaves no
+    temp file in ``_v/``;
   * deep version history is pruned, recent versions kept.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import multiprocessing as mp
 import os
@@ -150,15 +152,13 @@ def test_legacy_mirror_table_bootstraps_into_cas(spark, tmp_path):
 
 
 def test_legacy_split_layout_reads_and_folds(spark, tmp_path):
-    """A table from before refs and the registry moved into the
-    versioned document: list-shaped ``_v/1.json``, a tag in
-    ``_refs.json``, a renamed column in ``_columns.json``. Reads and
+    """A table from before refs moved into the versioned document:
+    list-shaped ``_v/1.json`` and a tag in ``_refs.json``. Reads and
     tags work unchanged; the first commit claims ONE document carrying
-    all three, and the old files are never written again."""
+    both, and the old files are never written again."""
     root = str(tmp_path / "t")
     vt = VersionedTable(spark, root)
     vt.commit(spark.createDataFrame([(1, "a")], "p INT, v STRING"), "p")
-    vt.rename_column("v", "text")
     vt.create_tag("t1")
     with open(os.path.join(root, "_v",
                            f"{vt._latest_version()}.json")) as f:
@@ -166,8 +166,7 @@ def test_legacy_split_layout_reads_and_folds(spark, tmp_path):
     import shutil
     shutil.rmtree(os.path.join(root, "_v"))
     os.makedirs(os.path.join(root, "_v"))
-    legacy = {"_v/1.json": doc["snapshots"], "_refs.json": doc["refs"],
-              "_columns.json": doc["registry"]}
+    legacy = {"_v/1.json": doc["snapshots"], "_refs.json": doc["refs"]}
     for name, obj in legacy.items():
         with open(os.path.join(root, name), "w") as f:
             json.dump(obj, f, indent=1)
@@ -175,69 +174,63 @@ def test_legacy_split_layout_reads_and_folds(spark, tmp_path):
     old = VersionedTable(spark, root)
     assert [s["id"] for s in old.snapshots()] == [1]
     assert set(old.refs()) == {"t1"}
-    assert [c["name"] for c in old.registry()["cols"]] == ["p", "text"]
-    assert {(r.p, r.text) for r in old.read().collect()} == {(1, "a")}
-    assert {(r.p, r.text) for r in old.read(ref="t1").collect()} == {
+    assert {(r.p, r.v) for r in old.read().collect()} == {(1, "a")}
+    assert {(r.p, r.v) for r in old.read(ref="t1").collect()} == {
         (1, "a")}
     assert old.create_tag("t1") == 1   # idempotent re-tag: no write
     assert old._latest_version() == 1
 
     sid = old.commit(spark.createDataFrame([(2, "b")],
-                                           "p INT, text STRING"), "p")
+                                           "p INT, v STRING"), "p")
     assert sid == 2 and old._latest_version() == 2
     with open(os.path.join(root, "_v", "2.json")) as f:
         v2 = json.load(f)
+    assert sorted(v2) == ["refs", "snapshots"]
     assert [s["id"] for s in v2["snapshots"]] == [1, 2]
     assert v2["refs"]["t1"]["snapshot_id"] == 1
-    assert [c["name"] for c in v2["registry"]["cols"]] == ["p", "text"]
     old.create_tag("t2")
     assert set(VersionedTable(spark, root).refs()) == {"t1", "t2"}
-    assert {(r.p, r.text) for r in old.read(ref="t2").collect()} == {
+    assert {(r.p, r.v) for r in old.read(ref="t2").collect()} == {
         (1, "a"), (2, "b")}
     for name, obj in legacy.items():   # never rewritten
         with open(os.path.join(root, name)) as f:
             assert json.load(f) == obj
 
 
+class _LiveColumns:
+    """Stands in for the live read in a worker without a Spark
+    session: the merge-on-read delete only asks it for the column
+    names its predicate is validated against."""
+    columns = ["p", "k"]
+
+
 def _race_worker(args):
     root, wid, m = args
     os.environ["OCR_SPARK_NO_LOCK"] = "1"
-    vt = VersionedTable(None, root)  # these ops never touch spark
+    vt = VersionedTable(None, root)
+    vt._read = lambda doc, *a, **kw: _LiveColumns()
     for i in range(m):
-        vt.rename_column(f"c{wid}_{i}", f"r{wid}_{i}")
         vt.create_tag(f"t{wid}_{i}")
         # a metadata-only snapshot append (merge-on-read delete)
         vt.delete_where([("k", "==", f"w{wid}i{i}")],
                         mode="merge_on_read", note=f"w{wid}i{i}")
 
 
-def test_multiprocess_refs_registry_appends_lose_nothing(spark, tmp_path):
-    """Tags, column renames and snapshot appends raced by real
-    processes (more than cores) with the lock DISABLED (the cross-host
-    case): every update lands because all three live in the one
-    CAS-claimed document — none is a read-modify-write of a side
-    file."""
+def test_multiprocess_tags_and_deletes_lose_nothing(spark, tmp_path):
+    """Tags and snapshot appends raced by real processes (more than
+    cores) with the lock DISABLED (the cross-host case): every update
+    lands because both live in the one CAS-claimed document — neither
+    is a read-modify-write of a side file."""
     root = str(tmp_path / "t")
     N, M = 6, 8
-    cols = [f"c{w}_{i}" for w in range(N) for i in range(M)]
     vt = VersionedTable(spark, root)
-    vt.commit(spark.createDataFrame(
-        [(1, "x", *cols)],
-        "p INT, k STRING, " + ", ".join(f"{c} STRING" for c in cols)),
-        "p")
-    vt.add_column("extra", "string")   # bootstraps the registry
+    vt.commit(spark.createDataFrame([(1, "x")], "p INT, k STRING"), "p")
     # spawn: this process runs a JVM gateway, forking it is unsafe
     ctx = mp.get_context("spawn")
     with ctx.Pool(N) as pool:
         pool.map_async(_race_worker,
                        [(root, w, M) for w in range(N)]).get(timeout=300)
     vt = VersionedTable(spark, root)
-    reg = vt.registry()
-    ids = [c["id"] for c in reg["cols"]]
-    assert len(ids) == len(set(ids)) == len(cols) + 3
-    assert {c["name"] for c in vt._live_cols(reg)} == (
-        {"p", "k", "extra"}
-        | {f"r{w}_{i}" for w in range(N) for i in range(M)})
     assert set(vt.refs()) == {f"t{w}_{i}"
                               for w in range(N) for i in range(M)}
     snaps = vt.snapshots()
@@ -245,6 +238,31 @@ def test_multiprocess_refs_registry_appends_lose_nothing(spark, tmp_path):
     assert {s["note"] for s in snaps[1:]} == {
         f"w{w}i{i}" for w in range(N) for i in range(M)}
     assert sorted(os.listdir(root)) == ["_v", "data"]
+    assert {(r.p, r.k) for r in vt.read().collect()} == {(1, "x")}
+
+
+def test_failed_manifest_dump_leaves_no_temp_file(spark, tmp_path,
+                                                  monkeypatch):
+    """A disk that fills while the next ``_v/<n>.json`` is being dumped:
+    the commit raises, claims nothing, the table still reads its
+    previous snapshot and ``_v/`` holds no ``.tmp-`` file."""
+    root = str(tmp_path / "t")
+    vt = VersionedTable(spark, root)
+    df = lambda p, v: spark.createDataFrame([(p, v)], "p INT, v STRING")
+    vt.commit(df(1, "a"), "p")
+    nxt = df(2, "b")
+
+    def full_disk(*a, **kw):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(json, "dump", full_disk)
+    with pytest.raises(OSError, match="No space"):
+        vt.commit(nxt, "p")
+    monkeypatch.undo()
+    assert [s["id"] for s in vt.snapshots()] == [1]
+    assert [(r.p, r.v) for r in vt.read().collect()] == [(1, "a")]
+    assert not [n for n in os.listdir(os.path.join(root, "_v"))
+                if n.startswith(".tmp-")]
 
 
 def _link_then_crash(real):

@@ -138,18 +138,6 @@ def test_change_col_collision_and_rename(spark, vt):
     assert got == [(5, "insert")]
 
 
-def test_changes_show_current_schema_after_rename(spark, vt):
-    s1 = vt.snapshots()[-1]["id"]
-    vt.rename_column("url", "page_url")
-    vt.commit(spark.createDataFrame(
-        [(6, "i", 4)], "drop_id INT, page_url STRING, score INT"),
-        "drop_id")
-    ch = vt.read_changes(s1)
-    assert "page_url" in ch.columns and "url" not in ch.columns
-    assert sorted((r.drop_id, r.page_url, r._change_type)
-                  for r in ch.collect()) == [(6, "i", "insert")]
-
-
 def test_unchanged_partitions_never_scanned(spark, vt):
     """The 100 TB property: the changelog plan's file sources touch
     ONLY the changed partitions' directories."""

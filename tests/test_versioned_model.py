@@ -249,160 +249,3 @@ def test_versioned_table_random_walk_matches_model(spark, tmp_path, seed,
     # have been dropped by a late expiry — the checks still ran)
     assert pinned_any[0]
 
-
-# ---- the schema-evolution walk ----
-#
-# Same discipline, but the model is FIELD-ID-native (rows are
-# {fid: value} dicts and the expected view is projected through the
-# model's own live-column list), mirroring exactly the semantics the
-# registry implements: renames change display only, drop hides a fid,
-# re-add allocates a NEW fid (old values must not resurface), widening
-# changes nothing about values. Every step checks the latest view, a
-# seeded range read on a never-renamed column, a seeded POINT read on
-# the rename-toggled column (exercising stats translation across name
-# epochs), and every surviving snapshot pin — under arbitrary
-# interleavings with delete / merge / rewrite / expire.
-
-_FID_DROP, _FID_URL, _FID_SCORE = 1, 2, 3
-
-
-def _nkey(t):
-    return tuple((v is None, v) for v in t)
-
-
-@pytest.mark.parametrize("seed", [11, 37])
-def test_random_walk_with_schema_evolution(spark, tmp_path, seed):
-    rnd = random.Random(seed)
-    vt = VersionedTable(spark, str(tmp_path / f"e{seed}"))
-    model: list[dict] = []               # latest view, {fid: value}
-    pins: dict[int, list[dict]] = {}     # snapshot id -> model rows then
-    live = [(_FID_DROP, "drop_id"), (_FID_URL, "url"),
-            (_FID_SCORE, "score")]
-    next_fid = 4
-    extra_fid: int | None = None         # live fid of "extra", if any
-    widened = False
-
-    def url_name():
-        return dict((f, n) for f, n in live)[_FID_URL]
-
-    def fresh_rows(n):
-        out = []
-        for _ in range(n):
-            r = {_FID_DROP: rnd.randint(1, 4),
-                 _FID_URL: f"u{rnd.randint(0, 9)}",
-                 _FID_SCORE: rnd.randint(0, 99)}
-            if extra_fid is not None:
-                r[extra_fid] = rnd.randint(100, 199)
-            out.append(r)
-        return out
-
-    def to_df(rows):
-        ddl = f"drop_id INT, {url_name()} STRING, score INT"
-        if extra_fid is not None:
-            ddl += ", extra INT"
-        fids = [_FID_DROP, _FID_URL, _FID_SCORE] + (
-            [extra_fid] if extra_fid is not None else [])
-        return spark.createDataFrame(
-            [tuple(r.get(f) for f in fids) for r in rows], ddl)
-
-    def expect(rows):
-        return sorted((tuple(r.get(f) for f, _ in live) for r in rows),
-                      key=_nkey)
-
-    def read_all(snapshot_id=None):
-        df = vt.read(snapshot_id=snapshot_id)
-        names = [n for _, n in live]
-        # the column SET must track the model exactly; ORDER follows
-        # the registry (captured from the merged live schema at init),
-        # which need not match the model's bookkeeping order
-        assert sorted(df.columns) == sorted(names)
-        return sorted((tuple(row) for row in
-                       df.select(names).collect()), key=_nkey)
-
-    for step in range(18):
-        op = "commit" if step == 0 else rnd.choice(
-            ["commit", "commit", "delete", "merge", "rewrite",
-             "expire", "evolve", "evolve"])
-        sid = None
-        if op == "commit":
-            rows = fresh_rows(rnd.randint(1, 5))
-            sid = vt.commit(to_df(rows), "drop_id", note=f"step {step}",
-                            stats_cols=(["score", "url"] if step == 0
-                                        else None))
-            parts = {r[_FID_DROP] for r in rows}
-            model = [r for r in model
-                     if r[_FID_DROP] not in parts] + rows
-        elif op == "delete":
-            cut = rnd.randint(0, 99)
-            sid, _ = vt.delete_where(
-                F.col("score") < cut if step % 2
-                else [("score", "<", cut)])
-            model = [r for r in model if not r[_FID_SCORE] < cut]
-        elif op == "merge":
-            srcs = {}
-            for r in fresh_rows(rnd.randint(1, 4)):
-                srcs[r[_FID_URL]] = r
-            rows = list(srcs.values())
-            sid, _ = vt.merge_into(to_df(rows), [url_name()],
-                                   note=f"step {step}")
-            model = [r for r in model if r[_FID_URL] not in srcs] + rows
-        elif op == "rewrite":
-            sid, _ = vt.rewrite_files()
-        elif op == "expire":
-            vt.expire_snapshots(rnd.randint(2, 4))
-            oldest = vt.snapshots()[0]["id"]
-            for old in [p for p in pins if p < oldest]:
-                pins.pop(old)
-        else:
-            kind = rnd.choice(["rename", "extra", "widen"])
-            if kind == "rename":
-                old, new = url_name(), (
-                    "page_url" if url_name() == "url" else "url")
-                vt.rename_column(old, new)
-                live = [(f, new if f == _FID_URL else n)
-                        for f, n in live]
-            elif kind == "extra":
-                if extra_fid is None:
-                    vt.add_column("extra", "int")
-                    extra_fid = next_fid
-                    next_fid += 1
-                    live = live + [(extra_fid, "extra")]
-                else:
-                    vt.drop_column("extra")
-                    live = [(f, n) for f, n in live if f != extra_fid]
-                    extra_fid = None
-            elif not widened:
-                vt.update_column_type("score", "bigint")
-                widened = True
-
-        assert read_all() == expect(model), (
-            f"seed {seed} step {step} {op}")
-        # seeded range read on the never-renamed column
-        lo = rnd.randint(0, 99)
-        hi = rnd.randint(lo, 99)
-        got = sorted((tuple(row) for row in
-                      vt.read(where=[("score", "between", (lo, hi))])
-                      .select([n for _, n in live]).collect()),
-                     key=_nkey)
-        assert got == expect(r for r in model
-                             if lo <= r[_FID_SCORE] <= hi), (
-            f"seed {seed} step {step} {op}: range where-read diverged")
-        # seeded POINT read on the rename-toggled column: predicate
-        # translation must bridge every physical-name epoch
-        u = f"u{rnd.randint(0, 9)}"
-        got = sorted((tuple(row) for row in
-                      vt.read(where=[(url_name(), "==", u)])
-                      .select([n for _, n in live]).collect()),
-                     key=_nkey)
-        assert got == expect(r for r in model if r[_FID_URL] == u), (
-            f"seed {seed} step {step} {op}: point where-read diverged")
-        if sid is not None and len(pins) < 2:
-            pins[sid] = [dict(r) for r in model]
-        for pid, rows_then in pins.items():
-            # pinned BYTES are stable; the pinned SCHEMA is the current
-            # one (Iceberg: schema is table-level) — so the expectation
-            # is the pin-time row set projected through TODAY's columns
-            assert read_all(snapshot_id=pid) == expect(rows_then), (
-                f"seed {seed} step {step}: pin {pid} drifted after {op}")
-
-    assert pins

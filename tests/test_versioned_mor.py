@@ -21,10 +21,7 @@ The contract under test:
     row_delete line must not lose its effect);
   * changed_partitions reports the affected set as rewritten, so
     read_incremental's non-append contract still raises — a takedown
-    must not silently vanish under an incremental consumer;
-  * schema evolution: predicates are recorded by field id, so a later
-    rename keeps the delete applying, and drop_column on a referenced
-    column is blocked until the records retire.
+    must not silently vanish under an incremental consumer.
 """
 
 from __future__ import annotations
@@ -203,39 +200,6 @@ def test_mor_delete_blocks_incremental_consumers(spark, vt2):
     vt2.commit(_mk(spark, [("u5", "d", 6)]), "drop_id")
     inc = vt2.read_incremental(2, on_nonappend="skip")
     assert _rows(inc, "url") == [("u5",)]
-
-
-def test_mor_predicate_follows_rename_and_blocks_drop(spark, tmp_path):
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    vt.commit(_mk(spark, [("u1", "a", 1), ("u2", "a", 2)]), "drop_id")
-    vt.add_column("extra", "int")               # establishes the registry
-    vt.delete_where([("url", "==", "u2")], mode="merge_on_read")
-    vt.rename_column("url", "page_url")
-    # the recorded field id translates to the CURRENT name at read time
-    assert _rows(vt.read(), "page_url") == [("u1",)]
-    assert _rows(vt.read(where=[("page_url", "==", "u2")])) == []
-    # dropping the predicate column would orphan the filter — blocked
-    with pytest.raises(ValueError, match="merge-on-read delete"):
-        vt.drop_column("page_url")
-    # retire the record, then the drop goes through
-    vt.apply_deletes()
-    vt.expire_snapshots(keep_last=1)
-    vt.drop_column("page_url")
-    assert "page_url" not in vt.read().columns
-
-
-def test_mor_pre_registry_delete_survives_registry_and_rename(spark,
-                                                              tmp_path):
-    vt = VersionedTable(spark, str(tmp_path / "t"))
-    vt.commit(_mk(spark, [("u1", "a", 1), ("u2", "a", 2)]), "drop_id")
-    vt.delete_where([("url", "==", "u2")], mode="merge_on_read")
-    vt.add_column("extra", "int")               # registry AFTER the delete
-    vt.rename_column("url", "page_url")
-    assert _rows(vt.read(), "page_url") == [("u1",)]
-    # the pre-registry record maps through init_names: the guard still
-    # blocks dropping the renamed predicate column
-    with pytest.raises(ValueError, match="merge-on-read delete"):
-        vt.drop_column("page_url")
 
 
 def test_mor_unpartitioned_table(spark, tmp_path):

@@ -12,8 +12,8 @@ Contract under test (io.py):
     alive instead of silently spanning every file across the whole
     value range (the footgun the property exists to close);
   * [] switches the property off from that snapshot on; a misspelled
-    column raises; a rename follows via field ids; expire_snapshots
-    compaction carries the property onto its compacted base.
+    column raises; expire_snapshots compaction carries the property
+    onto its compacted base.
 """
 
 from __future__ import annotations
@@ -139,17 +139,16 @@ def test_production_sinks_declare_url_sort_order(spark, tmp_path):
     _assert_files_sorted(vt.root, rel, col="url")
 
 
-def test_rename_follows_and_expiry_carries(spark, tmp_path):
+def test_expiry_carries_sort_order(spark, tmp_path):
     vt = VersionedTable(spark, str(tmp_path / "t"))
     vt.commit(_shuffled(spark, 1), "p", sort_order=["k"])
-    vt.rename_column("k", "key")
-    assert vt.sort_order() == ["key"]
-    df = _shuffled(spark, 2).withColumnRenamed("k", "key")
-    vt.commit(df, "p")
-    _assert_files_sorted(vt.root, vt.snapshots()[-1]["parts"]["2"],
-                         col="key")
+    # a metadata-only entry records no property of its own
+    vt.delete_where([("k", "==", 5)], mode="merge_on_read")
+    assert "sort_order" not in vt.snapshots()[-1]
     vt.expire_snapshots(keep_last=1)
-    assert vt.sort_order() == ["key"]
-    vt.commit(_shuffled(spark, 3).withColumnRenamed("k", "key"), "p")
-    _assert_files_sorted(vt.root, vt.snapshots()[-1]["parts"]["3"],
-                         col="key")
+    # the recording entry is truncated; the compacted base carries it
+    snaps = vt.snapshots()
+    assert len(snaps) == 1 and snaps[0]["sort_order"] == ["k"]
+    assert vt.sort_order() == ["k"]
+    vt.commit(_shuffled(spark, 2), "p")
+    _assert_files_sorted(vt.root, vt.snapshots()[-1]["parts"]["2"])

@@ -121,9 +121,6 @@ def test_later_commits_inherit_new_spec_old_spec_raises(spark, tmp_path):
     # evolving to the identical spec is a pointless rewrite: raises
     with pytest.raises(ValueError, match="identical"):
         vt.evolve_partition_spec("url", ("bucket", 8))
-    # the schema-evolution guard protects the CURRENT partition column
-    with pytest.raises(ValueError, match="layout key"):
-        vt.drop_column("url")
 
 
 def test_unpartitioned_to_partitioned(spark, tmp_path):
