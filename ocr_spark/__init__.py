@@ -13,6 +13,14 @@ Layout:
   plans/      end-to-end pipeline assembly (extract job, lineage, resume)
   streaming/  structured-streaming analogs (sessionization, ingest)
   queries/    driver-facing operator queries + DuckDB oracle SQL
+
+Importing the package installs the stamp-checked zip directory cache
+(``zipcache.py``): a Python worker imports it when it unpickles any of
+the package's UDFs.
 """
+
+from ocr_spark import zipcache
+
+zipcache.install()
 
 __version__ = "0.1.0"

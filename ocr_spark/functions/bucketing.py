@@ -13,7 +13,7 @@ outliers vs 1.5x the average width and split into round(w/avg) pieces
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 256
@@ -35,16 +35,21 @@ def hot_hosts(pages: DataFrame, skew_factor: float = SKEW_FACTOR) -> DataFrame:
     """Hosts whose row count exceeds skew_factor x mean host count.
 
     One partial-aggregated groupBy over the url column only (column
-    pruning keeps the html blobs out of this shuffle entirely).
+    pruning keeps the html blobs out of this shuffle entirely). The mean
+    is a window over all host counts, so the url column is scanned once:
+    a separate ``counts.agg`` scans it a second time, since the join's
+    inferred ``host IS NOT NULL`` filter keeps the two scans from being
+    one reused exchange. The window's single partition holds one row
+    per distinct host, the set whose hot part is broadcast anyway (so
+    WindowExec's "No Partition Defined" warning is expected here).
     """
     counts = (
         pages.select(host_of(F.col("url")).alias("host"))
         .groupBy("host").agg(F.count(F.lit(1)).alias("cnt"))
     )
-    stats = counts.agg(F.avg("cnt").alias("mean_cnt"))
     return (
-        counts.crossJoin(F.broadcast(stats))
-        .where(F.col("cnt") > F.col("mean_cnt") * F.lit(skew_factor))
+        counts.withColumn("_mean_cnt", F.avg("cnt").over(Window.partitionBy()))
+        .where(F.col("cnt") > F.col("_mean_cnt") * F.lit(skew_factor))
         .select("host", "cnt")
     )
 

@@ -346,6 +346,7 @@ def sync_keyed(spark: SparkSession, src_root: str, dst_root: str,
                          .drop(CHANGE_COL)
             touched = (changes.select(F.col(key_col))
                        .distinct().persist())
+            # side counts: the returned keys_deleted/keys_inserted stats
             n_del = (changes.where(F.col(CHANGE_COL) == "delete")
                      .select(key_col).distinct().count())
             n_ins = ins.select(key_col).distinct().count()

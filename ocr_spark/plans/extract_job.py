@@ -6,7 +6,8 @@ splits — scan -> ArrowEvalPython -> project -> exchange(bucket, salt) ->
 write. The html blobs NEVER cross a shuffle: the single exchange sits
 after extraction and carries only url + extracted text + small stats
 (typically 5-10x smaller), clustering output for the partitioned write.
-Lineage/metrics aggregate the tiny per-row stats columns.
+Lineage and metrics come from one aggregate of the tiny per-row stats
+columns, collected on the driver (``sidecars_of``).
 
 Vectorization discipline (BASELINE.json:6): the UDF is an Arrow-batched
 scalar pandas UDF — one Python call per ~64-row record batch (the
@@ -20,7 +21,7 @@ manifest. A restarted job anti-joins pending = all buckets \\ done and
 reproduces byte-identical output (tests/test_resume.py).
 
 By default all pending buckets run as ONE group (one scan, one results
-write, one lineage and one metrics append): on a flat table every group
+write, one sidecar aggregate): on a flat table every group
 would re-read the whole table, since the computed bucket cannot prune.
 A pages path that cannot be listed (an object-store URI) keeps
 ``UNLISTED_GROUPS`` groups, because its layout is unknown; an explicit
@@ -132,21 +133,22 @@ def extract_pages(
     # pre-spreads it with one round-robin exchange (sized without
     # running it); at corpus scale it is a no-op and the plan stays
     # narrow.
+    #
+    # Each DataFrame step is analysed on the driver as it is built, so
+    # the plan is spelled in as few steps as it needs.
     flagged = (
         spread_small_scan(pages)
         .withColumn("_host", host_of(F.col("url")))
-        .join(F.broadcast(hot.withColumn("_is_hot", F.lit(True))
-                          .withColumnRenamed("host", "_host")
-                          .drop("cnt")),
+        .join(F.broadcast(hot.select(F.col("host").alias("_host"),
+                                     F.lit(True).alias("_is_hot"))),
               on="_host", how="left")
-        .withColumn("_is_hot", F.coalesce(F.col("_is_hot"), F.lit(False)))
     )
     bucket, salt = salted_partition_key(
-        F.col("url"), F.col("_is_hot"), n_buckets, salt_n)
-    res = (flagged
-           .withColumn("bucket", bucket)
-           .withColumn("salt", salt)
-           .withColumn("_r", extract_udf(F.col("html"), F.col("lang"))))
+        F.col("url"), F.coalesce(F.col("_is_hot"), F.lit(False)),
+        n_buckets, salt_n)
+    res = flagged.select(
+        "*", bucket.alias("bucket"), salt.alias("salt"),
+        extract_udf(F.col("html"), F.col("lang")).alias("_r"))
     return res.select(
         "url", "warc_ts", "lang",
         F.col("_r.extracted_text").alias("extracted_text"),
@@ -163,40 +165,98 @@ def extract_pages(
     ).repartition("bucket", "salt")
 
 
-def lineage_of(results: DataFrame, attempt: int, snapshot_id: str) -> DataFrame:
-    """Per-(bucket, salt) lineage rows (FIXTURES.md §3)."""
-    return results.groupBy("bucket", "salt").agg(
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum(F.when(F.length("extracted_text") > 0, 1).otherwise(0))
-        .alias("output_rows"),
-        F.sum("input_bytes").alias("input_bytes"),
-        (F.sum("extract_us") / F.lit(1000.0)).alias("wall_ms"),
-    ).withColumn("attempt", F.lit(attempt)) \
-     .withColumn("snapshot_id", F.lit(snapshot_id))
+# The lineage (FIXTURES.md §3) and metrics tables, one row per (bucket,
+# salt) and per bucket.
+LINEAGE_TYPE = StructType([
+    StructField("bucket", IntegerType()),
+    StructField("salt", IntegerType()),
+    StructField("input_rows", LongType()),
+    StructField("output_rows", LongType()),
+    StructField("input_bytes", LongType()),
+    StructField("wall_ms", DoubleType()),
+    StructField("attempt", IntegerType()),
+    StructField("snapshot_id", StringType()),
+])
+
+METRICS_TYPE = StructType([
+    StructField("bucket", IntegerType()),
+    StructField("docs", LongType()),
+    StructField("empty_docs", LongType()),
+    StructField("pdf_docs", LongType()),
+    StructField("avg_text_len", DoubleType()),
+    StructField("avg_link_density", DoubleType()),
+    StructField("tokenizer_recoveries", LongType()),
+    StructField("attempt", IntegerType()),
+    StructField("snapshot_id", StringType()),
+])
+
+_PANDAS_DTYPE = {IntegerType: "Int32", LongType: "Int64",
+                 DoubleType: "float64", StringType: object}
 
 
-def metrics_of(results: DataFrame, attempt: int,
-               snapshot_id: str) -> DataFrame:
-    """Per-bucket extraction metrics (analog of the reference's per-doc
-    verify counts, /root/reference/overflow/
-    segment_according_to_sentence.py:216-224).
+def _total(vals):
+    """SQL SUM over partial sums: None only when every one is None."""
+    vals = [v for v in vals if v is not None]
+    return sum(vals) if vals else None
 
-    attempt/snapshot_id mirror lineage_of: the metrics table is
-    append-only, and a crash BETWEEN the metrics append and the manifest
-    mark_done double-appends that group's rows on resume — the attempt
-    column makes the duplicates distinguishable so latest_metrics can
-    dedupe to exactly-once semantics at read time."""
-    return results.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0))
-        .alias("empty_docs"),
+
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: StructType) -> DataFrame:
+    """A one-partition frame of driver-side ``rows``, shipped through
+    Arrow (a list of tuples would go through a Python RDD job)."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    pdf = pd.DataFrame({
+        f.name: pd.array(list(c), dtype=_PANDAS_DTYPE[type(f.dataType)])
+        for f, c in zip(schema.fields, cols)})
+    return spark.createDataFrame(pdf, schema).coalesce(1)
+
+
+def sidecars_of(results: DataFrame, attempt: int,
+                snapshot_id: str) -> tuple[DataFrame, DataFrame]:
+    """``(lineage, metrics)`` of one group's results from ONE (bucket,
+    salt) aggregate, collected on the driver: it has at most
+    ``n_buckets * salt_n`` rows, bounded by the layout, not the data.
+    Lineage is those rows; metrics (the analog of the reference
+    pipeline's per-doc verify counts) folds them per bucket.
+
+    Both tables are append-only and tagged with ``attempt`` and
+    ``snapshot_id``: a crash BETWEEN the appends and the manifest
+    mark_done double-appends the group's rows on resume, and the
+    attempt column lets ``latest_metrics`` dedupe to exactly-once at
+    read time."""
+    text_len = F.length("extracted_text")
+    cells = sorted(results.groupBy("bucket", "salt").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(text_len > 0, 1).otherwise(0)).alias("out"),
+        F.sum(F.when(text_len == 0, 1).otherwise(0)).alias("empty"),
         F.sum(F.when(F.col("content_kind") == "pdf", 1).otherwise(0))
-        .alias("pdf_docs"),
-        F.avg(F.length("extracted_text")).alias("avg_text_len"),
-        F.avg("link_density").alias("avg_link_density"),
-        F.sum("recoveries").alias("tokenizer_recoveries"),
-    ).withColumn("attempt", F.lit(attempt)) \
-     .withColumn("snapshot_id", F.lit(snapshot_id))
+        .alias("pdf"),
+        F.sum("input_bytes").alias("in_bytes"),
+        (F.sum("extract_us") / F.lit(1000.0)).alias("wall_ms"),
+        F.sum(text_len).alias("len_sum"),
+        F.count(text_len).alias("len_n"),
+        F.sum("link_density").alias("ld_sum"),
+        F.count("link_density").alias("ld_n"),
+        F.sum("recoveries").alias("rec"),
+    ).collect())
+    lineage = [(c.bucket, c.salt, c.n, c.out, c.in_bytes, c.wall_ms,
+                attempt, snapshot_id) for c in cells]
+    by_bucket: dict[int, list] = {}
+    for c in cells:
+        by_bucket.setdefault(c.bucket, []).append(c)
+    metrics = []
+    for b, cs in by_bucket.items():
+        t = {k: _total([c[k] for c in cs])
+             for k in ("n", "empty", "pdf", "len_sum", "len_n", "ld_sum",
+                       "ld_n", "rec")}
+        metrics.append((
+            b, t["n"], t["empty"], t["pdf"],
+            t["len_sum"] / t["len_n"] if t["len_n"] else None,
+            t["ld_sum"] / t["ld_n"] if t["ld_n"] else None,
+            t["rec"], attempt, snapshot_id))
+    spark = results.sparkSession
+    return (_local_frame(spark, lineage, LINEAGE_TYPE),
+            _local_frame(spark, metrics, METRICS_TYPE))
 
 
 def latest_metrics(metrics: DataFrame) -> DataFrame:
@@ -388,6 +448,7 @@ def run_extract_job(
             # on any mismatch fall back to the (correct, slower) flat scan.
             rb, _ = salted_partition_key(
                 F.col("url"), F.lit(False), n_buckets, salt_n)
+            # side count: the scan plan (pruned or flat) depends on it
             mismatches = (pages.select(rb.alias("_rb"), "bucket")
                           .limit(1000)
                           .where(F.col("_rb") != F.col("bucket")).count())
@@ -400,9 +461,9 @@ def run_extract_job(
                     f"falling back to the flat scan.", stacklevel=2)
                 pages = pages.drop("bucket")
                 physical = None
-    # Skew stats once per run, over the url column only.
-    hot = hot_hosts(pages, SKEW_FACTOR).cache()
-    hot.count()
+    # Skew stats over the url column only, left uncached: their stages
+    # run inside each group's results write instead of a side action.
+    hot = hot_hosts(pages, SKEW_FACTOR)
 
     fp = core_fingerprint()
     done = manifest.done_buckets(core_version=fp if reextract_stale
@@ -423,6 +484,8 @@ def run_extract_job(
         if physical is not None:
             # partition prune: only the group's bucket=<k> dirs are read
             subset = pages.where(F.col("bucket").isin(group)).drop("bucket")
+        elif len(group) == n_buckets:
+            subset = pages  # every row's bucket is in the group
         else:
             bucket, _ = salted_partition_key(
                 F.col("url"), F.lit(False), n_buckets, salt_n)
@@ -436,8 +499,9 @@ def run_extract_job(
         else:
             io.overwrite_partitions(out_cols, "results", ["bucket"])
         attempt = max(manifest.attempt_of(b) for b in group)
-        io.append(lineage_of(results, attempt, snapshot_id), "lineage")
-        io.append(metrics_of(results, attempt, snapshot_id), "metrics")
+        lineage, metrics = sidecars_of(results, attempt, snapshot_id)
+        io.append(lineage, "lineage")
+        io.append(metrics, "metrics")
         results.unpersist()
         if (fail_after_groups is not None and gi >= fail_after_groups
                 and fail_point == "pre_mark"):
@@ -451,6 +515,5 @@ def run_extract_job(
                                    "core_version": fp})
         n_done += len(group)
 
-    hot.unpersist()
     return {"completed": True, "buckets_done": sorted(manifest.done_buckets()),
             "snapshot_id": snapshot_id, "groups_run": n_done}

@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.plans.extract_job import (URL_LAYOUT, extract_pages,
-                                        lineage_of, metrics_of)
+                                        sidecars_of)
 from ocr_spark.sources.io import (TableIO, VersionedTable, atomic_write_json,
                                   next_attempt)
 
@@ -527,6 +527,7 @@ def apply_neardup_gate(spark: SparkSession, out_dir: str,
         drop_ids = drop_ids.unionByName(
             ND.neardup_matches(survivors, index, "url", c["threshold"])
             .select("url")).distinct()
+    # side count: a drop with no near-dups skips both anti-joins
     n_dropped = drop_ids.count()
     if n_dropped == 0:
         return out_cols, rows, 0, rows
@@ -674,10 +675,9 @@ def ingest_drop(spark: SparkSession, out_dir: str, drop: str,
             uidx.update(drop_bks, drop)
         attempt = manifest.attempt_of(drop)
         io = TableIO(spark, out_dir)
-        io.append(lineage_of(results, attempt, f"{run_id}:{sid}"),
-                  "lineage")
-        io.append(metrics_of(results, attempt, f"{run_id}:{sid}"),
-                  "metrics")
+        lineage, metrics = sidecars_of(results, attempt, f"{run_id}:{sid}")
+        io.append(lineage, "lineage")
+        io.append(metrics, "metrics")
         # fingerprints of EVERY page the drop carried (not only the
         # extracted survivors): all of it is now "seen" for later
         # drops. Plain per-drop overwrite: idempotent under replay.

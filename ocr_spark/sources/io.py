@@ -2041,8 +2041,8 @@ class VersionedTable:
         the predicate against the live schema (a bad column must fail
         HERE, not poison every later read), bound the affected
         partitions driver-side through the file-statistics plan, and
-        append one metadata-only manifest entry. The only Spark work
-        is the live read's schema inference for that validation."""
+        append one metadata-only manifest entry. No Spark work: the
+        live column names come from the data files' footers."""
         if not isinstance(condition, list):
             raise ValueError(
                 "merge_on_read deletes take the structured "
@@ -2061,7 +2061,8 @@ class VersionedTable:
         if not doc["snapshots"]:
             raise ValueError(
                 f"VersionedTable at {self.root} has no snapshots")
-        avail = set(self._read(doc).columns)
+        live, _ = self._resolve(None, None, snaps=doc["snapshots"])
+        avail = self._footer_columns(doc["snapshots"], live)
         missing = [c for c, _op, _v in where if c not in avail]
         if missing:
             raise ValueError(
@@ -2078,7 +2079,6 @@ class VersionedTable:
         plan = self.plan_files(where=where)
         if not plan["files"]:
             return None, stats
-        live, _ = self._resolve(None, None, snaps=doc["snapshots"])
         data = os.path.join(self.root, "data")
         rel_to_k = {rel: k for k, rel in live.items()}
         affected = set()
@@ -2103,6 +2103,25 @@ class VersionedTable:
         stats["partitions_affected"] = len(affected)
         stats["files_candidates"] = len(plan["files"])
         return sid, stats
+
+    def _footer_columns(self, snaps: list[dict], live: dict) -> set[str]:
+        """The column names a read of the ``live`` view shows, from one
+        parquet footer per live partition (a commit writes a partition
+        whole) plus the partition column. An empty view falls back to
+        the schema files its empty commits recorded, as :meth:`_read`
+        does."""
+        import pyarrow.parquet as pq
+
+        rels = (list(live.values())
+                or [s["schema_dir"] for s in snaps if s.get("schema_dir")])
+        names = {_spec_at(snaps)[0]} - {None}
+        for rel in rels:
+            d = os.path.join(self.root, "data", rel)
+            f = next((n for n in sorted(os.listdir(d))
+                      if n.endswith(".parquet")), None)
+            if f is not None:
+                names.update(pq.read_schema(os.path.join(d, f)).names)
+        return names
 
     def changed_partitions(self, from_snapshot: int,
                            to_snapshot: int | None = None) -> dict:

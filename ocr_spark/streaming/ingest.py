@@ -125,6 +125,8 @@ def run_streaming_ingest(
                 if wm is not None:
                     is_late = ts < F.lit(wm)
                     late_df = pages.where(is_late)
+                    # side count: reported as late_pages; 0 skips both
+                    # the quarantine write and the filter below
                     late_n = late_df.count()
                     if late_n and late_policy == "quarantine":
                         # idempotent overwrite per batch: a replayed

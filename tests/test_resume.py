@@ -4,6 +4,8 @@ shows each bucket processed effectively once."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +66,28 @@ def test_lineage_and_metrics_written(spark, corpus, tmp_path):
             "wall_ms", "attempt", "snapshot_id"} <= set(lineage.columns)
     assert {"bucket", "docs", "empty_docs", "pdf_docs", "avg_text_len",
             "avg_link_density", "tokenizer_recoveries"} <= set(metrics.columns)
+
+
+# Spark jobs a default one-group run submits on this fixture (local[4]).
+# The code that cached and counted the hot-host stats before extraction
+# (two scans, one for the counts and one for their mean) and built
+# lineage and metrics from two aggregates submitted 15; the test is
+# parametrized by that count, and a run must take fewer.
+EXTRACT_RUN_JOBS = 11
+
+
+@pytest.mark.parametrize("two_aggregate_jobs", [15])
+def test_jobs_per_extract_run_budget(spark, jobs_in_group, corpus, tmp_path,
+                                     two_aggregate_jobs):
+    """Extraction needs no side action before the results write, and
+    lineage and metrics come from one aggregate: a change that re-runs
+    a stage or adds a side action shows here as extra jobs."""
+    out = str(tmp_path / "jobs")
+    st = {}
+    n = jobs_in_group(f"extract-jobs-{os.getpid()}", lambda: st.update(
+        run_extract_job(spark, corpus, out, n_buckets=N_BUCKETS)))
+    assert st["completed"] and st["groups_run"] == N_BUCKETS
+    assert n < two_aggregate_jobs and n <= EXTRACT_RUN_JOBS, n
 
 
 def test_bucketed_input_prunes_scan(spark, corpus, tmp_path):

@@ -197,18 +197,10 @@ def test_legacy_split_layout_reads_and_folds(spark, tmp_path):
             assert json.load(f) == obj
 
 
-class _LiveColumns:
-    """Stands in for the live read in a worker without a Spark
-    session: the merge-on-read delete only asks it for the column
-    names its predicate is validated against."""
-    columns = ["p", "k"]
-
-
 def _race_worker(args):
     root, wid, m = args
     os.environ["OCR_SPARK_NO_LOCK"] = "1"
     vt = VersionedTable(None, root)
-    vt._read = lambda doc, *a, **kw: _LiveColumns()
     for i in range(m):
         vt.create_tag(f"t{wid}_{i}")
         # a metadata-only snapshot append (merge-on-read delete)

@@ -228,3 +228,25 @@ def test_mor_rewrite_files_bakes_in_pending_deletes(spark, tmp_path):
     # delete, so apply_deletes finds nothing left
     sid2, stats2 = vt.apply_deletes()
     assert sid2 is None
+
+
+def test_mor_validates_against_footer_columns(spark, jobs_in_group,
+                                              tmp_path):
+    """The predicate's columns are checked against the live files'
+    footers: the same names a read shows, after an additive-column
+    commit too, with no Spark job."""
+    vt = VersionedTable(spark, str(tmp_path / "t"))
+    vt.commit(_mk(spark, [("u1", "a", 1)]), "drop_id")
+    vt.commit(_mk(spark, [("u2", "b", 2)]).withColumn("lang", F.lit("en")),
+              "drop_id")
+    _, doc = vt._load()
+    live, _ = vt._resolve(None, None, snaps=doc["snapshots"])
+    assert vt._footer_columns(doc["snapshots"], live) \
+        == set(vt.read().columns)
+    with pytest.raises(ValueError, match="unknown columns"):
+        vt.delete_where([("nope", "==", 1)], mode="merge_on_read")
+    got = []
+    n = jobs_in_group(f"mor-delete-{os.getpid()}", lambda: got.append(
+        vt.delete_where([("lang", "==", "en")], mode="merge_on_read")))
+    assert n == 0 and got[0][0] is not None
+    assert _rows(vt.read(), "url") == [("u1",)]
